@@ -225,7 +225,7 @@ def train_logistic_regression(
                 # unit step passes the same backtracking as IRLS. The up-to-10
                 # Hv jobs each scan `scored`, so it stays cached until the
                 # delta is in hand (unpersisting earlier recomputed the
-                # projection once per Hv product — ADVICE r9).
+                # projection once per Hv product).
                 delta, n_cg = _pcg_newton_step(scored, g, hdiag, l2, n, dim)
                 cg_hist.append(n_cg)
         finally:

@@ -76,7 +76,7 @@ def _min_d2(vec: Column, centers: tuple[tuple[float, ...], ...]) -> Column:
 # transform over the joined matrix) and — the bigger effect — IDENTICAL
 # across iterations, so whole-stage codegen compiles once and caches,
 # where the literal tree recompiles every iteration because the literal
-# values change. Measured at 100k x dim-64 vectors, 3 iters (r10):
+# values change. Measured at 100k x dim-64 vectors, 3 iters:
 # k=8 literal 12.2s / broadcast 7.7s; k=32 15.3 / 8.5; k=64 53.0 / 17.1;
 # k=256 broadcast 47.8s (literal not attempted — 16k-literal tree).
 # The cap keeps the tiny-model regime (registered k=8 x dim=64 fixture,
@@ -204,8 +204,8 @@ def kmeans_lloyd(
             fdf = tiny_local_df(
                 spark, [([list(c) for c in final],)], "_cmat: array<array<double>>"
             )
-            # materialize the distance array once (the r9 duplicated-fold
-            # compile lesson applies to the matrix form too)
+            # materialize the distance array once: a fold referenced twice
+            # in one projection is compiled (and evaluated) twice
             assignments = (
                 base.join(F.broadcast(fdf))
                 .select(

@@ -140,7 +140,7 @@ def repetition_metrics(
     words = F.split(F.col(text_col), " ")
     grams = _ngrams_all(words, n)
     n_words = F.size(words)
-    # exact integer-micro fractions (r14 no-bar tie sweep): count/count
+    # exact integer-micro fractions: count/count
     # quotients ship as truncating BIGINT division — no rounding mode
     return (
         docs.filter(F.size(F.split(F.col(text_col), " ")) >= n)

@@ -331,8 +331,8 @@ def minhash_lsh_dedup(
     comp = connected_components(pairs)
     # connected_components materialized its labels (eager localCheckpoint),
     # so the hashed-shingle cache is no longer reachable from `comp` — drop
-    # it instead of letting caches accumulate across the session (the
-    # broadcast-OOM cliff noted in round 1).
+    # it instead of letting caches accumulate across the session (they
+    # crowd out broadcast memory).
     for cached in caches:
         cached.unpersist()
     dropped = comp.filter(F.col("id") != F.col("component")).select(F.col("id").alias(id_col))
@@ -595,7 +595,7 @@ def connected_components(
       O(graph diameter) rounds (near-dup graphs are shallow: big components
       are star/clique-like). Each round is one join + one aggregate,
       shuffle-keyed by vertex; ``localCheckpoint`` truncates the growing
-      lineage so round N doesn't replan rounds 1..N-1. Raises if
+      lineage so iteration N doesn't replan the earlier iterations. Raises if
       ``max_iter`` rounds don't converge (diameter > max_iter signals a
       pathological graph).
 
@@ -618,7 +618,7 @@ def connected_components(
                 routed.unpersist()
     pairs = routed
     # one edge shuffle for the whole fixpoint (same discipline as
-    # operators/graph.py::pagerank, found by the r8 pagerank probe): the
+    # operators/graph.py::pagerank): the
     # per-round join is on dst, so the cached edge set is hash-partitioned
     # and sorted on dst with exactly the shuffle partition count — every
     # round re-shuffles only the O(V) label pairs, never the O(E) edges
@@ -826,7 +826,7 @@ def ngram_containment_pairs(
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    # exact integer-micro containment (r14 no-bar tie sweep): for integer
+    # exact integer-micro containment: for integer
     # k, trunc(p*1e6/q) >= k <=> p*1e6 >= k*q, so the micro threshold is
     # EXACTLY the rational threshold — no float compare at the boundary
     thresh_micro = int(round(threshold * 1_000_000))
@@ -865,7 +865,7 @@ def ngram_jaccard_pairs_prefix(
     then verified with the exact intersection, so the filter is lossless —
     the oracle for the unfiltered operator checks this one too.
 
-    Extra cost vs the plain plan (r5 rewrite, VERDICT r4 item 3): ONE extra
+    Extra cost vs the plain plan: ONE extra
     id-keyed shuffle. The single shingle-keyed aggregation that the plain
     plan already pays (posting lists) is reused for BOTH the df-count and
     the rarest-first ordering — the old plan computed a separate df
@@ -1003,7 +1003,7 @@ def ngram_jaccard_pairs_auto(
     """Statistics-routed Jaccard join: same RESULT as both underlying plans
     (the prefix filter is lossless at equal threshold), plan chosen from
     measured shingle-df concentration instead of by hand (SCALE.md
-    'prefix-Jaccard crossover', VERDICT r7 item 8).
+    'prefix-Jaccard crossover').
 
     Routing rule, from the measured crossover: the prefix filter's ~2 extra
     shuffles pay off exactly when hot shingles drive a quadratic pair

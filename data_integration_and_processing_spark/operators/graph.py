@@ -43,8 +43,7 @@ def pagerank(
     Pregel shape; iteration count is fixed (deterministic), not
     convergence-tested, so two runs are bit-identical.
 
-    Superstep caching + edge co-partitioning (found by the r8 10x-edges
-    bench probe): each round consumes the previous ``ranks`` TWICE
+    Superstep caching + edge co-partitioning: each round consumes the previous ``ranks`` TWICE
     (dangling aggregate + contribution join), so without a per-round
     persist the lineage between checkpoints re-evaluates ~2^k chains — and
     ``e``, consumed every round, re-ran the caller's whole edge
@@ -75,7 +74,7 @@ def pagerank(
         n_part, F.col("src")
     )
     if dedup_edges:
-        # fold the caller's edge dedup into the one src exchange (r16, the
+        # fold the caller's edge dedup into the one src exchange (the
         # label_propagation/kcore_peel argument: hashpartitioning(src)
         # colocates every copy of an (src, dst) row)
         e = e.dropDuplicates(["src", "dst"])
@@ -210,7 +209,7 @@ def triangle_stats(
             "n_edges",
             "n_wedges",
             "n_triangles",
-            # exact integer-micro (r14 no-bar tie sweep): 3T/W is a
+            # exact integer-micro: 3T/W is a
             # rational that can land exactly on a round-half tie —
             # truncating BIGINT div has no rounding mode to disagree on
             F.expr(
@@ -378,13 +377,13 @@ def label_propagation(
     superstep caching as :func:`pagerank`.
 
     ``dedup_edges=True`` folds the caller's edge-dedup into the one edge
-    shuffle (r16, guide §2.4): ``hashpartitioning(src)`` colocates every
+    shuffle: ``hashpartitioning(src)`` colocates every
     copy of an (src, dst) row, so the dedup aggregate runs post-shuffle on
     the SAME exchange the superstep join needs — callers that previously
     paid a ``distinct()`` exchange on the pair key plus this repartition
     drop to one exchange for the whole edge build.
 
-    Skewed-dst guard (r16, guide §2.5 + ADVICE r15): the one-exchange
+    Skewed-dst guard: the one-exchange
     superstep ships (dst, label) rows unreduced, so a hot dst (power-law
     in-degree) would land its whole neighborhood on one reducer. The edge
     cache's materialization pass now also measures max in-degree (== max
@@ -433,7 +432,7 @@ def label_propagation(
         "id", F.col("id").alias("label")
     )
     for i in range(n_iter):
-        # ONE exchange per superstep (r15, guide §2.4): hash the joined
+        # ONE exchange per superstep: hash the joined
         # (dst, label) rows on dst BEFORE counting — hashpartitioning(dst)
         # satisfies BOTH the (dst, label) count and the dst argmax, so the
         # two aggregations run back-to-back in one post-shuffle stage
@@ -445,7 +444,7 @@ def label_propagation(
         # unchanged, so labels are identical.
         joined = e.join(labels, e.src == labels.id)
         if hot_dst:
-            # salted two-phase (guide §2.5): phase 1 counts per
+            # salted two-phase: phase 1 counts per
             # (dst, salt, label) with map-side combine — the salt (derived
             # from the neighbor id, deterministic) spreads a hot dst over
             # n_part reducers — and phase 2 sums the bounded partials on
@@ -468,7 +467,7 @@ def label_propagation(
             )
         # argmax by (count desc, label asc): max over (c, -label) — labels
         # are vertex ids >= 0, so negation is a safe total-order flip.
-        # No per-round persist (r16, guide §5): unlike pagerank's ranks
+        # No per-round persist: unlike pagerank's ranks
         # (consumed twice per round), each superstep's labels feed exactly
         # ONE consumer — the next round's join — so between checkpoints the
         # chain is a linear plan at most checkpoint_every supersteps deep
@@ -500,7 +499,7 @@ def kcore_peel(
     ``n_iter`` rounds of deleting every vertex whose current degree is
     below ``k``.
 
-    INPUT CONTRACT (ADVICE r10): degree is counted as ``count(src rows)``,
+    INPUT CONTRACT: degree is counted as ``count(src rows)``,
     so the edge list must be SYMMETRIZED (every undirected edge present in
     both directions) and DEDUPLICATED — an unsymmetrized or multi-edge
     input yields wrong cores silently. Callers that already maintain that
@@ -547,14 +546,15 @@ def kcore_peel(
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e0 = directed.repartition(n_part, F.col("src"))
     if dedup_edges:
-        # fold the caller's edge dedup into the one src exchange (r16, guide
-        # §2.4): hashpartitioning(src) colocates every copy of an (src, dst)
+        # fold the caller's edge dedup into the one src exchange:
+        # hashpartitioning(src) colocates every copy of an (src, dst)
         # row, so the dedup aggregate needs no exchange of its own —
         # replaces a caller-side distinct() on the pair key
         e0 = e0.dropDuplicates(["src", "dst"])
     e0 = e0.persist()
-    # materialize before round-1 planning (see label_propagation: an
-    # unmaterialized cache reports UnknownPartitioning, so round 1 would
+    # materialize before the first superstep is planned (see
+    # label_propagation: an unmaterialized cache reports
+    # UnknownPartitioning, so the first superstep would
     # re-exchange e0 for its groupBy(src) instead of riding the repartition)
     e0.count()
 
@@ -576,8 +576,8 @@ def kcore_peel(
             # consumed by both semi-joins next round: materialize the O(V)
             # set and truncate lineage (constant plan depth across rounds;
             # each round's blocks are unreferenced and GC'd once the next
-            # checkpoint lands). r16 note: a lazy per-round persist (no
-            # driver barrier, one final action) was tried and measured
+            # checkpoint lands). A lazy per-round persist (no driver
+            # barrier, one final action) measured
             # WORSE in-session (eager 2.56 vs lazy 2.88 best-of-5) — the
             # chained unmaterialized broadcast builds cost more than the
             # barriers save — so the eager form stays.

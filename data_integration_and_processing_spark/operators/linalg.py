@@ -208,8 +208,7 @@ def frequent_directions(
     guaranteed spectral-error budget when even the d x d Gram partials
     are too wide to ship densely (d in the tens of thousands). Per
     partition an Arrow-batched task streams rows through a 2l-row buffer
-    (one SVD per l rows); the partials then fold two-level (VERDICT r10
-    item 4): when the input has more than ``tree_merge_threshold``
+    (one SVD per l rows); the partials then fold two-level: when the input has more than ``tree_merge_threshold``
     partitions, a shuffle stage groups ~sqrt(P) contiguous-pid partials
     per group and shrink-merges each group executor-side, so the driver
     only folds the ~sqrt(P) survivors — O(sqrt(P) * l * d) driver state

@@ -30,10 +30,9 @@ def fan_out_scan(df: DataFrame, min_factor: int = 1) -> DataFrame:
     per-row stages (shingling, signatures, regex packs); do NOT use above
     order-sensitive float aggregations — repartitioning reorders rows.
 
-    Probe cost (r16, VERDICT r15 item 4): the old ``df.rdd`` probe built a
-    fresh Python-conversion RDD (full physical planning + a pickle wrapper)
-    on EVERY call — a per-query driver cost at ~60 call sites. Now the
-    width check reads the JVM Dataset's own ``queryExecution().toRdd()``
+    Probe cost: a ``df.rdd`` probe would build a fresh Python-conversion RDD
+    (full physical planning + a pickle wrapper) on EVERY call — a per-query
+    driver cost at ~60 call sites. So the width check reads the JVM Dataset's own ``queryExecution().toRdd()``
     (a lazy val — cached per Dataset, no Python-serialization wrapper), and
     the narrow/wide DECISION is memoized per input frame (a bool, so no
     value->key cycle pins the weak key): the dominant pattern passes the
@@ -51,8 +50,8 @@ def fan_out_scan(df: DataFrame, min_factor: int = 1) -> DataFrame:
 
 
 def tiny_local_df(spark, rows: list, schema) -> DataFrame:
-    """One-PARTITION local frame for O(10)-row metadata/result planes (r16,
-    guide §1.2/§4): ``createDataFrame(python rows)`` parallelizes the data
+    """One-PARTITION local frame for O(10)-row metadata/result planes:
+    ``createDataFrame(python rows)`` parallelizes the data
     over ``defaultParallelism`` partitions, and EVERY evaluation of the
     frame pays one Python-worker round trip per partition — a
     ``coalesce(1)`` on top then folds all of them into ONE task that makes
@@ -74,7 +73,7 @@ def background_materialize(build) -> "Future[DataFrame]":
     CONSTRUCTION is itself driver-heavy, so that work too runs while the
     foreground arm's jobs occupy the cluster. py4j is thread-safe (each
     thread gets its own gateway connection); concurrent jobs schedule FIFO.
-    The worker is wrapped in ``inheritable_thread_target`` (ADVICE r15) so
+    The worker is wrapped in ``inheritable_thread_target`` so
     the caller's job group / job description / local properties propagate
     under pinned-thread mode — profiler attribution and job-group
     cancellation reach the background jobs."""
@@ -98,7 +97,7 @@ def background_checkpoint(df: DataFrame) -> "Future[DataFrame]":
     executor slots the foreground's driver-side stretches (model training,
     index loads, plan construction) leave idle. Call ``.result()`` before
     composing the checkpointed frame onward; exceptions re-raise there.
-    Wrapped in ``inheritable_thread_target`` (ADVICE r15) so job group /
+    Wrapped in ``inheritable_thread_target`` so job group /
     description / local properties follow the caller's thread."""
     from pyspark.util import inheritable_thread_target  # noqa: PLC0415
 

@@ -60,7 +60,7 @@ def brute_force_topk(
     """
     q = float_array_col(query_vec)
     sim = F.round(cosine(F.col(vec_col), q), round_digits)
-    # no fan_out_scan (r15): one cosine fold per row is light — the guard's
+    # no fan_out_scan: one cosine fold per row is light — the guard's
     # round-robin exchange measured +0.46s on the benched fixture while the
     # serial fold costs ~25ms; at production scale the scan is already wide
     # and the guard would be a no-op anyway. TakeOrdered keeps the shuffle
@@ -383,7 +383,7 @@ def embedding_neardup_pairs(
     if path is None:
         # size up the un-repartitioned plan: parquet-backed stats are exact
         path = "broadcast" if _estimated_bytes(raw) <= broadcast_max_bytes else "lsh"
-    # no fan_out_scan (r15): the broadcast candidate stage is one numpy
+    # no fan_out_scan: the broadcast candidate stage is one numpy
     # block-matmul per partition (~50ms serial at fixture scale) and the
     # guard's round-robin exchange + 32-way Arrow worker round-trips
     # measured +0.64s net on the benched fixture; at production scale the
@@ -728,7 +728,7 @@ def _train_centroids(
     def one(run_seed: int) -> tuple[float, np.ndarray]:
         rs = np.random.RandomState(run_seed)
         centers = [sample[rs.randint(n)]]
-        # incremental kmeans++ (r15, guide §1.2 per-task work): keep the
+        # incremental kmeans++: keep the
         # running elementwise min-distance and fold in ONLY the newest
         # center each step — elementwise min is associative and exact, so
         # this is bit-identical to re-minimizing over every center (the
@@ -742,8 +742,8 @@ def _train_centroids(
             d2 = np.minimum(d2, ((sample - centers[-1]) ** 2).sum(axis=1))
         cb = np.array(centers, dtype=np.float64)
 
-        # distances per center instead of one (n, k, dim) broadcast temp
-        # (r15, guide §1.2 driver work): summing axis=1 of the contiguous
+        # distances per center instead of one (n, k, dim) broadcast temp:
+        # summing axis=1 of the contiguous
         # (n, dim) slice is the same pairwise reduction over the same
         # values as axis=2 of the 3-d temp, so assignments (and therefore
         # centers) are bit-identical — at ~half the memory traffic
@@ -782,12 +782,12 @@ def train_ivf_centers(
     multi-probe sweep (e.g. the recall audit's nprobe curve) trains ONCE
     and shares the centers across calls — the build-once, probe-many
     production pattern."""
-    # r15 (guide §6 "Arrow for driver transfers"): fetch the sample as ONE
+    # fetch the sample as ONE
     # Arrow table instead of pickled Rows — the row path measured 0.18-0.7s
     # of pure driver deserialization for the same bytes; Arrow float32 ->
     # numpy float64 widening is exact, and the plan (and therefore the row
     # order the trainer sees) is unchanged.
-    # No fan_out_scan here (r15): the per-row work is one xxhash64 + a
+    # No fan_out_scan here: the per-row work is one xxhash64 + a
     # sort key — featherweight — and the orderBy(_b, _sid) total order makes
     # the sample independent of input partitioning, so the guard's only
     # bench-scale effect was an extra exchange stage ahead of the
@@ -804,8 +804,8 @@ def train_ivf_centers(
     vec_chunks = sample_tbl.column("_svec").combine_chunks()
     flat = vec_chunks.flatten().to_numpy(zero_copy_only=False)
     n_rows = len(vec_chunks)
-    # Explicit rectangularity guard (ADVICE r15): the old divisibility check
-    # (len(flat) % n_rows == 0) missed ragged lengths whose total happens to
+    # Explicit rectangularity guard: a divisibility check
+    # (len(flat) % n_rows == 0) misses ragged lengths whose total happens to
     # divide n_rows, and ListArray.flatten() silently DROPS null entries —
     # which can keep the total divisible while misaligning every subsequent
     # row. Reshape only when there are no null rows and every list has one
@@ -886,7 +886,7 @@ def ann_join_ivf(
         corpus, n_cells, vec_col, id_col, seed
     )
 
-    # r15 (guide §1.2 driver/plan cost): the centroid table and the
+    # the centroid table and the
     # assignment expression are built as ONE parsed SQL string each —
     # createDataFrame of the 8-row centroid table alone cost 0.35s of
     # py4j/conversion, and the old per-center Column build produced a
@@ -1035,7 +1035,7 @@ def mips_topk(
         lambda acc, v: acc + v,
     )
     # Rank both paths by the UNROUNDED score with the id tiebreak and round
-    # only the displayed value (ADVICE r10): rounding dot and dot/(M|q|) at
+    # only the displayed value: rounding dot and dot/(M|q|) at
     # the same digit count quantizes at two different scales, which can
     # create/break ties differently at the k boundary; IEEE division by a
     # positive constant is monotone, so the unrounded orderings agree
@@ -1429,7 +1429,7 @@ def ivfpq_probe_batch_arms(
     round_digits: int = 6,
 ) -> dict[int, DataFrame]:
     """Several refine depths of ONE probe batch from a SINGLE shared ADC
-    shortlist (r15, guide §2.4): a shallower arm's candidate set is exactly
+    shortlist: a shallower arm's candidate set is exactly
     the ``_r <= k*refine`` prefix of the deepest arm's ADC ranking (same
     LUTs, same (_adc, id) tiebreak), so running the scan -> broadcast-LUT
     join -> ADC window once and slicing it per arm returns results
@@ -1439,7 +1439,7 @@ def ivfpq_probe_batch_arms(
     leaving it lazy re-runs the whole scan -> join -> ADC pipeline per arm,
     because the per-arm rank filters push DIFFERENT WindowGroupLimit bounds
     (k*refine) into each union branch and the no-longer-identical subtrees
-    defeat exchange reuse (observed in the r15 plan capture)."""
+    defeat exchange reuse."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     deepest = k * max(refines)
@@ -1478,7 +1478,7 @@ def _adc_shortlist(
     the rescorer."""
     if not queries:
         # guard here so BOTH callers fail explicitly instead of dying
-        # inside createDataFrame on an empty lut_rows list (ADVICE r14)
+        # inside createDataFrame on an empty lut_rows list
         raise ValueError("empty query batch")
     from pyspark.sql.window import Window  # noqa: PLC0415
 

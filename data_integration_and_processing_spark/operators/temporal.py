@@ -91,7 +91,7 @@ def time_weighted_avg(
             *group_cols,
             "n_obs",
             "span_us",
-            # exact integer-micro (r14 no-bar tie sweep): wsum*1e6 is an
+            # exact integer-micro: wsum*1e6 is an
             # integer (6-decimal DECIMAL x integer microseconds), so the
             # average ships as one truncating DECIMAL(38) quotient
             F.expr(
@@ -270,7 +270,7 @@ def event_deltas(
             F.col(tiebreak_col),
             (F.col("_us") - F.col("_prev_us")).alias("gap_us"),
             F.round(F.col("_v") - F.col("_prev_v"), 6).alias("delta_value"),
-            # exact integer-micro rate (r14 no-bar tie sweep): the e4-grid
+            # exact integer-micro rate: the e4-grid
             # value delta times 1e8 over integer microseconds, truncating
             F.expr(
                 "((CAST(round(_v * 10000, 0) AS BIGINT)"

@@ -166,7 +166,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "week_offset",
             "active_users",
             "cohort_size",
-            # exact integer-micro retention (r14 no-bar tie sweep): a
+            # exact integer-micro retention: a
             # count/count quotient can land exactly on a round-half tie
             # whenever the reduced denominator is 2^7*5^j — truncating
             # integer division has no rounding mode to disagree on
@@ -182,8 +182,8 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HLL sketch binaries are engine-specific (Spark uses the Apache
     # DataSketches HllSketch format), so the driver-checked output is the
     # EXACT side plus the 5% accuracy bound as a boolean — a sketch
-    # regression flips within_5pct and fails the value hash (VERDICT r5
-    # item 6); merge-consistency stays pinned in tests/test_analytics.py.
+    # regression flips within_5pct and fails the value hash;
+    # merge-consistency stays pinned in tests/test_analytics.py.
     oracle="""
         SELECT event_type,
                CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct_users,
@@ -218,7 +218,7 @@ def agg_hll_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = e.groupBy("event_type").agg(F.count_distinct("user_id").alias("exact_distinct_users"))
     # ANSI-safe: a group whose user_id is entirely NULL would have exact=0
-    # and divide-by-zero under the session's ANSI default (ADVICE r6); the
+    # and divide-by-zero under the session's ANSI default; the
     # fallback demands the sketch also saw nothing.
     rel_err = F.abs(F.col("raw_est") - F.col("exact_distinct_users")) / F.col(
         "exact_distinct_users"
@@ -317,13 +317,12 @@ def agg_exact_stats_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # den in DECIMAL(38,0): x is epoch-day (~2e4), so n*sxx ≈ n²·4e8 wraps
     # int64 once a group passes ~1.5e5 rows; DuckDB computes the same term
     # in HUGEINT, so a LONG wrap here is a silent value divergence at
-    # larger scale factors (ADVICE r14)
+    # larger scale factors
     den = F.expr(
         "CAST(CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"
         " AS DOUBLE)"
     )
-    # slope AND intercept as EXACT integer-micro (r12 rfm tie class, r14
-    # no-bar sweep): the OLS quotient of DECIMAL-exact sufficient stats is
+    # slope AND intercept as EXACT integer-micro: the OLS quotient of DECIMAL-exact sufficient stats is
     # a rational that can land exactly on a round-half tie — truncating
     # integral div on the nano-scaled numerator has no rounding mode
     sl = sums.withColumn(
@@ -404,7 +403,7 @@ def agg_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bin edges emitted as EXACT integer-micro: with cents-grid bounds the
     # edge lo + b*(hi-lo)/BINS equals (BINS*lo_c + b*range_c) * (1e6/(100*BINS))
     # — pure integer arithmetic (1e6/(100*20) = 500), no rounding mode or
-    # division to diverge between engines (the r12 rfm tie class)
+    # division to diverge between engines
     lo_c = F.round(F.col("lo") * 100, 0).cast("long")
     hi_c = F.round(F.col("hi") * 100, 0).cast("long")
     rng_c = hi_c - lo_c
@@ -553,7 +552,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "from_type",
             "to_type",
             "n_transitions",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr("(n_transitions * CAST(1000000 AS BIGINT)) div n_from").alias(
                 "prob_micro"
             ),
@@ -724,7 +723,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bipartite co-purchase edges: customer -> part, namespaced into one id
     # space (customers even, parts odd), symmetrized so no vertex dangles.
-    # No distinct() (r16): the pair dedup rides the operator's one src-keyed
+    # No distinct(): the pair dedup rides the operator's one src-keyed
     # exchange (dedup_edges=True) — see graph_label_propagation
     pairs = orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey).select(
         (F.col("o_custkey") * 2).alias("cust_v"),
@@ -1209,7 +1208,7 @@ def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_view",
             "n_click",
             "n_purchase",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr("(n_purchase * CAST(1000000 AS BIGINT)) div n_view").alias(
                 "conversion_micro"
             ),
@@ -1258,7 +1257,7 @@ ORDER BY p.event_type, dow
 def temporal_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     base = e.select("event_type", F.dayofweek("ts").alias("dow"), "value")
-    # exact integer-micro quotients (r14 no-bar tie sweep): the e4-snapped
+    # exact integer-micro quotients: the e4-snapped
     # value sum and the 7x count ratio are BIGINT-exact on both engines, so
     # truncating div has no rounding mode to disagree on
     per_dow = base.groupBy("event_type", "dow").agg(
@@ -1339,7 +1338,7 @@ def events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(Window.partitionBy()).alias("total_users"),
     )
     users_80 = F.min(F.when(F.col("cum_n") >= 0.8 * F.col("total_n"), F.col("rnk")))
-    # exact integer-micro shares (r14 no-bar tie sweep): total_n/total_users
+    # exact integer-micro shares: total_n/total_users
     # are constant across rows, so max over per-row truncating quotients ==
     # the truncating quotient of the max — monotone, no rounding mode
     top20_share_micro = F.max(
@@ -1418,7 +1417,7 @@ def events_error_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_hll_intersection",
     # HLL sketch binaries are engine-specific; the driver-checked output is
     # the EXACT overlap plus the inclusion-exclusion estimate's 10% bound as
-    # a boolean (VERDICT r5 item 6) — a sketch regression flips within_10pct
+    # a boolean — a sketch regression flips within_10pct
     # and fails the value hash.
     oracle="""
         WITH p(pair, a, b) AS (
@@ -1476,7 +1475,7 @@ def agg_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row = est.join(exact, "pair")
         out = row if out is None else out.unionByName(row)
-    # Zero-overlap guard (ADVICE r6): with ANSI mode on (session default) a
+    # Zero-overlap guard: with ANSI mode on (session default) a
     # zero exact_overlap would fail the whole query with a divide-by-zero;
     # fall back to an absolute bound — the HLL estimate of a truly empty
     # intersection must stay within 10% of the two audiences' sketch mass.
@@ -1525,7 +1524,7 @@ def temporal_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         prev.alias("prev_n"),
     ).withColumn(
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         "wow_change_micro",
         F.expr("(n * CAST(1000000 AS BIGINT)) div prev_n - 1000000"),
     ).orderBy("event_type", "week")
@@ -1653,7 +1652,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
-            # exact integer-micro means over e4-snapped sums (r14 sweep)
+            # exact integer-micro means over e4-snapped sums
             F.expr(
                 "(CAST(round(sum(CASE WHEN value < lo THEN lo"
                 " WHEN value > hi THEN hi ELSE value END) * 10000, 0) AS BIGINT)"
@@ -1720,7 +1719,7 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d").cast("string").alias("day"),
             "dau",
             "wau",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr("(dau * CAST(1000000 AS BIGINT)) div wau").alias("stickiness_micro"),
         )
         .orderBy("day")
@@ -1822,8 +1821,8 @@ def events_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFram
         "over user-cardinality rows; everything stays in integer "
         "microseconds — min/max are BIGINT and the interpolated percentiles "
         "run over DOUBLE-cast integers UNROUNDED (round(.,6) of a seconds "
-        "quotient ties exactly on half-microsecond midpoints — the r12 rfm "
-        "class)"
+        "quotient ties exactly on half-microsecond midpoints, a round-half "
+        "tie)"
     ),
     tags=("analytics", "events", "temporal", "percentile"),
 )
@@ -1882,7 +1881,7 @@ def agg_order_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.select(
         "n_items",
         "n_orders",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n_orders * CAST(1000000 AS BIGINT)) div (sum(n_orders) OVER ())"
         ).alias("share_micro"),
@@ -1931,7 +1930,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from_type",
         "to_type",
         "n",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n * CAST(1000000 AS BIGINT)) div (sum(n) OVER (PARTITION BY from_type))"
         ).alias("p_micro"),
@@ -1972,7 +1971,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matrix. Per-week sums are snapped to integer 1e-4 units BEFORE the "
         "running total (float fold order cannot differ between engines) and "
         "the per-user quotient ships as exact integer-micro truncating "
-        "division — no rounding mode to diverge (the r12 rfm tie class); "
+        "division — no rounding mode to diverge; "
         "the cumulative window runs on the O(weeks^2) curve table, never "
         "the event stream"
     ),
@@ -2114,8 +2113,7 @@ def quality_order_total_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count("*").alias("n_orders"),
         F.sum(F.when(F.col("calc_total").isNull(), 1).otherwise(0)).alias("n_orphan_orders"),
         F.sum(F.when(F.col("delta") < 0.01, 1).otherwise(0)).alias("n_consistent"),
-        # exact integer-micro average over cent-snapped deltas (r12 rfm tie
-        # class): delta is a difference of cents-grid values, so
+        # exact integer-micro average over cent-snapped deltas: delta is a difference of cents-grid values, so
         # round(delta*100) recovers the exact cent count on both engines
         F.expr(
             "(sum(CAST(round(delta * 100, 0) AS BIGINT)) * CAST(10000 AS BIGINT))"
@@ -2165,7 +2163,7 @@ def events_power_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.agg(
         F.count("*").alias("n_users"),
         F.sum("n").cast("bigint").alias("n_events"),
-        # exact integer-micro (r14 no-bar tie sweep): difference of two
+        # exact integer-micro: difference of two
         # truncating BIGINT quotients, identical on both engines
         F.expr(
             "(2 * sum(i * n) * CAST(1000000 AS BIGINT)) div (count(*) * sum(n))"
@@ -2228,7 +2226,7 @@ def events_session_length_histogram(spark: SparkSession, sf_dir: str) -> DataFra
     return hist.select(
         "session_length",
         "n_sessions",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n_sessions * CAST(1000000 AS BIGINT)) div (sum(n_sessions) OVER ())"
         ).alias("share_micro"),
@@ -2323,7 +2321,7 @@ def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.select(
         "depth",
         "n_users",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n_users * CAST(1000000 AS BIGINT)) div (sum(n_users) OVER ())"
         ).alias("share_micro"),
@@ -2439,7 +2437,7 @@ ORDER BY r_score, f_score, m_score
         "boundaries are INTERPOLATION-FREE exact order statistics — the "
         "value at sorted rank ceil(q*n) = (4q*n + 3) // 4, i.e. ANSI "
         "percentile_disc, spelled out as row_number arithmetic on both "
-        "engines: r10/r11 proved percentile_cont boundaries are "
+        "engines: percentile_cont boundaries are "
         "build-dependent in DuckDB (input-typed, scale-rounded for DECIMAL "
         "and integer orderings), and a boundary that IS a data value in the "
         "column's native exact type (BIGINT/DECIMAL) has zero float math to "
@@ -2464,7 +2462,7 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "recency_days"
             ),
             F.count("*").alias("frequency"),
-            # monetary in integer CENTS longs (r14 exactness-cost probe):
+            # monetary in integer CENTS longs:
             # order statistics and score comparisons are scale-invariant,
             # the micro average divides out the 100, and long sums beat
             # DECIMAL128 — values identical, arithmetic cheaper
@@ -2477,7 +2475,7 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer arithmetic (4q*n + 3) div 4 — the identical expression the
     # oracle runs, so each boundary is a data value in the column's native
     # exact type and no float interpolation can diverge. All NINE bounds
-    # come from ONE window pass (r16, guide §2.4): the three metrics explode
+    # come from ONE window pass: the three metrics explode
     # to (metric, v) rows ranked within their metric partition — per-metric
     # row_number over v is exactly the old per-column global window (values
     # at each rank are deterministic under ties because only v orders the
@@ -2551,10 +2549,10 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # The two averages are emitted as EXACT integer-micro units with
         # floor division (all inputs non-negative, so Spark's truncating
-        # `div` == DuckDB's flooring `//`): r12's judge proved the one
-        # residual red cell was a perfect round-half tie at the 6th decimal
-        # (68570553.99/32 = 2142829.8121875) where Spark HALF_UP and DuckDB
-        # binary-double rounding split. Integer-micro has NO rounding mode
+        # `div` == DuckDB's flooring `//`): a rounded average can be a
+        # perfect round-half tie at the 6th decimal (68570553.99/32 =
+        # 2142829.8121875) where Spark HALF_UP and DuckDB binary-double
+        # rounding split. Integer-micro has NO rounding mode
         # to diverge — same pattern as sim_retrieval_ndcg_mrr's IDCG hash.
         .select(
             "r_score",
@@ -2645,8 +2643,7 @@ def agg_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             # integral division, identical on both engines for any sign):
             # round(DOUBLE, 9) on a rational of counts can land on a
             # round-half tie where Spark HALF_UP and DuckDB binary
-            # rounding split — the r12 rfm mechanism, swept by the
-            # round_tie_risk_columns lint
+            # rounding split — swept by the round_tie_risk_columns lint
             F.expr(
                 "(CAST(pair_cnt AS DECIMAL(38,0)) * 1000000000) div n_orders"
             ).alias("support_nano"),
@@ -2871,7 +2868,7 @@ def events_funnel_any_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("t_purchase").cast("bigint").alias("n_purchase"),
         F.count(F.when(all3, 1)).cast("bigint").alias("n_all3"),
         F.count(F.when(all3 & (span_us <= 604_800_000_000), 1)).cast("bigint").alias("n_all3_7d"),
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(count(CASE WHEN t_view IS NOT NULL AND t_click IS NOT NULL"
             " AND t_purchase IS NOT NULL THEN 1 END) * CAST(1000000 AS BIGINT))"
@@ -3053,7 +3050,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "lineitem"),
     )
-    # no distinct() here (r16, guide §2.4): the pair dedup folds into the
+    # no distinct() here: the pair dedup folds into the
     # operator's one src-keyed edge exchange (dedup_edges=True) — an
     # (src, dst) dedup after symmetrization is exactly the pair dedup,
     # since the orientation struct determines the pair. One exchange for
@@ -3088,8 +3085,7 @@ _KMV_FRAC_SQL = (
     "c -> strpos('0123456789abcdef', c) - 1), (a, x) -> a * 16 + x) "
     "/ 4294967296.0"
 )
-# the same first-8-hex-chars prefix as an exact BIGINT (r14 no-bar tie
-# sweep): the KMV estimate (k-1)/(h/2^32) is a RATIONAL (k-1)*2^32/h, so
+# the same first-8-hex-chars prefix as an exact BIGINT: the KMV estimate (k-1)/(h/2^32) is a RATIONAL (k-1)*2^32/h, so
 # its rounded form can land exactly on a round-half tie — the e4-scaled
 # truncating quotient below has no rounding mode to disagree on
 _KMV_HASH_INT_SQL = (
@@ -3205,7 +3201,7 @@ def agg_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # exact e4-scaled KMV estimate (r14 no-bar tie sweep): (k-1)*2^32*1e4
+    # exact e4-scaled KMV estimate: (k-1)*2^32*1e4
     # div h with h = the kth hash's first 8 hex chars as a BIGINT — the
     # rational estimate ships as a truncating integer quotient
     est_e4 = F.when(F.col("n_sketch") < k, F.col("n_sketch") * F.lit(10000)).otherwise(
@@ -3363,7 +3359,7 @@ def agg_kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.grp").alias("g1"), F.col("b.grp").alias("g2"))
         .agg(F.count(F.lit(1)).cast("long").alias("exact_intersection"))
     )
-    # exact e4-scaled theta-sketch estimate (r14 no-bar tie sweep):
+    # exact e4-scaled theta-sketch estimate:
     # n_matching*(k-1)*2^32*1e4 div (h*k), all BIGINT, truncating
     n_match = F.coalesce(F.col("n_matching"), F.lit(0)).cast("long")
     h = "CAST(conv(substring(theta, 1, 8), 16, 10) AS BIGINT)"
@@ -3463,7 +3459,7 @@ ORDER BY s.g1, s.g2
     oracle=_KMV_DIFF_ORACLE,
     description=(
         "set-DIFFERENCE (A-not-B) estimation from KMV sketches, completing "
-        "the sketch set algebra (distinct + intersection landed in r9): per "
+        "the sketch set algebra (with distinct and intersection): per "
         "ORDERED group pair, the union sketch's bottom-k is a uniform sample "
         "of A∪B below theta, and because theta <= each side's own theta a "
         "sampled hash lies in A exactly when it is in A's sketch — so "
@@ -3482,15 +3478,14 @@ def agg_kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _KMV_K
     o = load_table(spark, sf_dir, "orders")
     fp = F.md5(F.col("o_custkey").cast("string").cast("binary"))
-    # r15 (guide §2.4): the sketch table and the exact-audit key table both
+    # the sketch table and the exact-audit key table both
     # start from the same distinct projection — materialize it once instead
     # of re-scanning + re-distincting orders for each arm (fp is a function
     # of o_custkey, so (grp, fp)-distinct == (grp, custkey)-distinct and
     # both arms are plain projections of this one frame).
-    # LAZY localCheckpoint, not persist() and not an eager checkpoint (r16,
-    # guide §5 + ADVICE r15): both frames are multi-consumer so they must
+    # LAZY localCheckpoint, not persist() and not an eager checkpoint: both frames are multi-consumer so they must
     # materialize ONCE, and an eager checkpoint is a sequential driver
-    # barrier (~0.4s measured in r15) — but a bare persist() leaks: nothing
+    # barrier (~0.4s measured) — but a bare persist() leaks: nothing
     # ever unpersists it, and CacheManager's canonicalized-plan matching
     # silently reuses the first invocation's cache across re-runs (warm-
     # cache timings, session-lifetime pinned blocks). A lazy localCheckpoint
@@ -3550,7 +3545,7 @@ def agg_kmv_set_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g1", "g2")
         .agg(F.count(F.lit(1)).cast("long").alias("exact_difference"))
     )
-    # exact e4-scaled theta-sketch estimate (r14 no-bar tie sweep)
+    # exact e4-scaled theta-sketch estimate
     n_ab = F.coalesce(F.col("n_anotb"), F.lit(0)).cast("long")
     ex = F.coalesce(F.col("exact_difference"), F.lit(0)).cast("long")
     h = "CAST(conv(substring(theta, 1, 8), 16, 10) AS BIGINT)"
@@ -3638,7 +3633,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "lineitem"),
     )
-    # no distinct() (r16): pair dedup rides the operator's src exchange —
+    # no distinct(): pair dedup rides the operator's src exchange —
     # see graph_label_propagation's edge build for the argument
     pairs = orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey).select(
         (F.col("o_custkey") * 2).alias("cust_v"),
@@ -3809,7 +3804,7 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
             "c1",
             "c2",
             F.col("cn").cast("long").alias("cn"),
-            # exact integer-micro (r14 no-bar tie sweep): the top-k ORDER BY
+            # exact integer-micro: the top-k ORDER BY
             # now compares exact integers, so the cutoff cannot flip on a
             # cross-engine rounding split either
             F.expr("(cn * CAST(1000000 AS BIGINT)) div (d1 + d2 - cn)").alias(

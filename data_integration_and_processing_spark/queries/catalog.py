@@ -48,266 +48,14 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
-# The driver's correctness gate verifies the FIRST 50 registered queries, so
-# registration order is a coverage decision, not cosmetics. Since round 5 the
-# window is DERIVED, not hand-curated (VERDICT r4 item 6): pins first, then
-# the stalest oracle-backed entry of every required family, then a global
-# stalest-first fill. Staleness = last driver-green round recorded in
-# driver_green.json (regenerate with scripts/update_driver_green.py after a
-# round lands its CORRECTNESS_r{N}.json); never-driver-checked entries rank
-# stalest, with a per-module round-robin tiebreak so the fill doesn't
-# cluster in one module.
-
-_WINDOW_SIZE = 50
-
-# Always in the window: the flagship doubles as the driver's entry() smoke.
-_ALWAYS: tuple[str, ...] = ("q1_pricing_summary",)
-
-# Round-specific pins: entries that MUST re-verify under the driver this
-# round. r15 (VERDICT r14 item 1): the r14 rational-quotient sweep changed
-# 67 queries' output contracts; 22 were driver-attested in r14, leaving 45
-# (_CONVERTED_R14_PIN_LATER at r14 close) whose new hashes are
-# replica-verified but never driver-hashed. The pins below are the 27
-# STALEST of those 45 (all 16 r9-greens + the 11 alphabetically-first
-# r10-greens); the remaining 18 stay in _CONVERTED_R14_PIN_LATER as the
-# r16 pin set. Window budget: 1 always + 27 pins + family slots for any
-# family not green since r13 + never-green fills (this round's new
-# queries) + stalest-first r6 fill.
-_PINNED: tuple[str, ...] = (
-    "agg_kmv_distinct_sketch",
-    "agg_kmv_set_intersection",
-    "dedup_minhash_calibration",
-    "events_funnel_time_bounded",
-    "quality_auc_separability",
-    "quality_chi2_drift",
-    "quality_conditional_rules",
-    "quality_ks_drift_bucketed",
-    "sample_ab_delta_method",
-    "sample_mix_greedy_budget",
-    "sample_poisson_bootstrap_ci",
-    "search_hybrid_rrf",
-    "stream_kmv_incremental",
-    "temporal_backtest_seasonal_naive",
-    "temporal_seasonality_profile",
-    "text_readability_scores",
-    "agg_order_size_distribution",
-    "agg_winsorized_mean",
-    "curation_encoding_audit",
-    "curation_gopher_repetition",
-    "events_dau_wau",
-    "events_funnel_any_order",
-    "events_markov_transitions",
-    "events_power_user_gini",
-    "events_session_length_histogram",
-    "events_window_funnel",
-    "sim_matryoshka_prefix_recall",
-)
-
-# Converted in r14 (contract changed, two-tier replica-verified), driver
-# attestation still pending: these 18 are the r16 pin set (the 27 stalest
-# of the original 45 are this round's _PINNED above).
-_CONVERTED_R14_PIN_LATER: tuple[str, ...] = (
-    "sim_sample_diversity", "temporal_week_over_week", "text_bigram_lm",
-    "text_langid_confusion", "text_lexical_diversity",
-    "text_tokenizer_fertility", "text_vocab_coverage_curve",
-    "agg_kmv_set_difference", "graph_link_prediction_jaccard",
-    "stream_bigram_lm_incremental", "temporal_mann_kendall_trend",
-    "profile_join_key_skew", "agg_exact_stats_trend",
-    "events_cohort_retention", "quality_fk_orphan_audit",
-    "sample_ab_cuped_adjustment", "temporal_time_weighted_avg",
-    "text_repetition_metrics",
-)
-
-# Every family that must keep an oracle-checked row inside the window
-# (tests/test_catalog_window.py holds an independent copy as the gate).
-_FAMILY_TAGS: tuple[str, ...] = (
-    "flagship", "dedup", "similarity", "text", "sampling", "udf", "skew",
-    "streaming", "multimodal", "functions", "etl", "sink", "filter",
-    "projection", "join", "aggregation", "window", "sort", "setop",
-    "subquery", "tpch", "percentile", "ids", "profiling", "linkage",
-    "north-star", "stateful", "pandas-udf", "asof", "curation", "cdc",
-    "incremental", "partitioning", "scale", "analytics", "versioned",
-    "checksum", "chunking", "temporal",
-)
-
-_WINDOW_CACHE: tuple[str, ...] | None = None
-
-
-def _load_green() -> dict[str, int]:
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "driver_green.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
-
-
-def driver_window() -> tuple[str, ...]:
-    """The 50 names the external driver hash-checks this round, derived
-    mechanically: _ALWAYS + _PINNED, then per-family stalest, then global
-    stalest-first fill (never-green entries first, round-robin by module)."""
-    global _WINDOW_CACHE
-    if _WINDOW_CACHE is not None:
-        return _WINDOW_CACHE
-    _load()
-    green = _load_green()
-    cands = [s for s in _canonical_specs() if s.oracle is not None]
-    # Window-eligibility pre-flight (VERDICT r5 item 2): a query whose oracle
-    # outputs a list/struct/map column would crash the driver's canonicalizer
-    # (pandas sort_values on list cells) — keep it out of the window. The
-    # pytest gate (tests/test_oracle_schema.py) makes such queries a hard
-    # failure at authoring time; this filter is the runtime fail-safe.
-    from data_integration_and_processing_spark.queries.oracle_lint import cached_sweep  # noqa: PLC0415
-
-    complex_out = cached_sweep({s.name: s.oracle for s in cands})
-    cands = [s for s in cands if s.name not in complex_out]
-    mod_idx: dict[str, int] = {}
-    idx_in_mod: dict[str, int] = {}
-    counts: dict[str, int] = {}
-    for s in cands:
-        m = s.spark.__module__
-        mod_idx.setdefault(m, len(mod_idx))
-        idx_in_mod[s.name] = counts.get(m, 0)
-        counts[m] = idx_in_mod[s.name] + 1
-
-    def stale_key(s: QuerySpec) -> tuple:
-        return (green.get(s.name, -1), idx_in_mod[s.name], mod_idx[s.spark.__module__])
-
-    ranked = sorted(cands, key=stale_key)
-    window: list[str] = []
-
-    def add(name: str) -> None:
-        if name not in window and len(window) < _WINDOW_SIZE:
-            window.append(name)
-
-    for name in _ALWAYS + _PINNED:
-        add(name)
-    # Family coverage (r9 refinement, VERDICT r8 item 3): a family slot
-    # exists to bound how stale any family can get, not to re-verify fresh
-    # ones — a family whose freshest member was driver-green within the
-    # last two rounds skips its slot this round, freeing the fill for
-    # never-driver-checked entries (88 remained at r8 close; the rotation
-    # target is >= 45 first-time names per window).
-    latest_round = max(green.values(), default=0)
-    for tag in _FAMILY_TAGS:
-        covered = any(tag in _REGISTRY[n].tags for n in window)
-        if covered:
-            continue
-        freshest = max(
-            (green.get(s.name, -1) for s in cands if tag in s.tags), default=-1
-        )
-        if freshest >= latest_round - 1:
-            continue
-        for s in ranked:
-            if tag in s.tags:
-                add(s.name)
-                break
-    for s in ranked:
-        add(s.name)
-    _WINDOW_CACHE = tuple(window)
-    return _WINDOW_CACHE
-
-
-# Hand-curated r4 window, kept only as documentation of what rounds 1-4
-# verified (driver_green.json is the machine-readable history).
-_PRIORITY_R4_ARCHIVE: tuple[str, ...] = (
-    # flagship
-    "q1_pricing_summary",
-    # dedup family (r4.3: dedup_exact out — green r1/r3 — prefix-filtered
-    # jaccard in for its first hard signal)
-    "dedup_ngram_jaccard_prefix",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_clusters",
-    # similarity family (r4: sim_knn_join rotated in, sim_vector_ops_pack
-    # out — proven green in r3)
-    "sim_topk_bruteforce",
-    "sim_neardup_pairs",
-    "sim_knn_join",
-    # storage layout (multi-dimensional skipping)
-    "etl_zorder_layout",
-    # text-analysis family (r4: text_fingerprint out, proven r3)
-    "text_language_id",
-    "text_quality_score",
-    "pipeline_training_corpus",
-    # corpus curation family (r2)
-    "text_decontaminate",
-    "dedup_incremental_snapshot",
-    "text_chunk_documents",
-    # deterministic sampling family
-    "sample_hash_deterministic",
-    # Arrow UDF surface (r4: udf_pandas_scalar out, proven r3)
-    "udf_grouped_map_zscore",
-    "udf_cogrouped_asof",
-    # skew mitigation
-    "skew_salted_agg",
-    # streaming family (r4: stream_tumbling_window out, proven r3)
-    "stream_session_window",
-    "stream_sessionize_by_gap",
-    "stream_stateful_user_stats",
-    # multimodal plumbing
-    "multimodal_binary_metadata",
-    # scalar function packs
-    "func_string_pack",
-    # scale utilities
-    "ids_contiguous_assign",
-    "profile_column_stats",
-    # lakehouse maintenance singletons (versioned / checksum tags)
-    "etl_time_travel",
-    "etl_checksum_reconcile",
-    # relational engine representatives (r4 rotation: funnel, fuzzy-deletion
-    # join and exact percentile out — proven green in r3 — broadcast-dim,
-    # range-band, two-edit fuzzy join, rollup and weighted-median in: each
-    # was replica-only until now)
-    "filter_predicate_pushdown",
-    "project_derived_columns",
-    # r4.2 rotation: join_inner_shuffle out (proven green r3; the join family
-    # keeps five other window rows), Bloom semi-join reduction in — first
-    # hard signal for the runtime-filter family
-    "join_bloom_prefilter",
-    "join_asof_event",
-    "join_broadcast_dim",
-    "join_range_band",
-    "join_fuzzy_two_edit",
-    # r4.3: agg_groupby_stats out (green r3; rollup + weighted-median keep
-    # the aggregation signal), SQL-text entry point in
-    "sql_text_parity",
-    "agg_rollup",
-    "agg_weighted_median",
-    "window_topk_per_group",
-    "sort_multi_key_limit",
-    "set_ops_nations",
-    # temporal family (r3 + r4: temporal_ewma in)
-    "temporal_interval_merge",
-    "temporal_ewma",
-    "subquery_correlated_avg",
-    # TPC-H depth (r4: q2 partsupp variant in — carries the tpch tag — q3
-    # out, proven r3)
-    "q2_min_cost_supplier",
-    # ETL parity, one per sink semantic
-    "etl_transfer_overwrite_roundtrip",
-    # r4.2 rotation: append roundtrip out (green r3; overwrite keeps the
-    # sink-semantic signal), Merkle partition diff in
-    "etl_partition_diff",
-    "etl_upsert_merge",
-    "etl_scd2_apply",
-    "etl_cdc_apply",
-    "etl_jdbc_live_roundtrip",
-)
-
 _REGISTRY: dict[str, QuerySpec] = {}
 _LOADED = False
 
-# Canonical registry order, IMPORT-ORDER-INDEPENDENT: a test (or any caller)
-# importing one query module directly runs its @register calls before
-# _load()'s canonical sweep, which used to permute _REGISTRY insertion order
-# — and with it the derived window and CATALOG.md (the r8
-# test_catalog_md_is_fresh flake: suite-run order differed from a fresh
-# process). Ordering is therefore derived, not inherited: sort by
-# (_QUERY_MODULES position, registration sequence WITHIN the module) —
-# within-module sequence is statement order, identical however the module
-# got imported.
+# Catalog order is registration order, independent of import order: a caller
+# that imports one query module directly runs its @register calls before
+# _load()'s sweep, so _REGISTRY insertion order is not stable. Order is
+# therefore derived: (_QUERY_MODULES position, statement order within the
+# module), which is the same however the module got imported.
 _MODULE_ORDER: dict[str, int] = {m: i for i, m in enumerate(_QUERY_MODULES)}
 _MODULE_SEQ: dict[str, int] = {}  # query name -> position within its module
 
@@ -352,14 +100,9 @@ def _load() -> None:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """All query specs, derived driver-window queries first (driver_window)."""
+    """All query specs in registration order (see _canonical_specs)."""
     _load()
-    missing = [n for n in _ALWAYS + _PINNED if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"window pins name unknown queries: {missing}")
-    ordered = {n: _REGISTRY[n] for n in driver_window()}
-    ordered.update((s.name, s) for s in _canonical_specs() if s.name not in ordered)
-    return ordered
+    return {s.name: s for s in _canonical_specs()}
 
 
 def queries() -> dict[str, SparkQuery]:

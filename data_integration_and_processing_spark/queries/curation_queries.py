@@ -136,7 +136,7 @@ def pack_sequences_budget_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pack_sequences_budget",
-    # Audit form (VERDICT r7 item 4 pattern): next-fit bin boundaries are
+    # Audit form: next-fit bin boundaries are
     # decision-dependent — not a window/prefix-sum expression — so the
     # driver-checked output is the exact corpus arithmetic the oracle
     # recomputes (doc/token/oversized counts) plus boolean invariants of the
@@ -276,7 +276,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_shared",
             "n_a",
             "n_b",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 "(n_shared * CAST(1000000 AS BIGINT)) div (n_a + n_b - n_shared)"
             ).alias("jaccard_micro"),
@@ -296,8 +296,7 @@ _PLANT_BOILERPLATE = " ".join(f"bpqz{i:03d}" for i in range(64))
 
 @register(
     "dedup_chunk_neardup",
-    # Audit form (VERDICT r8 item 5 pattern, same shape as
-    # multimodal_phash_neardup): MinHash banding has no DuckDB twin, but the
+    # Audit form (same shape as multimodal_phash_neardup): MinHash banding has no DuckDB twin, but the
     # PLANTED ground truth does — every 10th doc gets the same 64-token
     # boilerplate passage prepended, which lands as an identical chunk 0 in
     # each, so all C(k,2) planted (doc_a, doc_b) chunk-0 pairs MUST appear
@@ -462,7 +461,7 @@ def _chunk_neardup_pairs(d: DataFrame) -> DataFrame:
         lab AS (SELECT a AS id, min(b) AS component FROM reach GROUP BY a),
         cl AS (
             -- members serialized to CSV: the driver's canonicalizer cannot
-            -- sort list-typed columns (VERDICT r5), so array outputs are
+            -- sort list-typed columns, so array outputs are
             -- string-rendered on both sides
             SELECT component AS cluster_rep,
                    CAST(count(*) AS BIGINT) AS n_members,
@@ -592,7 +591,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_shingles",
         "n_novel",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr("(n_novel * CAST(1000000 AS BIGINT)) div n_shingles").alias(
             "novelty_micro"
         ),
@@ -697,8 +696,8 @@ def text_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     st = sizes.select(F.col("doc_id").alias("train_id"), F.col("n_sh").alias("n_t"))
     sb = sizes.select(F.col("doc_id").alias("bench_id"), F.col("n_sh").alias("n_b"))
-    # exact integer-micro Jaccard + an integer threshold (r14 no-bar tie
-    # sweep): shared/union >= 0.2 <=> 5*shared >= union, so neither the
+    # exact integer-micro Jaccard + an integer threshold:
+    # shared/union >= 0.2 <=> 5*shared >= union, so neither the
     # score nor the cutoff can split on a rounding mode
     return (
         inter.join(st, "train_id")
@@ -788,7 +787,7 @@ def pack_batches_length_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket_cap",
             ((F.col("rn") - 1) / batch_rows).cast("long").alias("batch_id"),
             batch_rows.alias("batch_rows"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr("(n_tokens * CAST(1000000 AS BIGINT)) div bucket_cap").alias(
                 "pad_efficiency_micro"
             ),
@@ -1167,8 +1166,8 @@ def curation_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dup5_chars"),
         )
     )
-    # exact integer-micro fractions and cross-multiplied integer thresholds
-    # (r14 no-bar tie sweep): p/q <= t with rational t ships as the
+    # exact integer-micro fractions and cross-multiplied integer thresholds:
+    # p/q <= t with rational t ships as the
     # equivalent integer comparison, so neither the ledger columns nor the
     # kept verdict can split on a rounding mode
     dl = F.expr("(dup_lines * CAST(1000000 AS BIGINT)) div n_lines")
@@ -1274,7 +1273,7 @@ def curation_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ascii = F.length(F.regexp_replace(F.col("text"), "[^ -~]", ""))
     r_repl = n_repl == 0
     r_moji = n_moji == 0
-    # exact integer threshold + micro fraction (r14 no-bar tie sweep):
+    # exact integer threshold + micro fraction:
     # p/q >= 0.95 <=> 20p >= 19q, so neither the ledger column nor the
     # kept verdict can split on a rounding mode
     r_ascii = n_ascii * 20 >= n_chars * 19

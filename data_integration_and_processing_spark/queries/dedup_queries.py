@@ -155,7 +155,7 @@ _SIMHASH_CAND_CAP_PER_DOC = 8
 
 @register(
     "dedup_minhash_lsh",
-    # Audit form (VERDICT r7 item 4 pattern): the xxhash64 signature family
+    # Audit form: the xxhash64 signature family
     # has no DuckDB twin, but the EXACT J>=0.5 pair set does (the
     # dedup_ngram_jaccard oracle), and LSH output is structurally a subset
     # of it (candidates are exact-verified at the same threshold). The
@@ -270,7 +270,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash_signatures",
-    # Audit form (VERDICT r7 item 4 pattern): the xxhash64 bit-vote has no
+    # Audit form: the xxhash64 bit-vote has no
     # DuckDB twin, so the driver-checked output is the exact corpus counts
     # the oracle recomputes + boolean invariants of the real signatures:
     # same text => same signature (the property dedup relies on), all
@@ -351,7 +351,7 @@ def dedup_pipeline_end2end_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_pipeline_end2end",
-    # Audit form (VERDICT r7 item 4 pattern): minhash signatures have no
+    # Audit form: minhash signatures have no
     # DuckDB twin, but the EXACT J>=0.5 survivor set does (Jaccard pairs ->
     # recursive-CTE closure -> min-id rule, the pipeline_entity_resolution
     # oracle pattern). Because LSH candidates are exact-verified, LSH edges
@@ -520,7 +520,7 @@ def dedup_cap_audit_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_cap_audit",
-    # Audit form (VERDICT r7 item 4 pattern): xxhash64 banding is not
+    # Audit form: xxhash64 banding is not
     # expressible in DuckDB, but the banded-row total is pure arithmetic
     # (8 bands per doc with >= 1 shingle — both corpus halves countable in
     # SQL), and the cap report must satisfy accounting identities over ANY
@@ -569,7 +569,7 @@ def dedup_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental_neardup",
-    # Audit form (VERDICT r8 item 5): MinHash-LSH banding has no DuckDB
+    # Audit form: MinHash-LSH banding has no DuckDB
     # twin, so the driver-checked output is the exact SQL-computable fixture
     # arithmetic plus incremental-vs-one-shot equivalence booleans. With the
     # snapshot pre-deduped by the same engine (the operator's contract — a
@@ -1177,7 +1177,7 @@ def dedup_method_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_calibration",
-    # Audit form (VERDICT r7 item 4 pattern): the multiply-shift signature
+    # Audit form: the multiply-shift signature
     # family is engine-specific, but the PLANTED twin pairs (doc_id,
     # doc_id+100000 with the last 3 words cut) have an exact per-row
     # 3-gram-shingle Jaccard both engines compute identically — that exact
@@ -1242,8 +1242,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         gram3(ws, F.size(ws) - 2).alias("sa"),
         gram3(ws, F.size(ws) - 5).alias("sb"),
     )
-    # exact integer-micro mean of per-row truncating micro-Jaccards (r14
-    # no-bar tie sweep): both the per-row quotient and the mean are
+    # exact integer-micro mean of per-row truncating micro-Jaccards: both the per-row quotient and the mean are
     # BIGINT-exact on both engines
     planted_stats = eligible.agg(
         F.count("*").cast("long").alias("n_eligible_twins"),

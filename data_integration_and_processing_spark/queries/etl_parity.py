@@ -1014,9 +1014,8 @@ def etl_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     inserts = li.filter(F.col("l_orderkey") % 5 == 0)
     keys = ["l_returnflag", "l_linestatus"]
     sums = ["l_quantity", "l_extendedprice"]
-    # maintained sums as integer CENTS longs (r14 exactness-cost probe,
-    # scripts/probe_exactness_cost.py: 1.4x cheaper than DECIMAL128 at
-    # sf0.1 with IDENTICAL output): the merge arithmetic (snapshot +
+    # maintained sums as integer CENTS longs (measured 1.4x cheaper than
+    # DECIMAL128 at sf0.1 with IDENTICAL output): the merge arithmetic (snapshot +
     # insert delta - delete delta) stays exact and order-independent, and
     # cents/100.0 is the correctly-rounded double of the exact cents
     # rational — the SAME binary64 the DECIMAL->DOUBLE cast produced, so

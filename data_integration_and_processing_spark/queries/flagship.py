@@ -56,7 +56,7 @@ ORDER BY l_returnflag, l_linestatus
     tags=("flagship", "aggregation"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15 (guide §2.5/§2.3): the fixture is one parquet row group, so the
+    # the fixture is one parquet row group, so the
     # partial DECIMAL aggregation — ~1.2s of the query's 1.45s serial —
     # ran inside the single scan task; fan_out_scan spreads it (no-op on
     # any scan already wider than the core count). The money casts narrow

@@ -181,7 +181,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Planted CDC block (VERDICT r9 item 4): 512 ASCII chars derived from a
+# Planted CDC block: 512 ASCII chars derived from a
 # fixed seed, searched (seed 71 was the 72nd candidate) so that the gear
 # hash of BLOCK*k masks to zero at EXACTLY the block ends — verified for
 # k in {1,2,3,5,8,10} against cdc_boundaries at authoring time and pinned
@@ -203,7 +203,7 @@ def _cdc_plant_block() -> str:
 
 @register(
     "multimodal_cdc_chunks",
-    # Audit form (VERDICT r9 item 4, the last rows-only entry): gear-hash
+    # Audit form: gear-hash
     # boundaries have no DuckDB twin, so the driver-checked output is the
     # exact SQL-computable planted-ledger arithmetic (docs with doc_id <
     # 200 get a payload of 1 + doc_id % 7 repeats of the planted block,
@@ -313,7 +313,7 @@ def multimodal_cdc_chunks_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_chunk_dedup",
     # Gear-hash chunk boundaries have no SQL twin, but the AUDIT's byte
-    # arithmetic is deterministic (VERDICT r7 item 4): logical/copied bytes
+    # arithmetic is deterministic: logical/copied bytes
     # are exact SQL sums over the constructed corpus, and the chunk-store
     # guarantees — chunks reassemble every logical byte; dedup reclaims at
     # least every byte-identical copy (a copy shares ALL its chunks) — ride

@@ -1,21 +1,18 @@
-"""Static lint over oracle SQL output schemas: reject complex column types.
+"""Static lints over oracle SQL: catch cross-engine canon divergence at
+authoring time.
 
-The external driver's canonicalizer sorts result frames with pandas
-``sort_values``, which raises ``TypeError: unhashable type: 'list'`` on any
-list/struct/map-typed column — three rounds of "replica green, driver red"
-came from exactly this class (r3 float collapse, r4 HUGEINT dtype, r5 list
-sort; see VERDICT r5 §What's wrong). The fix pattern that worked each time is
-a static authoring-time guard, so: a one-shot DuckDB ``DESCRIBE`` over every
-oracle (no Spark needed) flags any query whose OUTPUT contains a list,
-struct, map or union column. Serialize such columns to strings (e.g.
-``array_to_string`` / ``F.array_join``) in BOTH projections instead.
+A checker that compares a Spark frame with a DuckDB frame canonicalizes both
+(pandas ``sort_values``, repr-rendered cells) before hashing. Some output
+shapes cannot survive that canon: list/struct/map cells crash the sort,
+HUGEINT/DECIMAL render differently from Spark's types, signed zeros and
+round-half ties render differently. Each lint here flags one such class with
+no Spark session, mostly through a one-shot DuckDB ``DESCRIBE`` or execution
+of every oracle. Serialize or cast the flagged column in BOTH projections.
 
-Used three ways:
-- ``catalog.driver_window()`` pre-flight: a flagged query is ineligible for
-  the driver's 50-query window (fail-safe: lint errors never block).
-- ``scripts/driver_replica.py``: flags complex-typed columns on either side
-  of a checked query as MISMATCH.
-- ``tests/test_oracle_schema.py``: hard gate — the sweep must be empty.
+Users:
+- ``tests/test_oracle_schema.py``: hard gate, every sweep must be empty.
+- ``scripts/driver_replica.py``: flags complex-typed or signed-zero columns on
+  either side of a checked query as MISMATCH.
 """
 
 from __future__ import annotations
@@ -24,16 +21,13 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 _DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-_SWEEP_CACHE: dict[str, list[str]] | None = None
-
 
 def is_complex_type(ddl_type: str) -> bool:
-    """True for DuckDB output types that diverge under the driver's canon:
+    """True for DuckDB output types that diverge under a pandas canon:
 
-    - list/struct/map/union — pandas ``sort_values`` crashes on list cells
-      (the r5 red-row class);
+    - list/struct/map/union — pandas ``sort_values`` crashes on list cells;
     - HUGEINT — fetchdf materializes float64, rendering "5.0" against
-      Spark's int "5" (the r3/r4 class; cast aggregates to BIGINT);
+      Spark's int "5" (cast aggregates to BIGINT);
     - DECIMAL — fetchdf float64 vs Spark's ``decimal.Decimal`` objects
       render "5.0" vs "5.00" (latent same-class; cast to DOUBLE and round).
     """
@@ -73,17 +67,6 @@ def complex_oracle_outputs(
     return bad
 
 
-def cached_sweep(oracles: dict[str, str]) -> dict[str, list[str]]:
-    """One sweep per process (driver_window may be called repeatedly)."""
-    global _SWEEP_CACHE
-    if _SWEEP_CACHE is None:
-        try:
-            _SWEEP_CACHE = complex_oracle_outputs(oracles)
-        except Exception:  # noqa: BLE001 — fail-safe: never break the driver
-            _SWEEP_CACHE = {}
-    return _SWEEP_CACHE
-
-
 def complex_frame_columns(pdf) -> list[str]:
     """Runtime twin for the replica: pandas columns holding list/array/dict
     cells (what the driver canon would crash sorting)."""
@@ -100,7 +83,7 @@ def complex_frame_columns(pdf) -> list[str]:
 
 def negative_zero_frame_columns(pdf) -> list[str]:
     """Float columns containing IEEE ``-0.0`` — the fourth replica/driver
-    canon-divergence class (VERDICT r6): DuckDB ``round()`` preserves the
+    canon-divergence class: DuckDB ``round()`` preserves the
     sign bit while Spark's ``F.round`` (BigDecimal) strips it, so the
     driver's repr-based canon renders ``-0.0`` vs ``0.0`` and hash-fails on
     numerically identical values. Any signed zero on EITHER side is a risk
@@ -248,16 +231,15 @@ def _preceding_ctes(sql: str, site_start: int) -> str:
 def decimal_percentile_orderings(
     oracles: dict[str, str], sf_dir: str = _DEFAULT_SF_DIR
 ) -> dict[str, list[str]]:
-    """The r10 knife-edge class (VERDICT r10 item 2a/2b): DuckDB's
+    """Knife-edge percentile boundaries: DuckDB's
     ``percentile_cont``/``percentile_disc`` over a DECIMAL (or HUGEINT)
     ORDER BY expression returns the interpolated boundary ROUNDED to the
     decimal's scale, with build-dependent rounding mode, while Spark's
     ``percentile`` interpolates in DOUBLE — any strict comparison against
     such a boundary can flip between engines for values at the grain
-    (``analytics_rfm_segmentation``, r10's one red). r11 proved the r10 scope
-    was too narrow: INTEGER/BIGINT orderings round identically under an
-    input-typed build (the rfm recurrence — VERDICT r11 item 2), so the flag
-    set is now an ALLOWLIST: for every percentile site in every oracle, this
+    (as ``analytics_rfm_segmentation`` once did). INTEGER/BIGINT orderings
+    round the same way under an input-typed build, so the flag set is an
+    ALLOWLIST: for every percentile site in every oracle, this
     probes the ORDER BY expression's DuckDB type in its real CTE context
     (``DESCRIBE WITH <preceding ctes> SELECT <expr> FROM <enclosing from>``)
     and flags ANY ordering that is not DOUBLE/FLOAT/REAL. Fix =
@@ -293,15 +275,15 @@ def decimal_percentile_orderings(
 
 
 # DATE-typed output columns render differently between DuckDB fetchdf and
-# Spark collect under some canonicalizers (datetime64 vs datetime.date — the
-# class the r10 memory note records). The entries below are all DRIVER-GREEN
-# (checked rounds r1–r10), so the current driver canon handles them; the lint
-# therefore gates GROWTH, not existence: new oracles must cast DATE outputs
+# Spark collect under some canonicalizers (datetime64 vs datetime.date). The
+# entries below hash-match under the repr canon of tests/oracle_harness.py
+# and scripts/driver_replica.py; the lint therefore gates GROWTH, not
+# existence: new oracles must cast DATE outputs
 # to VARCHAR in both engines instead of joining this list.
 DATE_OUTPUT_ALLOWLIST = frozenset(
     {
-        "temporal_week_over_week",  # week DATE — green r10
-        "func_date_pack",  # month_start DATE — green r5
+        "temporal_week_over_week",  # week DATE
+        "func_date_pack",  # month_start DATE
     }
 )
 
@@ -309,8 +291,8 @@ DATE_OUTPUT_ALLOWLIST = frozenset(
 def date_oracle_outputs(
     oracles: dict[str, str], sf_dir: str = _DEFAULT_SF_DIR
 ) -> dict[str, list[str]]:
-    """DESCRIBE sweep for DATE-typed output columns (VERDICT r10 item 2c).
-    TIMESTAMP outputs are left alone — eight driver-green oracles emit them
+    """DESCRIBE sweep for DATE-typed output columns.
+    TIMESTAMP outputs are left alone — several oracles emit them
     and both engines materialize datetime64[ns]; bare DATE is the divergent
     dtype. Returns hits NOT in ``DATE_OUTPUT_ALLOWLIST``."""
     import duckdb  # local import: keep the query path importable without it
@@ -340,7 +322,7 @@ _QUOTIENT_RE = re.compile(r"/|\bavg\s*\(|\bmean\s*\(", re.IGNORECASE)
 # Functions whose output is (off a measure-zero set) IRRATIONAL: a value
 # that passed through one of these cannot sit EXACTLY on a decimal
 # round-half tie (ties are rationals of the form odd/(2*10^k)), so the
-# rfm tie mechanism — identical exact value, engines splitting on the tie
+# round-half tie mechanism — identical exact value, engines splitting on the tie
 # — cannot fire; what remains is the accepted det64 residual (both engines
 # compute the same binary64 to a few ulps; landing within that noise of a
 # half point is ~1e-16-relative probability, the allowlist's det64 class).
@@ -352,7 +334,7 @@ _IRRATIONAL_RE = re.compile(
     re.IGNORECASE,
 )
 
-# Sites adjudicated tie-safe after the r13 sweep, each with its reason.
+# Sites adjudicated tie-safe, each with its reason.
 # Two safe classes exist:
 #   grid  — the rounded expression's EXACT value lives on a decimal grid
 #           coarser than 10^-(k+1), so a digit-(k+1) round-half tie cannot
@@ -363,15 +345,15 @@ _IRRATIONAL_RE = re.compile(
 #           ulps (exact DECIMAL sufficient statistics finished by the same
 #           spelled-out IEEE chain, no libm; DuckDB's DECIMAL->DOUBLE cast
 #           can double-round once the integer representation exceeds 2^53
-#           — the agg_groupby_stats r13 finding — so "identical" is only
+#           — as agg_groupby_stats showed — so "identical" is only
 #           ulp-exact below that). The residual risk is the value landing
 #           within that ulp noise (~1e-16 relative) of a half point on the
 #           10^-k grid — noise/grid ~ 1e-7 per cell for the allowlisted
 #           columns, the accepted residual class.
 # A quotient over data-dependent exact values (avg, count ratios, money/n)
-# may NOT be allowlisted — convert it to integer-micro div instead. The r14
-# no-bar sweep adds two surviving classes, each requiring the written
-# classification below (VERDICT r13 item 3):
+# may NOT be allowlisted — convert it to integer-micro div instead. Two
+# more classes survive the no-magnitude-bar quotient rule, each requiring
+# the written classification below:
 #   irr  — the site's value passes through an irrational transform UPSTREAM
 #          of the site expression (the regex can't see it): sqrt/log output
 #          is irrational a.e., so no exact decimal round-half tie exists;
@@ -381,7 +363,7 @@ _IRRATIONAL_RE = re.compile(
 #          (e.g. squared second moments). A tie needs the REDUCED
 #          denominator of a multi-factor data-dependent product to be
 #          exactly 2^(k+1)*5^j — measure-tiny, and covered empirically by
-#          the two-tier replica gate each round. These are the only
+#          the oracle suite at two fixture scales. These are the only
 #          rational survivors; everything representable was converted.
 ROUND_TIE_ALLOWLIST: dict[str, dict[str, str]] = {
     "events_error_burst_detection": {
@@ -399,7 +381,7 @@ ROUND_TIE_ALLOWLIST: dict[str, dict[str, str]] = {
     "sample_ab_welch_ttest": {
         "df_welch": (
             "rational-composite, conversion attempted and IMPOSSIBLE in 38 digits "
-            "(r15, VERDICT r14 item 5): df = (a0*d1 + a1*d0)^2*(n0-1)(n1-1) / "
+            "df = (a0*d1 + a1*d0)^2*(n0-1)(n1-1) / "
             "(p^2(n1-1) + q^2(n0-1)) with a_i = n*sxx - sx^2, d_i = n^2(n-1). Even "
             "at the minimal cents grid a_i ~ 1e19 and p = a0*d1 ~ 1e28 at sf0.1, so "
             "the squares need ~56 digits (e6 scale: ~73) — beyond DECIMAL(38)/"
@@ -408,7 +390,7 @@ ROUND_TIE_ALLOWLIST: dict[str, dict[str, str]] = {
             "4-limb long-division in SQL would have to be duplicated bug-for-bug in "
             "both engines. Stays float: tie needs the reduced denominator of a "
             "4-factor data-dependent product to be exactly 2^7*5^j — measure-"
-            "negligible, two-tier replica cover each round"
+            "negligible, covered by the oracle suite at two fixture scales"
         ),
     },
     "agg_approx_percentile": {
@@ -451,15 +433,15 @@ ROUND_TIE_ALLOWLIST: dict[str, dict[str, str]] = {
         "var_cuped": "det64: identical binary64 from DECIMAL-exact moments through the same IEEE chain",
         "lift_cuped": (
             "rational-composite, conversion attempted and IMPOSSIBLE in 38 digits "
-            "(r15, VERDICT r14 item 5): lift = dy - theta*dp over a common "
+            "lift = dy - theta*dp over a common "
             "denominator is (dy_num*B - A*dp_num) / (n0*n1*B) with A,B ~ 1e19-20 "
             "at the cents grid (sf0.1) and dy_num ~ 1e13, so the numerator needs "
             "~33 digits and grows ~n^3*cents^4 — breaches DECIMAL(38) within ~1.5 "
             "orders of magnitude of fixture scale, and gcd(B, dp_num) has no "
             "structural common factor. theta ITSELF converted to exact "
-            "theta_micro in r15 (~19 digits — see the query); only this composite "
+            "theta_micro (~19 digits — see the query); only this composite "
             "stays float. Tie needs the reduced denominator = 2^7*5^j — "
-            "negligible, two-tier replica cover"
+            "negligible, covered by the oracle suite at two fixture scales"
         ),
     },
     "stream_ohlc_continuous": {
@@ -529,23 +511,21 @@ def _round_sites(sql: str):
 def round_tie_risk_columns(
     oracles: dict[str, str], sf_dir: str = _DEFAULT_SF_DIR
 ) -> dict[str, list[str]]:
-    """The r12 red's failure class, swept statically (VERDICT r12 item 3):
+    """Round-half ties on rounded quotients, swept statically:
     ``round(<double expr>, k)`` in a hashed column diverges between engines
     when the exact value lands on (or within a double ulp of) a round-half
     tie at decimal k+1 — Spark rounds HALF_UP on the decimal expansion of
     the binary64 value, DuckDB rounds in binary, and the two split on ties
     (rfm cell (2,1,2): 68570553.99/32 = 2142829.8121875 exactly). The flag
-    criterion is the judge's: any round(expr, k) output column whose
-    magnitude can reach 10^(9-k) (also exactly the class the pre-r13
-    9-significant-digit replica canon was blind to). Quotient-shaped
+    criterion: any round(expr, k) output column whose magnitude can reach
+    10^(9-k) (the class a 9-significant-digit canon is blind to). Quotient-shaped
     expressions (``avg`` or ``/``) are the proven mechanism — convert them
     to the integer-micro ``div`` pattern; non-quotient hits over exact
     DECIMAL bases may instead join ``ROUND_TIE_ALLOWLIST`` with the
     tie-distance justification.
 
     Executes each oracle once at ``sf_dir`` (value property, not schema —
-    like the signed-zero sweep this lives in the pytest gate, not the
-    window pre-flight). Returns {query: ["alias round(.,k) max|x|=m QUOTIENT", ...]}.
+    like the signed-zero sweep this lives in the pytest gate). Returns {query: ["alias round(.,k) max|x|=m QUOTIENT", ...]}.
     """
     import duckdb  # local import: keep the query path importable without it
 
@@ -581,8 +561,7 @@ def round_tie_risk_columns(
             except (TypeError, ValueError):
                 continue
             quotient = bool(_QUOTIENT_RE.search(e))
-            # r14 strengthening (VERDICT r13 item 3): the temporal_stl_lite
-            # live tie proved the round-half mechanism is MAGNITUDE-
+            # a live tie in temporal_stl_lite showed the round-half mechanism is MAGNITUDE-
             # INDEPENDENT — a rational quotient p/q lands exactly on a tie
             # whenever its reduced denominator is 2^(k+1)*5^j (e.g. any
             # count divisible by 128 at k=6), at any magnitude. So quotient-

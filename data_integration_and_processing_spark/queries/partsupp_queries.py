@@ -1,5 +1,5 @@
 """True-shape TPC-H Q2/Q11/Q16/Q20 over a deterministically synthesized
-``partsupp`` (VERDICT r1 item 6).
+``partsupp``.
 
 The fixture has no partsupp table, so these queries build one in-plan with
 pure modular arithmetic — expressible identically in Spark and ANSI SQL, so

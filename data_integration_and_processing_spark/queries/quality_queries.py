@@ -85,7 +85,7 @@ def quality_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(label).alias("fk_name"),
                 "child_rows",
                 "orphan_rows",
-                # exact integer-micro (r14 no-bar tie sweep)
+                # exact integer-micro
                 F.expr("(orphan_rows * CAST(1000000 AS BIGINT)) div child_rows").alias(
                     "orphan_ratio_micro"
                 ),
@@ -249,7 +249,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "token",
             "n_occurrences",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr("(n_occurrences * CAST(1000000 AS BIGINT)) div n_total").alias(
                 "support_micro"
             ),
@@ -324,7 +324,7 @@ def quality_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "metric",
             "digit",
             "n",
-            # exact integer-micro (r14 no-bar tie sweep); benford_freq keeps
+            # exact integer-micro; benford_freq keeps
             # round() — log10 output is irrational, no exact decimal tie
             F.expr("(n * CAST(1000000 AS BIGINT)) div n_total").alias(
                 "observed_freq_micro"
@@ -422,7 +422,7 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin",
         "n_ref",
         "n_cur",
-        # exact integer-micro cross-multiplied delta (r14 no-bar tie sweep);
+        # exact integer-micro cross-multiplied delta;
         # psi_term keeps round() — the ln factor is irrational, no exact tie
         F.expr(
             f"(((n_cur + 1) * CAST({t_ref + 10} AS BIGINT)"
@@ -528,10 +528,9 @@ def profile_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").cast("bigint").alias("max_group"),
             # DOUBLE cast INSIDE the percentile on both engines: an
             # input-typed DuckDB build rounds BIGINT-ordered boundaries
-            # (the rfm class, VERDICT r11 item 2)
             F.expr("percentile(CAST(n AS DOUBLE), 0.5)").alias("p50_group"),
             F.expr("percentile(CAST(n AS DOUBLE), 0.99)").alias("p99_group"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 "(max(n) * count(*) * CAST(1000000 AS BIGINT)) div sum(n)"
             ).alias("skew_factor_micro"),
@@ -608,9 +607,9 @@ SELECT (SELECT count(*) FROM gaps) AS n_gaps,
         "sequence-continuity audit for a supposedly-gapless id column: gap count "
         "and total missing ids, duplicate count via count vs count-distinct — the "
         "ingestion check that catches a dropped batch (gap) or a doubled one "
-        "(dups) before reconciliation. r5: the naive global lag window (every "
-        "row through ONE reducer — flagged by scripts/plan_lint.py) is replaced "
-        "by the assign_contiguous_ids pattern: range-repartition, per-partition "
+        "(dups) before reconciliation. Instead of a global lag window (every "
+        "row through ONE reducer — flagged by scripts/plan_lint.py) it uses "
+        "the assign_contiguous_ids pattern: range-repartition, per-partition "
         "lag in parallel, then cross-partition boundary gaps from the "
         "O(partitions) min/max table. Output is a single audit row"
     ),
@@ -809,7 +808,7 @@ def quality_conditional_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rule",
         "n_checked",
         "n_violations",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr("(n_violations * CAST(1000000 AS BIGINT)) div n_checked").alias(
             "violation_rate_micro"
         ),
@@ -890,7 +889,7 @@ def quality_auc_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
         cum.crossJoin(tot)  # 1-row totals frame
         .groupBy("n_pos", "n_neg")
         .agg(
-            # exact integer-micro Mann-Whitney (r14 no-bar tie sweep): the
+            # exact integer-micro Mann-Whitney: the
             # tie-aware U statistic is integral after doubling, so the AUC
             # ships as a truncating quotient at half-micro scale
             F.expr(
@@ -946,7 +945,7 @@ def quality_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = halves.agg(
         F.sum("n_a").cast("long").alias("na"), F.sum("n_b").cast("long").alias("nb")
     )
-    # exact integer-micro chi2 contribution (r14 no-bar tie sweep): the
+    # exact integer-micro chi2 contribution: the
     # two-cell term collapses algebraically to D^2 / ((n_a+n_b)*ta*tb)
     # with D = n_a*tb - n_b*ta — one truncating quotient over DECIMAL(38)
     # integers (D^2 exceeds BIGINT at bench scale; 38 digits hold to sf1+)

@@ -124,7 +124,7 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part is ~1/30 of lineitem at TPC-H ratios: explicit broadcast keeps the
     # 100 TB fact table unshuffled for the join (only the agg shuffles, on 25
     # groups after map-side partial aggregation).
-    # r15 (guide §2.5): the broadcast probe + DECIMAL partial aggregation ran
+    # the broadcast probe + DECIMAL partial aggregation ran
     # inside the effectively-single-split fixture scan (1.03s stage on 3
     # tasks); fan_out_scan spreads it — q1's fix, same order-independent
     # decimal sums, no-op on any scan already wider than the core count.
@@ -333,8 +333,8 @@ def join_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arithmetic finished by one cast->divide->sqrt chain — a DECIMAL "
         "sum-of-squares cast to DOUBLE double-rounds in DuckDB once the "
         "integer representation exceeds 2^53 (int128 then scale division) "
-        "while Spark rounds the decimal once, a last-ulp divergence the r13 "
-        "round-trip replica canon exposed"
+        "while Spark rounds the decimal once, a last-ulp divergence that a "
+        "round-trip (repr) canon exposes"
     ),
     tags=("aggregation",),
 )
@@ -344,7 +344,7 @@ def agg_groupby_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statistics finished by one cast->divide->sqrt chain (built-in
     # stddev_samp accumulates in engine-specific order, and even a DECIMAL
     # sum-of-squares cast to DOUBLE double-rounds in DuckDB past 2^53 —
-    # the last-ulp class the r13 round-trip replica canon exposed).
+    # a last-ulp divergence that a round-trip (repr) canon exposes).
     price = F.col("o_totalprice").cast("decimal(14,2)")
     per = o.withColumn("c", F.expr("CAST(CAST(o_totalprice AS DECIMAL(14,2)) * 100 AS BIGINT)"))
     n = F.count("*")
@@ -389,8 +389,8 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The sketch estimate itself is engine-specific, so the driver-checked
     # output carries the EXACT side plus the sketch's accuracy bound as a
     # boolean: if the HLL estimate drifts beyond 5*rsd of exact, within_5rsd
-    # flips false and the value hash goes red (VERDICT r5 item 6: oracle the
-    # rows-only sketch entries without weakening the check).
+    # flips false and the value hash goes red: the sketch entry is
+    # oracle-checked without weakening the check.
     oracle="""
         SELECT l_returnflag,
                CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
@@ -415,7 +415,7 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("l_partkey").alias("exact_parts"),
         F.count("*").alias("n_rows"),
     )
-    # ANSI-safe zero guard (ADVICE r6): an all-NULL partkey group would make
+    # ANSI-safe zero guard: an all-NULL partkey group would make
     # exact_parts 0 and divide-by-zero under the session's ANSI default.
     rel_err = F.abs(F.col("raw_approx") - F.col("exact_parts")) / F.col("exact_parts")
     within = F.when(F.col("exact_parts") > 0, rel_err <= 5 * rsd).otherwise(
@@ -997,7 +997,7 @@ def project_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the two distribution scores ship as exact integer-nano rank ratios "
         "(rank-1)*1e9 div (n-1) and cume*1e9 div n via truncating integral "
         "division (the built-ins return a DOUBLE quotient whose round(.,9) "
-        "can land on a round-half tie, the r12 rfm class)"
+        "can land on a round-half tie)"
     ),
     tags=("window",),
 )
@@ -1102,8 +1102,8 @@ def join_fuzzy_deletion_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Driver-checked output = EXACT percentiles (Spark F.percentile and
     # DuckDB quantile_cont share the p*(n-1) linear-interpolation
     # definition) plus the sketch's 1% relative-error bound as booleans —
-    # a sketch regression flips the boolean and fails the value hash
-    # (VERDICT r5 item 6). The tighter rank-error bound stays pinned in
+    # a sketch regression flips the boolean and fails the value hash.
+    # The tighter rank-error bound stays pinned in
     # tests/test_plan_properties.py.
     oracle="""
         SELECT l_returnflag,

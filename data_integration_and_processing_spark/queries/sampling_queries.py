@@ -347,7 +347,7 @@ def prep_feature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             # zscore keeps round(): sigma is a sqrt (irrational a.e., no
             # exact decimal tie — det64 residual only). minmax/robust are
             # rational over the cents / quarter-cent grid, so they ship as
-            # exact integer-micro truncating quotients (r14 no-bar sweep):
+            # exact integer-micro truncating quotients:
             # min/max are cents-exact; the interpolated median/IQR land on
             # the 1/400-dollar grid (quartile fractions), recovered exactly
             # by round(x*400) from the det64 double both engines share
@@ -578,7 +578,7 @@ def sample_ab_srm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "arm",
             "n",
-            # exact integer forms (r14 no-bar tie sweep): expected ships in
+            # exact integer forms: expected ships in
             # tenths (total*5 == 10*(total/2)); the chi2 term collapses to
             # (2n - total)^2 / (2*total), a truncating micro quotient
             (F.col("total") * 5).alias("expected_x10"),
@@ -676,8 +676,8 @@ def sample_mix_greedy_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_avail"),
-        # exact integer-micro mean of per-row capped micro scores (r14
-        # no-bar tie sweep): n_chars/400 capped at 1 == least(n_chars*2500,
+        # exact integer-micro mean of per-row capped micro scores:
+        # n_chars/400 capped at 1 == least(n_chars*2500,
         # 1e6) in micro units, and the greedy rank orders by the SAME
         # exact integers on both engines
         F.expr(
@@ -821,7 +821,7 @@ def sample_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "events")
-    # r15 (guide §2.5): the B-way explode + Poisson inverse-CDF case chain
+    # the B-way explode + Poisson inverse-CDF case chain
     # + partial aggregation all ran inside the single-split fixture scan
     # (0.92s single-task stage). Fan out BEFORE the explode so the added
     # shuffle moves the 1x rows, not the Bx exploded rows. Replicate means
@@ -841,7 +841,7 @@ def sample_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "b")
         .agg((F.sum(F.col("k") * F.col("value")) / F.sum("k")).alias("mean_b"))
     )
-    # exact integer-micro corpus mean (r14 no-bar tie sweep); the CI
+    # exact integer-micro corpus mean; the CI
     # bounds stay round()ed — bootstrap-replicate percentiles interpolate
     # det64 doubles, not a single data-dependent rational
     raw = e.groupBy("event_type").agg(
@@ -948,10 +948,10 @@ def sample_ab_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.select(
         "arm",
         "n_users",
-        # exact integer-micro ratio (r14 no-bar tie sweep): X/Y == sx/sy of
+        # exact integer-micro ratio: X/Y == sx/sy of
         # DECIMAL-exact sums, shipped as one truncating DECIMAL(38) div at
-        # the 1e-6 scale every other *_micro column uses (ADVICE r14: the
-        # earlier form multiplied by an extra 1e6, making it a 1e-12 value);
+        # the 1e-6 scale every other *_micro column uses (one 1e6 factor,
+        # not two);
         # se_delta keeps round() — its sqrt makes the value irrational a.e.
         F.expr("CAST(sx_micro div sy_int AS BIGINT)").alias("ratio_micro"),
         F.round(se, 6).alias("se_delta"),
@@ -1021,7 +1021,7 @@ def sample_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("double").alias("sx"),
         # exact integer-micro arm sum: the published means ship as
-        # truncating integral division (r12 rfm tie class — round(sx/n, 6)
+        # truncating integral division (round(sx/n, 6)
         # can land on a round-half tie where the engines split)
         F.sum(F.expr("CAST(x * 1000000 AS BIGINT)")).alias("sx_micro"),
         F.sum((F.col("x").cast("decimal(19,6)") * F.col("x").cast("decimal(19,6)")).cast("decimal(38,6)"))
@@ -1142,7 +1142,7 @@ def quality_ks_drift_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n0",
             "n1",
             F.col("bin").cast("int").alias("ks_bin"),
-            # exact integer-micro KS statistic (r14 no-bar tie sweep)
+            # exact integer-micro KS statistic
             F.expr(
                 "(abs(k0 * n1 - k1 * n0) * CAST(1000000 AS BIGINT)) div (n0 * n1)"
             ).alias("ks_d_micro"),
@@ -1306,7 +1306,7 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounds cost k narrow passes over cached state instead of O(k²)
     # lineage recompute from the parquet scan, and per-stage codegen stays
     # O(1) in k (each round's stage reads InMemoryTableScan, not the whole
-    # chain) — VERDICT r6 "What's wrong" item 3.
+    # chain).
     mind = (
         e.filter(F.col("vec_id") != first["vec_id"])
         .select("vec_id", "embedding", d2_to(first["embedding"]).alias("md"))
@@ -1440,8 +1440,7 @@ def sample_split_dedup_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min(id) OVER (PARTITION BY fp): the fingerprint is near-unique, so a
     # window means a full sort of the corpus on a high-cardinality key,
     # while the partial-aggregate shape combines before the (same-keyed)
-    # shuffle and lets AQE split any pathological fp skew on the join —
-    # VERDICT r6 "What's wrong" item 4.
+    # shuffle and lets AQE split any pathological fp skew on the join.
     reps = n.groupBy("fp").agg(F.min("id").alias("grp"))
     g = n.join(reps, "fp").select("id", "grp")
     split = F.when(hash_bucket(["grp"], 10, seed=11) < 8, F.lit("train")).otherwise(
@@ -1729,9 +1728,9 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "biasing the lift. Everything reduces to one user-keyed aggregation "
         "plus closed-form moment arithmetic from DECIMAL-exact sufficient "
         "statistics (order-independent sums — raw double sums are partition-"
-        "fold-order-sensitive, the r13 sweep's latent-red class); theta "
+        "fold-order-sensitive); theta "
         "ships EXACT as theta_micro — one truncating integer div over "
-        "cents-grid moments kept at e2/e4 scale (r15; ~19 digits at sf0.1, "
+        "cents-grid moments kept at e2/e4 scale (~19 digits at sf0.1, "
         "inside DECIMAL(38)) — while lift_cuped stays round()ed float "
         "(its cross product needs ~33 digits, the allowlisted "
         "rational-composite); var_cuped "
@@ -1743,9 +1742,9 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sampling", "analytics", "quality", "north-star"),
 )
 def sample_ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 rewrite (round_tie_risk sweep): the old shape summed raw DOUBLEs
-    # (partition-fold-order-sensitive — a latent hash red) and made a second
-    # per-row pass for residual variance. Moments are now DECIMAL-exact
+    # Raw DOUBLE sums would be partition-fold-order-sensitive (a latent
+    # hash mismatch), and a second per-row pass for residual variance is
+    # unnecessary. Moments are DECIMAL-exact
     # (welch idiom), and var_cuped uses the closed form
     # var_y - 2*th*cov + th^2*var_pre — algebraically identical to the
     # residual-sum population variance, needs NO second table pass, and both
@@ -1778,7 +1777,7 @@ def sample_ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick(1, "n_g").alias("n1"),
         (pick(0, "sy_g") * 1000000).cast("decimal(38,0)").alias("symi0"),
         (pick(1, "sy_g") * 1000000).cast("decimal(38,0)").alias("symi1"),
-        # exact integer sufficient stats for theta (r15): first moments at
+        # exact integer sufficient stats for theta: first moments at
         # cents scale, second moments at the 1e-4 product grid — value
         # lives on the cents grid so these casts are exact; keeping the
         # e2/e4 (not micro) scale buys ~16 digits of DECIMAL(38) headroom
@@ -1830,11 +1829,11 @@ def sample_ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     th, mp, var_y = F.col("th"), F.col("mp"), F.col("var_y")
     var_cuped = var_y - F.lit(2.0) * th * F.col("cov_py") + th * th * F.col("var_pre")
     return t.select(
-        # exact integer-micro theta (r15, VERDICT r14 item 5): theta =
+        # exact integer-micro theta: theta =
         # (n*spy - sp*sy)/(n*spp - sp^2) over cents-grid sums needs only
         # ~19 digits at sf0.1 (~25 at 1000x) when the moments stay at the
-        # e2/e4 grid scale, so the former round(th, 6) rational-composite
-        # survivor converts to one truncating DECIMAL(38) div after all.
+        # e2/e4 grid scale, so theta is one truncating DECIMAL(38) div
+        # rather than a round(th, 6) of a rational.
         # lift_cuped below is the one that genuinely can't: its cross
         # product (dy*B - A*dp) needs ~33 digits at sf0.1 growing ~n^3.
         F.expr(
@@ -1843,7 +1842,7 @@ def sample_ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div ((CAST(n0 AS DECIMAL(38,0)) + n1) * sppe4 - spe2 * spe2)"
             " AS BIGINT)"
         ).alias("theta_micro"),
-        # exact integer-micro raw lift (r14 no-bar tie sweep): a difference
+        # exact integer-micro raw lift: a difference
         # of two DECIMAL-exact means ships as one cross-multiplied
         # truncating DECIMAL(38) div; lift_cuped keeps round() — see the
         # quantified ROUND_TIE_ALLOWLIST classification
@@ -1941,9 +1940,9 @@ def sample_rolling_origin_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH joined AS (
             -- cent-exact integer base: every published statistic is an
             -- exact rational of integer cents and counts, emitted as
-            -- integer-micro truncating division (the r12 rfm tie class —
+            -- integer-micro truncating division, because
             -- round(quotient, 6) can land on a round-half tie where the
-            -- engines' rounding modes split)
+            -- engines' rounding modes split
             SELECT c.c_mktsegment AS segment,
                    CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y_c
             FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1990,7 +1989,7 @@ def prep_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cent-exact integer base (order-independent under any shuffle/AQE
         # partitioning); all published statistics are exact rationals of
         # cents and counts emitted as integer-micro truncating division —
-        # no float rounding mode left to diverge (r12 rfm tie class)
+        # no float rounding mode left to diverge
         F.expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").alias("y_c"),
     )
     per_cat = joined.groupBy("segment").agg(

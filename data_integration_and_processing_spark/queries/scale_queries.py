@@ -155,7 +155,7 @@ def _bucket_digests(df: DataFrame) -> DataFrame:
     from data_integration_and_processing_spark.operators.parallelism import fan_out_scan  # noqa: PLC0415
     from data_integration_and_processing_spark.operators.validation import row_checksum  # noqa: PLC0415
 
-    # r15 (guide §2.5): the char-level digest fold is the heavy map stage
+    # the char-level digest fold is the heavy map stage
     # of this query (~40 array-lambda evals per row), and the one-row-group
     # fixture scanned as a single task — both snapshot digests ran serially
     # on one core. fan_out_scan spreads the fold; the per-bucket DECIMAL
@@ -253,7 +253,7 @@ _QD_RANK_TOL = 1.0 / _QD_B + 0.01
     # deterministic GK summary), so the driver-checked output is the EXACT
     # per-type percentiles (Spark F.percentile and DuckDB quantile_cont
     # share the p*(n-1) interpolation) plus the merged estimate's 1/B
-    # rank-error bound as a boolean (VERDICT r5 item 6); merge-consistency
+    # rank-error bound as a boolean; merge-consistency
     # and tolerance stay pinned in tests/test_quantile_digest.py.
     oracle="""
         SELECT event_type, CAST(0.5 AS DOUBLE) AS p,

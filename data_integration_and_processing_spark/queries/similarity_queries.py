@@ -63,7 +63,7 @@ def _fixture_index_path(kind: str, sf_dir: str, src_file: str = "embeddings.parq
 
     # key by a digest of the FULL sf_dir path, not just its basename:
     # /a/sf0.01 and /b/sf0.01 in one environment must not share (and
-    # repeatedly reap) each other's cache lineage (ADVICE r12)
+    # repeatedly reap) each other's cache lineage
     full = os.path.abspath(sf_dir.rstrip("/"))
     base = (
         f"{os.path.basename(full)}-{hashlib.sha256(full.encode()).hexdigest()[:8]}"
@@ -72,7 +72,7 @@ def _fixture_index_path(kind: str, sf_dir: str, src_file: str = "embeddings.parq
     # a regenerated fixture mints a new fingerprint; reap the dead siblings
     # (full encoded-corpus copies each) so the scratch dir stays bounded.
     # Only siblings past a grace age go: a concurrent process may still be
-    # scanning an old-fingerprint index it resolved moments ago (ADVICE r12)
+    # scanning an old-fingerprint index it resolved moments ago
     import glob  # noqa: PLC0415
     import shutil  # noqa: PLC0415
     import time  # noqa: PLC0415
@@ -129,8 +129,8 @@ _TOPK_RECALL_FLOORS: dict[str, float] = {"ivf": 0.3, "lsh": 0.4, "pq": 0.5, "ivf
 
 # Shared oracle for the audited ANN top-k entries: the exact top-10 ranks
 # (deterministic, engine-independent) plus the recall-floor verdict as a
-# constant-true boolean — the sketch pattern from agg_approx_count_distinct
-# (VERDICT r5 item 6 / r7 item 4): the hash check exercises the index's
+# constant-true boolean — the sketch pattern from agg_approx_count_distinct:
+# the hash check exercises the index's
 # recall guarantee, not just that it ran.
 _TOPK_AUDIT_ORACLE = f"""
     SELECT a.vec_id,
@@ -228,7 +228,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM embeddings
         )
         -- q serialized to CSV: the driver's canonicalizer cannot sort
-        -- list-typed columns (VERDICT r5), so array outputs are
+        -- list-typed columns, so array outputs are
         -- string-rendered on both sides
         SELECT e.vec_id,
                round(s.sc, 9) AS scale,
@@ -548,7 +548,7 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    # r15 (guide §2.5): the |Q| x corpus cosine folds after the broadcast
+    # the |Q| x corpus cosine folds after the broadcast
     # join ran inside the fixture's single-row-group scan task; fan_out_scan
     # spreads them (no-op at scale). Per-pair values are row-local, so the
     # result multiset is unchanged.
@@ -588,7 +588,7 @@ def sim_pca_project_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_pca_project",
-    # Audit form (VERDICT r7 item 4 pattern): the eigenbasis has no DuckDB
+    # Audit form: the eigenbasis has no DuckDB
     # twin, so the driver-checked output is the exact corpus arithmetic the
     # oracle recomputes (counts, dim, covariance trace — rotation-invariant,
     # so basis-independent) plus boolean invariants of the real projection:
@@ -676,7 +676,7 @@ def sim_ann_join_ivf_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.filter(F.col("vec_id") % 25 != 0)
-    # lazy checkpoint BEFORE the global sort (r16, guide §2.4/§5): the
+    # lazy checkpoint BEFORE the global sort: the
     # range-partitioned orderBy on top of the IVF join plan re-executed the
     # candidate+cosine chain in its sampling pass (two extra ~0.8s
     # single-task stages in the event log; +0.83s A/B on the noop sink).
@@ -735,7 +735,7 @@ def sim_ann_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.filter(F.col("vec_id") % 25 != 0)
-    # r15 (guide §2.5): fan out the exact side's |Q| x corpus cosine folds
+    # fan out the exact side's |Q| x corpus cosine folds
     # (single-row-group scan = one task otherwise); per-pair values are
     # row-local, result multiset unchanged
     scored = fan_out_scan(c.select(F.col("vec_id").alias("neighbor_id"), "embedding")).join(
@@ -748,10 +748,9 @@ def sim_ann_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    # r15 (guide §2.6 + §5): the exact arm previously re-planned (and
-    # re-computed) 3x inside the one action — as `exact`, as `caught`'s
-    # left side and as the verdict count, with no exchange reuse in the
-    # final plan. Materialize its tiny top-10 result ONCE on a background
+    # left lazy, the exact arm is re-planned (and re-computed) 3x inside
+    # the one action — as `exact`, as `caught`'s left side and as the
+    # verdict count, with no exchange reuse in the final plan. Materialize its tiny top-10 result ONCE on a background
     # thread, overlapped with the approx arm's driver-side work (IVF
     # trainer sample collect + numpy Lloyd + plan build).
     exact_f = background_checkpoint(
@@ -829,7 +828,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("label").alias("q_label"),
     )
-    # r15 (guide §2.5): fan out the corpus-side cosine folds — see
+    # fan out the corpus-side cosine folds — see
     # sim_knn_join; per-pair values are row-local, multiset unchanged
     c = fan_out_scan(e.filter(F.col("vec_id") % 50 != 0)).select(
         F.col("vec_id").alias("negative_id"), "embedding", "label"
@@ -921,9 +920,9 @@ def sim_centroid_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("label").alias("c_label"), "centroid")
     )
-    # r15 (guide §2.5): fan out the vectors x centroids cosine folds (the
-    # cent subtree is untouched — its float avg partials keep their exact
-    # pre-r15 partition layout); per-pair sims are row-local
+    # fan out the vectors x centroids cosine folds (the
+    # cent subtree is untouched — its float avg partials keep the scan's
+    # partition layout); per-pair sims are row-local
     scored = fan_out_scan(e).crossJoin(F.broadcast(cent)).select(
         "vec_id",
         F.col("label").alias("true_label"),
@@ -939,7 +938,7 @@ def sim_centroid_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("c_label") == F.col("true_label"), 1).otherwise(0)).alias(
                 "n_correct"
             ),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 "(sum(CASE WHEN c_label = true_label THEN 1 ELSE 0 END)"
                 " * CAST(1000000 AS BIGINT)) div count(*)"
@@ -1036,9 +1035,8 @@ def sim_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Recall floors per nprobe: {nprobe: (mean_floor, min_floor)}. The SINGLE
-# source for both the oracle's VALUES table and the Spark when-chain below
-# (ADVICE r6: the literals were duplicated — editing one side alone made the
-# boolean bands diverge with no authoring-time signal). Floors sit well
+# source for both the oracle's VALUES table and the Spark when-chain below,
+# so the two boolean bands cannot diverge. Floors sit well
 # under the measured sf0.001/sf0.01 values (mean ~0.49/0.74, min 0.1/0.3
 # for nprobe 2/4); nprobe=8 probes every cell and must be exhaustive-exact
 # (>= 0.999 = 1.0 up to float round). The tighter floor stays in
@@ -1057,9 +1055,9 @@ _ANN_FLOOR_VALUES = ", ".join(
 @register(
     "sim_ann_recall_audit",
     # The IVF side is engine-specific (KMeans cells), so the driver-checked
-    # output is the audit's VERDICT: per-nprobe recall floors as booleans
-    # (VERDICT r5 item 6). A routing or recall regression flips a boolean
-    # and fails the value hash.
+    # output is the audit's verdict: per-nprobe recall floors as booleans.
+    # A routing or recall regression flips a boolean and fails the value
+    # hash.
     oracle=f"""
         WITH np(nprobe, mean_floor, min_floor) AS (
             VALUES {_ANN_FLOOR_VALUES}
@@ -1128,7 +1126,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build once, probe three times: the nprobe sweep shares one quantizer
     centers = train_ivf_centers(c, n_cells=8)
 
-    # r15 (guide §2.5): fan out the exact side's cosine folds — see
+    # fan out the exact side's cosine folds — see
     # sim_knn_join; per-pair values are row-local, multiset unchanged
     scored = fan_out_scan(
         c.select(F.col("vec_id").alias("neighbor_id"), "embedding")
@@ -1251,7 +1249,7 @@ def sim_uncertainty_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("c")
     )
     scored = (
-        # r15 (guide §2.5): fan out the vectors x centroids cosine folds
+        # fan out the vectors x centroids cosine folds
         # (cent subtree untouched); per-pair sims are row-local
         fan_out_scan(e.select("vec_id", "embedding"))
         .crossJoin(F.broadcast(cent.select(F.col("label"), F.col("c"))))
@@ -1386,7 +1384,7 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("dim")
         .agg(
             F.countDistinct("qid").cast("bigint").alias("n_queries"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 f"(count(b_cid) * CAST(1000000 AS BIGINT))"
                 f" div (count(DISTINCT qid) * {_MRL_K})"
@@ -1443,7 +1441,7 @@ def sim_sample_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.agg(
         F.lit(n_sampled).cast("bigint").alias("n_sampled"),
         F.count("*").cast("bigint").alias("n_pairs"),
-        # exact integer-micro mean + share (r14 no-bar tie sweep): sim is
+        # exact integer-micro mean + share: sim is
         # already on the 1e-6 grid (rounded cosine), so round(sim*1e6)
         # recovers each pair's exact integer and the mean/threshold are
         # BIGINT-exact on both engines
@@ -1638,7 +1636,7 @@ def sim_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") % 25 != 1).select(
         F.col("vec_id").alias("neighbor_id"), "label", "embedding"
     )
-    # r15 (guide §2.5): fan out the corpus-side cosine folds — see
+    # fan out the corpus-side cosine folds — see
     # sim_knn_join; the downstream per-query window re-sorts its partition,
     # so every aggregate sees the identical row order as before
     scored = fan_out_scan(c).crossJoin(F.broadcast(q)).select(
@@ -1679,7 +1677,7 @@ def sim_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             # ndcg10 keeps round(): the log2 DCG weights are irrational,
             # no exact decimal tie (det64 residual only). mrr/prec10 are
-            # rationals — exact integer-micro (r14 no-bar tie sweep)
+            # rationals — exact integer-micro
             F.round(F.col("dcg") / F.col("idcg"), 6).alias("ndcg10"),
             F.coalesce(
                 F.expr("CAST(1000000 AS BIGINT) div first_rel_rank"), F.lit(0).cast("long")
@@ -1791,7 +1789,7 @@ _DOT_SQL = (
         "by the UNROUNDED score with an id tiebreak and round only the "
         "displayed value — division by the positive constant M|q| is "
         "IEEE-monotone, so the two rankings agree exactly and rounding "
-        "cannot flip the k boundary (ADVICE r10). One scalar max-norm "
+        "cannot flip the k boundary. One scalar max-norm "
         "aggregate + the same JVM fold/TakeOrderedAndProject shape as the "
         "cosine baseline"
     ),
@@ -1815,7 +1813,7 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MIPS served THROUGH the IVF cosine index (VERDICT r10 item 7)
+# MIPS served THROUGH the IVF cosine index
 # ---------------------------------------------------------------------------
 
 # Augmented-space IVF recall floor (mean over queries, nprobe=2 of 8 cells).
@@ -1838,7 +1836,7 @@ def sim_mips_via_ivf_raw(
     max norm, ONE scalar aggregate broadcast back), queries gain a 0; every
     augmented corpus norm is M, so augmented cosine is a monotone transform
     of the raw inner product and the cosine IVF router needs no changes.
-    ``e`` threads a shared cached corpus frame (VERDICT r12 item 6)."""
+    ``e`` threads a shared cached corpus frame."""
     from data_integration_and_processing_spark.operators.similarity import (  # noqa: PLC0415
         ann_join_ivf,
     )
@@ -1867,7 +1865,7 @@ def sim_mips_via_ivf_raw(
         ),
     )
     # lazy checkpoint before the global sort — same measured range-sampling
-    # re-execution as sim_ann_join_ivf_raw (r16); rows identical
+    # re-execution as sim_ann_join_ivf_raw; rows identical
     return (
         ann_join_ivf(q_aug, c_aug, k=10, n_cells=8, nprobe=2)
         .localCheckpoint(eager=False)
@@ -1942,7 +1940,7 @@ def sim_mips_via_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    # r15 (guide §2.5): fan out the exact side's dot folds — see
+    # fan out the exact side's dot folds — see
     # sim_knn_join; per-pair values are row-local, multiset unchanged
     scored = (
         fan_out_scan(c.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
@@ -1952,7 +1950,7 @@ def sim_mips_via_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("dot_exact").desc(), F.col("neighbor_id").asc()
     )
-    # r15 (guide §2.6): materialize the exact arm on a background thread,
+    # materialize the exact arm on a background thread,
     # overlapped with the approx arm's driver-side trainer + plan build
     exact_f = background_checkpoint(
         scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 10)
@@ -1992,7 +1990,7 @@ def sim_mips_via_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Retrieval-quality eval: nDCG@10 / MRR@10 of the served ANN paths
-# (VERDICT r11 item 5) and incremental IVFPQ maintenance (item 6)
+# and incremental IVFPQ maintenance
 # ---------------------------------------------------------------------------
 
 # DCG position discounts 1/log2(rank+1) for ranks 1..10, frozen as 9-decimal
@@ -2092,7 +2090,7 @@ def _ndcg_mrr_path(
 
 def _exact_ranked_both(scored: DataFrame) -> DataFrame:
     """Both ground truths (cosine AND dot) of the shared all-pairs pass in
-    ONE window pass (r15, guide §2.4): explode each scored row into a
+    ONE window pass: explode each scored row into a
     (_m, s) pair and rank within (query_id, _m) — hashpartitioning on
     query_id satisfies the two-key clustering, so this is one exchange +
     one sort + one checkpoint where :func:`_exact_ranked` twice paid two
@@ -2130,8 +2128,7 @@ def _eval_scored(
     join-invariant (one per vector, not one per pair), so both are hoisted
     ABOVE the pair expansion: each pair costs exactly one 64-term fold
     instead of three. ``e`` lets the eval thread ONE cached corpus frame
-    through every consumer instead of rescanning the parquet (VERDICT r12
-    item 6 — the r11 single-scan discipline, applied to the eval)."""
+    through every consumer instead of rescanning the parquet."""
     if e is None:
         e = load_table(spark, sf_dir, "embeddings")
     sq = F.aggregate(
@@ -2142,7 +2139,7 @@ def _eval_scored(
         F.col("embedding").alias("q_emb"),
         F.sqrt(sq).alias("q_norm"),
     )
-    # r15 (guide §2.5): fan out the corpus side — the |Q| x corpus dot/cos
+    # fan out the corpus side — the |Q| x corpus dot/cos
     # folds below otherwise run inside the checkpointed frame's partition
     # count (1 at the fixture's single-row-group scale); per-pair values
     # are row-local, multiset unchanged
@@ -2183,7 +2180,7 @@ def _eval_index_path(spark: SparkSession, sf_dir: str) -> str:
     # meta dir at write start, so a crash mid-write leaves a directory that
     # would pass an existence check with no committed parquet — and the
     # unchanged fixture fingerprint would never reap the wedged cache
-    # (ADVICE r12; same marker-written-last discipline as the upsert path)
+    # (same marker-written-last discipline as the upsert path)
     if not os.path.exists(f"{path}/meta/_SUCCESS"):
         import shutil  # noqa: PLC0415
 
@@ -2200,7 +2197,7 @@ def sim_retrieval_ndcg_mrr_raw(
     """Raw served results for both eval paths (engine-specific ranks; the
     registered entry wraps them in the IDCG+floor audit form): the IVFPQ
     batch probe and the IVF-served MIPS join over the same %100 query
-    batch. ``e`` threads a shared cached corpus frame (VERDICT r12 item 6)."""
+    batch. ``e`` threads a shared cached corpus frame."""
     from data_integration_and_processing_spark.operators.similarity import (  # noqa: PLC0415
         ivfpq_probe_batch,
     )
@@ -2216,7 +2213,7 @@ def sim_retrieval_ndcg_mrr_raw(
         .select("vec_id", "embedding")
         .collect()
     ]
-    # r15 (guide §2.6): the mips arm's plan construction is driver-heavy
+    # the mips arm's plan construction is driver-heavy
     # (IVF trainer sample + numpy Lloyd + augmented-join build) — start the
     # ivfpq probe's EXECUTION on a background thread first, so its cluster
     # work fills the cores the mips build leaves idle; the two arms only
@@ -2293,16 +2290,16 @@ def sim_retrieval_ndcg_mrr_raw(
 def sim_retrieval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus materialization threads through every consumer (ground
     # truth, MIPS norms/augmentation, query-batch fetch) — the parquet is
-    # scanned once instead of once per stage (VERDICT r12 item 6)
+    # scanned once instead of once per stage
     e = load_table(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
     # bounded materialization (query-batch x corpus rows): both paths'
     # ground truths rank the SAME all-pairs pass — score once, rank twice.
-    # r15 (guide §2.6): build it on a background thread, overlapped with
+    # build it on a background thread, overlapped with
     # the served arm's driver-heavy path (index-model load, query-batch
     # collect, probe-plan construction) — the two arms only meet in
     # _ndcg_mrr_path.
     scored_f = background_checkpoint(_eval_scored(spark, sf_dir, e=e))
-    # r15 (guide §2.6, one level up): the served arm's CONSTRUCTION is
+    # the served arm's CONSTRUCTION is
     # itself driver-heavy (index model load, query-batch collect, IVF
     # trainer) — build AND materialize it on a worker thread so that
     # driver work overlaps the ground-truth jobs; both ground truths then
@@ -2352,7 +2349,7 @@ def _upserted_index_path(spark: SparkSession, sf_dir: str) -> str:
         # directory EXPLICITLY: relying on mode('overwrite') to wipe it
         # only holds under static partitionOverwriteMode — under dynamic
         # mode a _cell partition populated only by the crashed append would
-        # survive the rebuild and then be appended again (ADVICE r12)
+        # survive the rebuild and then be appended again
         import shutil  # noqa: PLC0415
 
         shutil.rmtree(path, ignore_errors=True)
@@ -2471,7 +2468,7 @@ def sim_ivfpq_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r13: IVFPQ serving-knob tuning frontier (nprobe x refine recall audit)
+# IVFPQ serving-knob tuning frontier (nprobe x refine recall audit)
 # ---------------------------------------------------------------------------
 
 # The (nprobe, refine) grid an operator sweeps when tuning a served IVFPQ
@@ -2561,7 +2558,7 @@ def sim_ivfpq_tuning_frontier_raw(
 @register(
     "sim_ivfpq_tuning_frontier",
     # IVFPQ cell assignment/codebooks are engine-specific, so the driver-
-    # checked output is the audit VERDICT per arm (the sim_ann_recall_audit
+    # checked output is the audit verdict per arm (the sim_ann_recall_audit
     # contract): a routing, LUT, or refine regression anywhere on the
     # serving surface flips a boolean and fails the value hash.
     oracle=f"""
@@ -2608,7 +2605,7 @@ def sim_ivfpq_tuning_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r13: two-stage retrieval rerank eval (candidate fetch -> exact rerank)
+# two-stage retrieval rerank eval (candidate fetch -> exact rerank)
 # ---------------------------------------------------------------------------
 
 # Mean nDCG@10 floors for the two arms (measured, fixed seed + fixture =>
@@ -2648,7 +2645,7 @@ def sim_rerank_eval_raw(
         .select("vec_id", "embedding")
         .collect()
     ]
-    # r15 (guide §2.4): both arms probe the SAME index with the SAME LUTs —
+    # both arms probe the SAME index with the SAME LUTs —
     # stage1's 10 ADC candidates are exactly the _r <= 10 prefix of the
     # rerank arm's 50 — so one shared shortlist serves both (identical
     # results to the two separate probes it replaces; the duplicated
@@ -2713,7 +2710,7 @@ def sim_rerank_eval_raw(
 )
 def sim_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
-    # r15 (guide §2.6): the served arm's construction is driver-heavy
+    # the served arm's construction is driver-heavy
     # (index model load + LUT build) — build AND materialize it on a worker
     # thread while the ground-truth scoring jobs run (same rows either way)
     served_f = background_materialize(lambda: sim_rerank_eval_raw(spark, sf_dir, e=e))
@@ -2771,7 +2768,7 @@ def sim_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r13: IVFPQ tombstone deletion (the upsert's operational complement)
+# IVFPQ tombstone deletion (the upsert's operational complement)
 # ---------------------------------------------------------------------------
 
 # Recall@10 floor for query 0 against the SURVIVOR corpus, served entirely
@@ -2908,7 +2905,7 @@ def sim_ivfpq_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r14: IVFPQ compaction (closes the build -> upsert -> delete lifecycle)
+# IVFPQ compaction (closes the build -> upsert -> delete lifecycle)
 # ---------------------------------------------------------------------------
 
 # Post-compaction recall floor for query 0 against the survivor corpus.
@@ -2978,8 +2975,8 @@ def sim_ivfpq_compact_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         LIMIT 10
     """,
     description=(
-        "IVFPQ compaction — the lifecycle closer the upsert (r12) and "
-        "tombstone-delete (r13) contracts both point at: once deleted mass "
+        "IVFPQ compaction — the lifecycle closer the upsert and "
+        "tombstone-delete contracts both point at: once deleted mass "
         "drags cell selectivity, the index is REBUILT over the survivor "
         "rows from its own stored originals (fresh coarse cells + fresh "
         "codebooks, ids preserved, tombstones retired — FAISS remove_ids + "
@@ -3048,14 +3045,14 @@ def sim_ivfpq_compact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r14: pluggable model-UDF rerank slot (stage-2 = an Arrow-batched scorer)
+# pluggable model-UDF rerank slot (stage-2 = an Arrow-batched scorer)
 # ---------------------------------------------------------------------------
 
 # The deterministic stand-in model: a bilinear scorer sum_j w_j*q_j*c_j with
 # frozen rational weights w_j = 1 + (j % 5)/10 — "a learned relevance head"
 # shaped exactly like a real model UDF (batch of (query, candidate) vector
 # pairs in, scores out), but SQL-expressible so the exact side hashes.
-# NOTE the weights avoid any `/` on purpose: the strengthened r14 tie lint
+# NOTE the weights avoid any `/` on purpose: the round-tie lint
 # flags every quotient-shaped round() site, and the multiplicative form
 # (integer * literal 0.1, correctly rounded identically on both engines)
 # expresses the same frozen head without joining the allowlist.
@@ -3100,7 +3097,7 @@ def _bilinear_scorer(q, c):
 # bilinear model deliberately disagrees with the cosine geometry the index
 # quantizes, so the shortlist miss rate is the honest cost of candidate
 # generation under model/retriever mismatch); floor 0.3 leaves margin
-# against the worst tier. Pinned in tests/test_round14_ops.py.
+# against the worst tier. Pinned in tests/test_ann_recall.py.
 _MODEL_RERANK_RECALL_FLOOR = 0.3
 
 
@@ -3230,7 +3227,7 @@ def sim_model_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r15: IVFPQ serving-COST model audit (work units vs the nprobe/refine knobs)
+# IVFPQ serving-COST model audit (work units vs the nprobe/refine knobs)
 # ---------------------------------------------------------------------------
 
 # The frontier audit (sim_ivfpq_tuning_frontier) pins what the knobs BUY
@@ -3336,7 +3333,7 @@ def sim_ivfpq_serving_cost_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description=(
         "IVFPQ serving-COST model audit — the price side of the "
-        "sim_ivfpq_tuning_frontier recall curve (VERDICT r14 item 7a): "
+        "sim_ivfpq_tuning_frontier recall curve: "
         "work units per (nprobe, refine) arm computed EXACTLY from O(model) "
         "driver state (per-cell row counts + the probe's own stable cell "
         "routing), no probe execution needed. Pins four facts of a correct "
@@ -3396,7 +3393,7 @@ def sim_ivfpq_serving_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r15: end-to-end RAG ingest pipeline (model-UDF embed -> index -> serve ->
+# end-to-end RAG ingest pipeline (model-UDF embed -> index -> serve ->
 # eval) — the retrieval twin of pipeline_training_corpus
 # ---------------------------------------------------------------------------
 
@@ -3435,7 +3432,7 @@ def _hash_embed(df: DataFrame) -> DataFrame:
                 vecs.append([float(x) for x in v])
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": vecs})
 
-    # r15 (guide §2.5 + §4): the documents fixture scans as ONE task, so the
+    # the documents fixture scans as ONE task, so the
     # whole model-UDF embed ran on one Python worker of 32 — fan out BEFORE
     # the Python boundary (no-op on any scan already wider than the cores).
     # Per-row outputs are row-local, so the multiset is unchanged.
@@ -3502,7 +3499,7 @@ def pipeline_rag_ingest_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY d.source
     """,
     description=(
-        "end-to-end RAG ingest pipeline (VERDICT r14 item 7b — the "
+        "end-to-end RAG ingest pipeline (the "
         "retrieval twin of pipeline_training_corpus): documents are "
         "embedded by a model-UDF (Arrow-batched mapInPandas; a "
         "deterministic crc32 feature-hashing embedder stands in the slot "
@@ -3527,7 +3524,7 @@ def pipeline_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_emb = emb.filter(F.col("doc_id") % 53 == 0).select(
         F.col("doc_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    # r15 (guide §2.6): the served arm re-embeds + loads the index model
+    # the served arm re-embeds + loads the index model
     # driver-side — build AND materialize it on a worker thread while the
     # exact ground-truth join runs on the cluster (same rows either way)
     served_f = background_materialize(lambda: pipeline_rag_ingest_raw(spark, sf_dir))
@@ -3569,7 +3566,7 @@ def pipeline_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r15: streaming ANN ingest (foreachBatch upsert into a served IVFPQ index,
+# streaming ANN ingest (foreachBatch upsert into a served IVFPQ index,
 # recall audited per micro-batch)
 # ---------------------------------------------------------------------------
 
@@ -3712,8 +3709,8 @@ def stream_ivfpq_ingest_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY i.batch_seq
     """,
     description=(
-        "streaming ANN ingest (VERDICT r14 item 7c — composes three proven "
-        "pieces): ordered micro-batches (vec_id % 8 slices staged as an "
+        "streaming ANN ingest (composes three proven pieces): "
+        "ordered micro-batches (vec_id % 8 slices staged as an "
         "mtime-ordered file stream, maxFilesPerTrigger=1, availableNow) "
         "land in a LIVE IVFPQ index via foreachBatch + ivfpq_upsert "
         "(O(batch) — frozen cells/codebooks, per-cell appends), and every "

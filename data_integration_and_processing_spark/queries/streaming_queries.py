@@ -453,7 +453,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_hll_incremental",
     # HLL sketch binaries are engine-specific, so the driver-checked output
     # is the exact batch distinct count plus the streamed estimate's 2%
-    # accuracy bound as a boolean (VERDICT r5 item 6). Register-exact
+    # accuracy bound as a boolean. Register-exact
     # equality with the one-shot batch sketch (any batching, any order)
     # stays pinned in tests/test_analytics.py.
     oracle="""
@@ -481,7 +481,7 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = e.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_distinct_users")
     )
-    # ANSI-safe zero guard (ADVICE r6): all-NULL user_id in a type would make
+    # ANSI-safe zero guard: all-NULL user_id in a type would make
     # the denominator 0 and fail the query under ANSI; fall back to exactness.
     rel_err = (
         F.abs(F.col("est_distinct_users") - F.col("exact_distinct_users"))
@@ -529,7 +529,7 @@ def stream_jdbc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_countmin_heavy_hitters",
     # xxhash64 bucket coordinates have no DuckDB twin, so the driver-checked
     # output is a one-row summary of the CMS guarantees over the streamed
-    # top-k (VERDICT r5 item 6): estimates never underestimate, overestimate
+    # top-k: estimates never underestimate, overestimate
     # <= eps*N, and every selected user's TRUE count is within eps*N of the
     # exact 10th-highest (est >= true implies a selected user can only
     # displace a true heavy hitter by overestimate, bounded by eps*N).
@@ -623,7 +623,7 @@ def stream_pattern_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The summaries are engine-specific GK-style sketches and the merge path
     # is replay-dependent, so the driver-checked output is the EXACT batch
     # percentiles (quantile_cont parity) plus the streamed estimate's
-    # compounded rank-error budget as a boolean (VERDICT r5 item 6 pattern);
+    # compounded rank-error budget as a boolean;
     # the tighter numeric budget stays pinned in tests/test_quantile_digest.py.
     oracle="""
         SELECT event_type, CAST(0.5 AS DOUBLE) AS p,
@@ -705,7 +705,7 @@ def stream_python_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_neardup_incremental",
-    # Audit form (VERDICT r8 item 5): MinHash-LSH banding has no DuckDB
+    # Audit form: MinHash-LSH banding has no DuckDB
     # twin, so the driver-checked output is the exact SQL-computable fixture
     # arithmetic plus the batch-vs-stream equivalence boolean: the set of
     # documents the stream accepts across micro-batches must EQUAL the
@@ -974,8 +974,8 @@ def stream_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 _KMV_STREAM_K = 64
-# the kth hash's first 8 hex chars as an exact BIGINT (r14 no-bar tie
-# sweep: the KMV estimate is a rational — see _KMV_HASH_INT_SQL in
+# the kth hash's first 8 hex chars as an exact BIGINT (the KMV estimate
+# is a rational — see _KMV_HASH_INT_SQL in
 # analytics_queries for the class note)
 _KMV_STREAM_HASH_INT = (
     "list_reduce(list_transform(string_split(substr(kth_hash, 1, 8), ''), "

@@ -1,7 +1,6 @@
 """Time-series analytics queries over ``events`` (operators/temporal.py).
 
-Round 2 registered this module before committing it, which broke the whole
-catalog; it now exists for real. Every query is DuckDB-oracle-checked; all
+Every query is DuckDB-oracle-checked; all
 time arithmetic is epoch-microsecond BIGINT (timezone-proof), weighted sums
 go through DECIMAL, and the EWMA recurrence is an identical left-fold in
 both engines (``F.aggregate`` vs ``list_reduce``), so even a sequential
@@ -309,8 +308,8 @@ FROM g GROUP BY event_type ORDER BY event_type
         "exact truncating integral division, the max a BIGINT, and the "
         "interpolated percentiles run over DOUBLE-cast integers UNROUNDED (the "
         "binary64 interpolation is engine-identical; a round(.,6) of a seconds "
-        "quotient ties exactly on half-microsecond midpoints — the r12 rfm "
-        "class); one window + one aggregate shuffle"
+        "quotient ties exactly on half-microsecond midpoints, a round-half "
+        "tie); one window + one aggregate shuffle"
     ),
     tags=("temporal", "window", "percentile"),
 )
@@ -640,7 +639,7 @@ def temporal_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("next_v", F.first("v", ignorenulls=True).over(w_next))
         .withColumn("next_us", F.first("obs_us", ignorenulls=True).over(w_next))
     )
-    # exact e4-grid interpolation (r14 no-bar tie sweep): values are on the
+    # exact e4-grid interpolation: values are on the
     # 1e-4 grid, so the lerp ships as integer arithmetic with ONE truncating
     # div — identical on both engines, no float fraction at the boundary
     interp = F.expr(
@@ -1219,7 +1218,7 @@ def temporal_backtest_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFr
         j.groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_evaluated"),
-            # exact integer-micro error metrics (r14 no-bar tie sweep):
+            # exact integer-micro error metrics:
             # per-row truncating micro ratios, then an exact integer mean
             F.expr(
                 "sum((abs(actual - pred) * CAST(1000000 AS BIGINT)) div actual)"
@@ -1320,7 +1319,7 @@ def temporal_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_days",
             "s_stat",
             "n_pairs",
-            # exact integer-micro tau-a (r14 no-bar tie sweep); z_abs keeps
+            # exact integer-micro tau-a; z_abs keeps
             # round() — its sqrt denominator is irrational, no exact tie
             F.expr(
                 "(s_stat * CAST(2000000 AS BIGINT)) div (n_days * (n_days - 1))"
@@ -1561,8 +1560,8 @@ def temporal_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events are read. Per-event weights snap to INTEGER nano units and "
         "values to integer micro BEFORE the sum (libm exp() differs at ulp "
         "level between engines — the snap absorbs it — and a sum of snapped "
-        "DOUBLES would still be fold-order-sensitive in its low bits, the "
-        "r13 sweep's latent-red class; integral sums are exact in any "
+        "DOUBLES would still be fold-order-sensitive in its low bits; "
+        "integral sums are exact in any "
         "order), first 200 users for a bounded driver frame"
     ),
     tags=("temporal", "analytics", "aggregation", "incremental", "scale"),

@@ -312,7 +312,7 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # no fan_out_scan here: the per-row work (md5 + quality arithmetic) is
     # too cheap to amortize a full-text repartition — measured +16% at
-    # sf0.1 when added in r3; the fp window shuffle redistributes anyway
+    # sf0.1; the fp window shuffle redistributes anyway
     d = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     scored = d.select(
         "doc_id",
@@ -383,7 +383,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             F.col("tf").cast("bigint").alias("tf"),
             F.col("doc_freq").cast("bigint").alias("doc_freq"),
-            # exact integer-micro output (r14 no-bar tie sweep); the rank
+            # exact integer-micro output; the rank
             # above still orders by the exact single-division double
             F.expr("(tf * CAST(1000000 AS BIGINT)) div doc_freq").alias("rel_micro"),
         )
@@ -543,8 +543,8 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_countmin_heavy_hitters",
     # xxhash64 bucket coordinates have no DuckDB twin, so the driver-checked
     # output is the exact top-20 (token, true_count) plus the CMS guarantee
-    # band — never underestimates, overestimate <= eps*N — as a boolean
-    # (VERDICT r5 item 6); the same bounds stay pinned in
+    # band — never underestimates, overestimate <= eps*N — as a boolean;
+    # the same bounds stay pinned in
     # tests/test_analytics.py.
     oracle="""
         WITH c AS (
@@ -687,7 +687,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = fan_out_scan(load_table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", F.explode(words_of(F.col("text"))).alias("term"))
-    # corpus total rides the vocabulary itself (r16, guide §2.4/§5): the old
+    # corpus total rides the vocabulary itself: the old
     # form persisted the FULL exploded token frame and ran an eager count()
     # job just to embed n_total as a literal — a blocking driver job plus an
     # O(corpus-tokens) cache (far bigger than the corpus at scale). The
@@ -832,7 +832,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_tokens"),
             F.sum(F.coalesce(F.col("_in_vocab"), F.lit(0))).alias("in_vocab"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             (
                 F.lit(1000000).cast("long")
                 - F.expr(
@@ -996,7 +996,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = vec_ranked.withColumnRenamed("doc_id", "v_id")
     fused = b.join(v, b["b_id"] == v["v_id"], "full_outer").select(
         F.coalesce(F.col("b_id"), F.col("v_id")).alias("doc_id"),
-        # exact integer-nano fusion (r14 no-bar tie sweep): 1/(K+rank) is a
+        # exact integer-nano fusion: 1/(K+rank) is a
         # rational with a small data-dependent denominator — the classic tie
         # shape — so each term ships as a truncating nano quotient and the
         # top-k orders by exact integers
@@ -1059,7 +1059,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_sent.alias("n_sentences"),
         n_syll.alias("n_syllables"),
     )
-    # exact integer-micro Flesch (r14 no-bar tie sweep): rational
+    # exact integer-micro Flesch: rational
     # coefficients scale to exact micro integers, the two word/sentence
     # ratios ship as truncating BIGINT division
     flesch = F.expr(
@@ -1100,7 +1100,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(ws).cast("bigint").alias("ws_tokens"),
             F.sum(bpe).cast("bigint").alias("bpe_ish_tokens"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 f"(sum(size(regexp_extract_all(text, '{BPE_ISH_PATTERN}', 0)))"
                 " * CAST(1000000 AS BIGINT))"
@@ -1137,7 +1137,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_types"),
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(size(array_distinct(split(lower(text), ' '))) * CAST(1000000 AS BIGINT))"
             " div size(split(lower(text), ' '))"
@@ -1188,7 +1188,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "labeled_lang",
         "detected_lang",
         "n",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n * CAST(1000000 AS BIGINT))"
             " div (sum(n) OVER (PARTITION BY labeled_lang))"
@@ -1247,7 +1247,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         counts.select(
             "w1", "w2", "n",
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 "(n * CAST(1000000 AS BIGINT))"
                 " div (sum(n) OVER (PARTITION BY w1))"
@@ -1359,7 +1359,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(curve.sparkSession.range(1).select(ks).select("vocab_size")))
         .groupBy("vocab_size")
         .agg(
-            # exact integer-micro (r14 no-bar tie sweep): constant
+            # exact integer-micro: constant
             # denominator per group, so max of truncs == trunc of max
             F.expr(
                 "(max(CASE WHEN r <= vocab_size THEN cum_f END)"
@@ -1384,7 +1384,7 @@ _ZRATIO_MAX_CEIL = 1.2
 @register(
     "text_compression_ratio",
     # zlib has no DuckDB twin, so the driver-checked output is the sketch
-    # pattern (VERDICT r5 item 6 / r7 item 4): exact SQL-computable columns
+    # pattern: exact SQL-computable columns
     # (doc/byte counts per source) plus the compression signal's guarantee
     # bands as constant-true booleans. Determinism + separation (repetitive
     # text compresses far below random text) stay pinned in
@@ -1552,7 +1552,7 @@ def text_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_distinct_grams",
         "n_dup_grams",
-        # exact integer-micro (r14 no-bar tie sweep)
+        # exact integer-micro
         F.expr(
             "(n_dup_grams * CAST(1000000 AS BIGINT)) div n_distinct_grams"
         ).alias("dup_frac_micro"),
@@ -1625,7 +1625,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     ).select("p.w1", "p.w2")
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c12"))
-    # NOTE (r16): deriving these totals from uni/big (sum(c) / sum(c12))
+    # NOTE: deriving these totals from uni/big (sum(c) / sum(c12))
     # to share the keyed-agg exchanges was tried and measured WORSE
     # (0.89 -> 0.99 best-of-5 in-session A/B; exchange reuse never fired,
     # and the keyed-agg subtree costs more than the plain count) — the

@@ -202,7 +202,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.year("o_orderdate").alias("order_year"), "supp_nation", _rev_col().alias("rev"))
     )
     nation_rev = F.sum(F.when(F.col("supp_nation") == "NATION_3", F.col("rev")).otherwise(F.lit(0)))
-    # exact integer-micro share (r14 no-bar tie sweep): DECIMAL-exact 1e-4
+    # exact integer-micro share: DECIMAL-exact 1e-4
     # grid revenue sums, one truncating DECIMAL(38) quotient
     return flows.groupBy("order_year").agg(
         (nation_rev * 10000).cast("decimal(38,0)").alias("_nn"),
@@ -303,7 +303,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy(F.month("l_shipdate").alias("ship_month"))
-        # exact integer-micro percentage (r14 no-bar tie sweep): both
+        # exact integer-micro percentage: both
         # revenue sums are DECIMAL-exact on the 1e-4 grid, so the share
         # ships as one truncating DECIMAL(38) quotient (x1e8 = % in micro)
         .agg(

@@ -79,7 +79,7 @@ def read_state_version(spark: SparkSession, base: str, upto: int | None = None) 
     instead of one mutable directory. Crash-replaying micro-batch N rebuilds
     v{N} from v{N-1} plus the checkpoint-replayed (identical) batch data —
     an idempotent overwrite, not a double-merge of non-idempotent counters
-    (ADVICE r4). Passing upto=batch_id also hides a half-written v{N} from
+   . Passing upto=batch_id also hides a half-written v{N} from
     the replay itself. Existence is probed through the Hadoop FileSystem
     API, so a transient read failure propagates and Structured Streaming
     retries the batch, rather than being mistaken for "first batch" and
@@ -221,7 +221,7 @@ def _staged_stream(
     sink_path).
 
     ``max_files_per_trigger`` is a READ option (on the writer it is a
-    silent no-op — ADVICE r9): when set, the input is staged as ``n_files``
+    silent no-op): when set, the input is staged as ``n_files``
     parquet files and the reader caps each micro-batch at that many files,
     so ``trigger(availableNow=True)`` yields a real multi-batch replay and
     incremental state-merge paths actually merge across batches. Callers
@@ -1164,7 +1164,7 @@ def run_streaming_jdbc_upsert(
     reference's bulk-load path (`/root/reference/PostgresDatabase.py:80-104`
     loads full tables; here only changed keys move per trigger).
 
-    The DELETE is staged, never driver-side (VERDICT r4 item 7): the batch's
+    The DELETE is staged, never driver-side: the batch's
     distinct keys are written executor-side to a `{table}_stage_keys` JDBC
     table, then one `DELETE ... WHERE user_id IN (SELECT ...)` runs against
     the stage — batch keys never materialize on the driver, so a fact-sized
@@ -1221,9 +1221,8 @@ def run_streaming_jdbc_upsert(
 
 
 # Default CMS geometry — the SINGLE source for the pipeline defaults AND the
-# eps band in stream_countmin_heavy_hitters' guarantee booleans (ADVICE r6:
-# the 2048 literal was duplicated there; editing either side alone silently
-# diverged the checked band from the sketch actually built).
+# eps band in stream_countmin_heavy_hitters' guarantee booleans, so the
+# checked band cannot diverge from the sketch actually built.
 CMS_DEPTH = 4
 CMS_WIDTH = 2048
 
@@ -1440,7 +1439,7 @@ def run_streaming_quantile_digest(
     Each merge adds at most 1/B rank error, so a replay in k chunks is
     bounded by ~k/B + the build sketch's 1/accuracy. The staging here is 4
     files read 2-per-trigger (reader-side maxFilesPerTrigger — the old
-    writer-side option was a no-op; ADVICE r10) = a 2-chunk replay: with
+    writer-side option is a no-op) = a 2-chunk replay: with
     B=256 that bounds rank error at ~2/256 + 1e-4 ≈ 0.008; tests pin the
     looser 0.05 against exact quantiles so a re-chunked replay (more
     triggers, k up to ~12) still passes without re-deriving the bound.
@@ -1636,8 +1635,7 @@ def run_streaming_neardup(
     )
 
     scratch = scratch_dir or f"/tmp/diaps_sneardup_{uuid.uuid4().hex[:8]}"
-    # Ordered multi-batch replay (ADVICE r9 made replays genuinely
-    # multi-batch): earlier-batch-wins composes to the one-shot global
+    # Ordered multi-batch replay: earlier-batch-wins composes to the one-shot global
     # min-id survivor rule only when arrival follows id order, so the
     # stage is range-partitioned on the id with mtime-forced file order.
     stream, sink = _staged_stream(
@@ -1824,7 +1822,7 @@ def run_streaming_kmv_distinct(
     state = read_state_version(spark, sink).groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_sketch"), F.max("fp").alias("kth_hash")
     )
-    # exact e4-scaled KMV estimate (r14 no-bar tie sweep): (k-1)*2^32*1e4
+    # exact e4-scaled KMV estimate: (k-1)*2^32*1e4
     # div h with h = the kth hash's first 8 hex chars as a BIGINT — the
     # rational estimate ships as a truncating integer quotient
     est_e4 = F.when(
@@ -1876,7 +1874,7 @@ def run_streaming_frequent_directions(
         b = batch_df.sparkSession
         if batch_df.isEmpty():
             # _staged_stream's repartition can stage empty parquet files when
-            # the input has fewer rows than n_files (ADVICE r10): carry the
+            # the input has fewer rows than n_files: carry the
             # prior state forward unchanged rather than folding an empty
             # batch (frequent_directions raises on empty input).
             state = read_state_version(b, sink, upto=batch_id)
@@ -2044,7 +2042,7 @@ def run_streaming_bigram_lm(
             "w1",
             "w2",
             F.col("n").cast("long").alias("n"),
-            # exact integer-micro (r14 no-bar tie sweep)
+            # exact integer-micro
             F.expr(
                 "(CAST(n AS BIGINT) * 1000000)"
                 " div (sum(CAST(n AS BIGINT)) OVER (PARTITION BY w1))"

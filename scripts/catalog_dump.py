@@ -33,8 +33,7 @@ def render() -> str:
     lines = [HEADER]
     lines.append(
         f"**{len(specs)} queries — {n_oracled} oracle-checked, "
-        f"{len(specs) - n_oracled} rows-only.** "
-        f"The first 50 registered form the external driver's hard-signal window.\n"
+        f"{len(specs) - n_oracled} rows-only.**\n"
     )
     lines.append("Top family tags: " + ", ".join(f"`{t}` ({n})" for t, n in tag_counts.most_common(18)) + "\n")
     lines.append("| # | query | check | tags | description |")

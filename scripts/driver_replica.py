@@ -28,7 +28,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 def rendered_rows(pdf) -> list[str]:
     """Sorted, string-rendered rows (columns sorted by name) — the list-safe
-    canon the r5 judge used for value comparison; --values diffs these."""
+    canon for value comparison; --values diffs these."""
     import numpy as np
     cols = sorted(pdf.columns)
 
@@ -39,11 +39,10 @@ def rendered_rows(pdf) -> list[str]:
             f = float(v)
             if f == 0:
                 f = 0.0
-            # Round-trip precision (r12 judge gap #2): the old %.9g canon
-            # rendered only 9 SIGNIFICANT digits, so a >=1e4-magnitude value
-            # rounded to 6 decimals had its last digits invisible — the
-            # replica said MATCH on analytics_rfm_segmentation while the
-            # driver hash-failed on the 6th decimal. repr() round-trips.
+            # Round-trip precision: a %.9g canon renders only 9 SIGNIFICANT
+            # digits, so a >=1e4-magnitude value rounded to 6 decimals hides
+            # its last digits and a 6th-decimal mismatch reads as MATCH.
+            # repr() round-trips.
             return repr(f)
         if isinstance(v, (np.integer, int)) and not isinstance(v, bool):
             return str(int(v))
@@ -64,7 +63,7 @@ def value_hash(pdf) -> str:
 def row_diff(spdf, opdf, limit: int = 5) -> dict:
     """Rows present on only one side (by rendered string), up to ``limit``
     each — localizes a hash mismatch to concrete rows in seconds instead of
-    a cross-engine debugging session (VERDICT r5 item 8)."""
+    a cross-engine debugging session."""
     from collections import Counter
 
     sp, op = Counter(rendered_rows(spdf)), Counter(rendered_rows(opdf))
@@ -85,8 +84,7 @@ def dtype_parity_violations(spdf, opdf) -> list:
     The driver canonicalizes values per-cell WITHOUT the replica's %.9g float
     collapse, so DuckDB HUGEINT sums materialized by fetchdf as float64 render
     "5.0" against Spark's int64 "5" and hash-mismatch even when every value is
-    numerically identical (cost rounds 3 and 4 — see VERDICT.md r4 §What's
-    wrong). Flag the class at authoring time instead.
+    numerically identical. Flag the class at authoring time instead.
     """
     import pandas.api.types as pt
 
@@ -167,13 +165,13 @@ def main() -> int:
         ok_cols = sorted(c.lower() for c in spdf.columns) == sorted(c.lower() for c in opdf.columns)
         dtype_bad = dtype_parity_violations(spdf, opdf) if ok_cols else []
         # The driver's canon crashes sorting list/struct/map cells (pandas
-        # sort_values -> unhashable 'list'); the replica's stringifies them —
-        # r5's "replica green, driver red" class. Flag complex-typed output
+        # sort_values -> unhashable 'list'); the replica's stringifies them,
+        # so the replica would pass what the driver fails. Flag complex-typed output
         # on EITHER side as a failure so the divergence is caught here.
         complex_bad = complex_frame_columns(spdf) + [
             f"oracle:{c}" for c in complex_frame_columns(opdf)
         ]
-        # Signed-zero guard (r6's red row): the driver's repr canon renders
+        # Signed-zero guard: the driver's repr canon renders
         # -0.0 vs 0.0 as different values; this replica's norm() normalizes
         # zero, so it would stay green where the driver goes red. Flag the
         # class BEFORE the canon erases it — a -0.0 cell on either side is a

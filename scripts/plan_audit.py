@@ -4,8 +4,7 @@ that decide 100 TB behavior — shuffle (Exchange) count, join strategies,
 scan column width + pushed filters, codegen coverage, Python-eval stages.
 
 Usage:
-    python scripts/plan_audit.py                  # driver window (first 50)
-    python scripts/plan_audit.py --all            # whole catalog
+    python scripts/plan_audit.py                  # whole catalog
     python scripts/plan_audit.py --only a,b --sf-dir /root/testdata/sf0.01
 
 One JSON line per query plus a final summary. Nested loops are split by
@@ -13,7 +12,7 @@ physical shape (`broadcast_nested_loop` = BroadcastNestedLoopJoin,
 `nested_loop` = CartesianProduct) but BOTH are gated against the declared
 allowlist: Spark's JoinSelection falls back to BNLJ for any non-equi join
 it cannot plan otherwise, broadcasting the smaller side REGARDLESS of
-spark.sql.autoBroadcastJoinThreshold (ADVICE r9) — so an unbounded
+spark.sql.autoBroadcastJoinThreshold — so an unbounded
 theta-join between two large tables compiles to BNLJ, and "it took the
 broadcast shape" proves nothing about boundedness. An undeclared BNLJ
 lands in `undeclared_broadcast_nested_loop`; an undeclared Cartesian in
@@ -31,7 +30,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries where a nested-loop/cartesian shape is the DELIBERATE plan,
-# audited one by one (full-catalog sweep, round 4). Categories:
+# audited one by one (full-catalog sweep). Categories:
 # (a) broadcast SCALAR cross — a one-row aggregate (total/threshold/count)
 #     joined onto a big side; constant-size build, zero scale risk;
 # (b) broadcast BOUNDED-table cross — bands/salt range/centroids/query
@@ -67,8 +66,8 @@ DELIBERATE_NESTED_LOOP = {
     "skew_salted_join",  # salt-range replicate of the small side
     "sim_knn_join",  # broadcast query batch (bounded by construction)
     "sim_ann_join_ivf",  # n_cells centroid rows
-    # --- r10 re-adjudication (ADVICE r9: the blanket BNLJ exemption was
-    # wrong — JoinSelection falls back to BNLJ for ANY non-equi join
+    # --- BNLJ sites (a blanket BNLJ exemption would be wrong —
+    # JoinSelection falls back to BNLJ for ANY non-equi join
     # regardless of the broadcast threshold, so every BNLJ site below was
     # re-read and is declared with the bound that makes it safe) ---
     # (a) audit-form scalar crosses: crossJoin(F.broadcast(one-row agg)) —
@@ -106,45 +105,45 @@ DELIBERATE_NESTED_LOOP = {
     "stream_countmin_heavy_hitters",  # CMS audit scalars
     "stream_neardup_incremental",  # equivalence-boolean scalars
     "multimodal_phash_neardup",  # planted-recall scalars
-    "multimodal_cdc_chunks",  # planted-ledger + coverage scalars (r10)
+    "multimodal_cdc_chunks",  # planted-ledger + coverage scalars
     "agg_kmv_distinct_sketch",  # k-th-hash scalar
     "agg_kmv_set_intersection",  # one-row-per-sketch crosses
-    "agg_kmv_set_difference",  # O(groups^2) pair broadcast + audit scalars (r10)
+    "agg_kmv_set_difference",  # O(groups^2) pair broadcast + audit scalars
     "agg_hll_intersection",  # inclusion-exclusion over one-row sketches
-    "text_pmi_collocations",  # N_tok / N_big one-row scalar crosses (r10)
-    "quality_calibration_bins",  # 10-row bin-gate scalar cross (r10)
-    "quality_t_closeness_audit",  # 5-row global-distribution + 1-row total crosses (r10)
-    "sample_ab_cuped_adjustment",  # 1-row theta/lift/variance scalar crosses (r10)
-    "sim_mips_topk",  # 1-row max-norm scalar + equivalence-boolean crosses (r10)
+    "text_pmi_collocations",  # N_tok / N_big one-row scalar crosses
+    "quality_calibration_bins",  # 10-row bin-gate scalar cross
+    "quality_t_closeness_audit",  # 5-row global-distribution + 1-row total crosses
+    "sample_ab_cuped_adjustment",  # 1-row theta/lift/variance scalar crosses
+    "sim_mips_topk",  # 1-row max-norm scalar + equivalence-boolean crosses
     "sim_mips_via_ivf",  # broadcast query batch (exact ground truth) + 1-row
-    # max-norm augmentation scalar + 1-row recall-verdict cross (r11)
-    "graph_local_clustering",  # 1-row corpus-mean scalar cross (r11)
-    "temporal_decayed_engagement",  # 1-row max-ts anchor cross (r11)
-    "prep_target_encoding",  # 1-row global-prior scalar cross (r11)
-    "text_heaps_law_fit",  # 1-row max-doc-id bucket-width cross (r11)
-    "quality_js_divergence_drift",  # 1-row pooled-totals cross (r11)
-    "temporal_autocorrelation",  # 3-row lag-table broadcast cross (r10)
-    "sample_rolling_origin_cv",  # 4-row fold-bounds broadcast range join (r10)
+    # max-norm augmentation scalar + 1-row recall-verdict cross
+    "graph_local_clustering",  # 1-row corpus-mean scalar cross
+    "temporal_decayed_engagement",  # 1-row max-ts anchor cross
+    "prep_target_encoding",  # 1-row global-prior scalar cross
+    "text_heaps_law_fit",  # 1-row max-doc-id bucket-width cross
+    "quality_js_divergence_drift",  # 1-row pooled-totals cross
+    "temporal_autocorrelation",  # 3-row lag-table broadcast cross
+    "sample_rolling_origin_cv",  # 4-row fold-bounds broadcast range join
     # (b) bounded broadcast sides inside operators
     "sim_topk_lsh",  # 1-row query vector (brute_force_topk ground truth)
     "sim_topk_ivf",
     "sim_topk_lsh_indexed",
     "sim_topk_pq",
-    "sim_topk_ivfpq",  # O(k)-row recall-verdict constant-key cross (r11)
+    "sim_topk_ivfpq",  # O(k)-row recall-verdict constant-key cross
     "sim_retrieval_ndcg_mrr",  # broadcast %100 query batch (exact ground
-    # truth all-pairs) + 1-row per-path nDCG/MRR verdict crosses (r12)
+    # truth all-pairs) + 1-row per-path nDCG/MRR verdict crosses
     "sim_ivfpq_upsert_audit",  # 1-row query vector + 1-row accounting /
-    # self-hit / recall verdict crosses (r12)
+    # self-hit / recall verdict crosses
     "sim_ivfpq_delete_audit",  # 1-row query vector + 1-row tombstone-
-    # accounting / exclusion / recall verdict crosses (r13)
+    # accounting / exclusion / recall verdict crosses
     "sim_ivfpq_tuning_frontier",  # broadcast %100 query batch inside the
-    # shared exact ground truth; per-arm 1-row recall aggregates (r13)
+    # shared exact ground truth; per-arm 1-row recall aggregates
     "sim_rerank_eval",  # broadcast %100 query batch (ground truth) +
-    # 2-row arms literal x O(|Q|) idcg cross + 1-row verdict crosses (r13)
+    # 2-row arms literal x O(|Q|) idcg cross + 1-row verdict crosses
     "sim_ivfpq_compact_audit",  # 1-row query vector + 1-row accounting /
-    # probe-equality / recall verdict crosses (r14)
+    # probe-equality / recall verdict crosses
     "sim_model_rerank_eval",  # broadcast %100 query batch (exact model
-    # ground truth) + 1-row recall / slot-parity verdict crosses (r14)
+    # ground truth) + 1-row recall / slot-parity verdict crosses
     "sim_ann_recall_audit",  # query-batch crosses in the exact ground truth
     "sim_hard_negatives",  # broadcast anchor/positive batch
     "sim_sample_diversity",  # broadcast k-row sample
@@ -180,7 +179,6 @@ def audit_plan(plan: str) -> dict:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--all", action="store_true")
     ap.add_argument("--only", default=None)
     ap.add_argument("--fail-on", default=None, choices=[None, "cartesian"])
     args = ap.parse_args()
@@ -190,7 +188,7 @@ def main() -> int:
 
     spark = get_spark(app_name="plan-audit")
     specs = catalog.all_specs()
-    names = list(specs) if args.all else list(specs)[:50]
+    names = list(specs)
     if args.only:
         names = [n for n in args.only.split(",") if n in specs]
 

@@ -35,8 +35,8 @@ WHITELIST: dict[str, dict[str, str]] = {
     "join_cross": {"CARTESIAN": "deliberate 5x5 region cartesian (constant)"},
     "text_unigram_logprob": {
         "GLOBAL_WINDOW": "corpus-total sum over the O(vocab) term-frequency "
-        "aggregate (the text_zipf_fit class) — replaces r15's O(corpus-"
-        "tokens) persisted token frame + eager count job (r16)"
+        "aggregate (the text_zipf_fit class) — instead of an O(corpus-"
+        "tokens) persisted token frame + eager count job"
     },
     "sim_rerank_eval": {
         "CARTESIAN": "2-row arms literal x O(|Q|) idcg rows and a 1-row "

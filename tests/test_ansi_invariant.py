@@ -1,7 +1,7 @@
 """ANSI-mode invariance: the engine must behave identically under
 ``spark.sql.ansi.enabled`` true (the Spark 4 / driver default) and false.
 
-The round-3 regression class this pins: an expression relying on silent
+The regression class this pins: an expression relying on silent
 wrap-around arithmetic (``x*31+y`` on longs) passes under a permissive
 session and throws ARITHMETIC_OVERFLOW under any stock ANSI deployment.
 Every hash/mix/pack expression in the engine must therefore be

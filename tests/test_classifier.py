@@ -95,7 +95,7 @@ def test_determinism_same_data(feats):
 
 
 def test_cg_solver_wide_feature_space(labeled_docs):
-    """The large-D scale path (VERDICT r8 item 8): above GRAM_DIM_CAP the
+    """The large-D scale path: above GRAM_DIM_CAP the
     auto solver must switch to Hessian-free truncated Newton (PCG — O(D)
     shuffle keys per Hessian-vector job, no D^2 Gram pull) and still learn
     the separable marker label at Newton-like convergence under the same

@@ -20,6 +20,7 @@ from data_integration_and_processing_spark.operators.curation import (
     pack_sequences,
     repetition_metrics,
 )
+from data_integration_and_processing_spark.queries.catalog import all_specs
 
 BUDGET = 50
 
@@ -179,3 +180,117 @@ def test_length_bucketed_batches_are_full_and_complete(spark, sf_dir):
         assert n <= cap_rows
         if bid < max_batch[cap]:
             assert n == cap_rows, f"non-final batch {cap}/{bid} underfull: {n} < {cap_rows}"
+
+
+def test_dup_ngram_bounds_and_short_doc_exclusion(spark, sf_dir):
+    rows = all_specs()["text_duplicate_ngram_spans"].spark(spark, sf_dir).collect()
+    assert rows, "expected some documents with >= 8 words"
+    for r in rows:
+        assert 0 <= r["n_dup_grams"] <= r["n_distinct_grams"]
+        assert 0 <= r["dup_frac_micro"] <= 1_000_000
+    # every included doc really has >= 8 words
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    n_long = d.filter(F.size(F.split(F.lower("text"), " ")) >= 8).count()
+    assert len(rows) == n_long
+
+
+def test_dup_ngram_detects_injected_duplicate(spark, sf_dir):
+    """Two synthetic docs sharing an 8-word span must both report dup_frac
+    > 0; a doc of unique words reports 0."""
+    from data_integration_and_processing_spark.queries.text_queries import (
+        text_duplicate_ngram_spans,
+    )
+    import os
+    import shutil
+    import uuid
+
+    scratch = f"/tmp/diaps_test_ngram_{uuid.uuid4().hex[:8]}"
+    os.makedirs(scratch, exist_ok=True)
+    shared = "alpha beta gamma delta epsilon zeta eta theta"
+    docs = spark.createDataFrame(
+        [
+            (1, f"{shared} one two three", "en", "s", 1),
+            (2, f"prefix words here {shared}", "en", "s", 1),
+            (3, "only unique tokens appear in this third document row", "en", "s", 1),
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.write.mode("overwrite").parquet(f"{scratch}/documents.parquet")
+    try:
+        out = {r["doc_id"]: r for r in text_duplicate_ngram_spans(spark, scratch).collect()}
+        assert out[1]["n_dup_grams"] >= 1 and out[2]["n_dup_grams"] >= 1
+        assert out[3]["n_dup_grams"] == 0 and out[3]["dup_frac_micro"] == 0
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_perplexity_filter_ranks_a_rare_transition_doc_worst(spark):
+    """A corpus of one repeated fluent sentence plus one doc that reuses the
+    SAME words in scrambled order: its transitions are rare against the
+    common contexts, so it must top the kill list. (Scrambled-common-words,
+    not novel words: under a self-trained unsmoothed MLE a doc of singleton
+    contexts scores p=1 per bigram — 'perfectly predictable' — which is the
+    known self-scoring corner, not a fluency signal.)"""
+    from data_integration_and_processing_spark.queries.text_queries import (
+        text_perplexity_filter,
+    )
+
+    fluent = "the quick brown fox jumps over the lazy dog"
+    rows = [(i, fluent) for i in range(50)]
+    rows.append((99, "dog the fox lazy quick jumps brown over the"))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    import data_integration_and_processing_spark.queries.text_queries as tx
+
+    orig = tx.load_table
+    try:
+        tx.load_table = lambda s, d, t: df
+        out = text_perplexity_filter(spark, "ignored").collect()
+    finally:
+        tx.load_table = orig
+    # worst doc first; the gibberish doc's bigrams are singletons among a
+    # corpus of repeated transitions -> max cross-entropy
+    assert out[0]["doc_id"] == 99
+    assert out[0]["cross_entropy"] > out[1]["cross_entropy"]
+    # the fluent docs all share identical entropy (identical text)
+    fluent_h = {r["cross_entropy"] for r in out[1:]}
+    assert len(fluent_h) == 1
+
+
+def test_heaps_fit_beta_in_range_and_points_fixed(spark, sf_dir):
+    from data_integration_and_processing_spark.queries.text_queries import (
+        text_heaps_law_fit,
+    )
+
+    r = text_heaps_law_fit(spark, sf_dir).collect()[0]
+    assert r["n_points"] == 20
+    assert 0.0 < r["heaps_beta"] <= 1.0 + 1e-9
+    assert r["r2"] > 0.9  # log-log growth is near-linear on the fixture
+
+
+def test_heaps_fit_ignores_sub_trigram_docs(spark):
+    """Docs with <3 words must contribute nothing (not crash): Spark's
+    F.sequence(1, size-2) is DESCENDING for size<3 and element_at(ws, 0)
+    throws INVALID_INDEX_OF_ZERO without the size guard, while the oracle's
+    generate_series is simply empty — both engines must agree on 'nothing'."""
+    from data_integration_and_processing_spark.queries.text_queries import (
+        text_heaps_law_fit,
+    )
+
+    # distinct texts so vocab grows (constant vocab would zero var(y) and
+    # trip ANSI divide-by-zero inside r2 — a fixture artifact, not the guard)
+    rows = [(i, f"w{i}a w{i}b w{i}c w{i}d w{i}e") for i in range(40)]
+    rows += [(40, "one"), (41, "two words"), (42, "")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    import data_integration_and_processing_spark.queries.text_queries as tx
+
+    orig = tx.load_table
+    try:
+        tx.load_table = lambda s, d, t: df
+        r = text_heaps_law_fit(spark, "ignored").collect()[0]
+    finally:
+        tx.load_table = orig
+    # fit still produced over the trigram-bearing docs only
+    assert r["n_points"] >= 1
+    assert r["heaps_beta"] is not None

@@ -125,8 +125,8 @@ def test_end2end_dedup_survivor_properties(spark, sf_dir):
 
 def test_salted_agg_refuses_unidentified_combinators(spark, sf_dir):
     """An aggregate the introspection can't positively classify must raise
-    (ADVICE r1: defaulting to sum silently mis-combines min/max partials
-    when name inference fails) — the tuple form is the escape hatch."""
+    (defaulting to sum would silently mis-combine min/max partials when
+    name inference fails) — the tuple form is the escape hatch."""
     import pytest as _pytest
 
     from data_integration_and_processing_spark.operators.skew import salted_agg
@@ -149,7 +149,7 @@ def test_salted_agg_refuses_unidentified_combinators(spark, sf_dir):
 
 def test_recall_caps_are_observable(spark):
     """max_bucket / max_shingle_df recall losses must be measurable, not
-    silent (VERDICT r1 item 7). Partial loss (the production case) reports
+    silent. Partial loss (the production case) reports
     through the zero-cost Observation; a fully-capped run falls back to the
     explicit bucket_cap_report audit (AQE prunes CollectMetrics when the
     whole result collapses to empty)."""
@@ -209,8 +209,8 @@ def test_recall_caps_are_observable(spark):
 
 def test_dedup_cache_handle_lifecycle(spark, sf_dir):
     """The hashed-shingle persist must be releasable: cache_handle exposes
-    it, and minhash_lsh_dedup drops it internally (ADVICE r1: caches
-    accumulated across a long session until broadcast OOM)."""
+    it, and minhash_lsh_dedup drops it internally (otherwise caches
+    accumulate across a long session until broadcast OOM)."""
     from data_integration_and_processing_spark.operators.dedup import (
         minhash_lsh_dedup,
         minhash_lsh_pairs,
@@ -335,8 +335,8 @@ def test_minhash_calibration_within_binomial_bound(spark, sf_dir):
     sf0.01: 0.030-0.073 across bands 6-9.
 
     Reads the per-band table (dedup_minhash_calibration_raw) directly: the
-    registered catalog entry is the 1-row audit summary since r8 and no
-    longer carries n_pairs/avg_abs_err columns."""
+    registered catalog entry is the 1-row audit summary and does not
+    carry n_pairs/avg_abs_err columns."""
     from data_integration_and_processing_spark.queries.dedup_queries import (
         dedup_minhash_calibration_raw,
     )

@@ -184,7 +184,7 @@ def test_read_excel_sheet_selection_errors(spark, tmp_path):
 def test_xlsx_writer_escapes_xml_specials(tmp_path):
     """& < > " in cell text or the sheet name must survive a write/read
     round-trip — the hand-rolled XML templates escape on write and
-    ElementTree unescapes on read (ADVICE r4: unescaped values wrote
+    ElementTree unescapes on read (unescaped values would write a
     malformed sharedStrings.xml)."""
     from data_integration_and_processing_spark.sources.xlsx import read_xlsx_rows
 

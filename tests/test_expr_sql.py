@@ -1,8 +1,8 @@
 """Bit-exactness of the SQL-string literal-array builder vs F.lit.
 
-The r15 optimization replaces per-element ``F.lit(float(x))`` construction
-(one py4j round-trip each) with one parsed SQL string; these tests pin the
-property the swap relies on: repr() round-trips every binary64, and Spark's
+The builder emits one parsed SQL string instead of per-element
+``F.lit(float(x))`` construction (one py4j round-trip each); these tests pin
+the property that relies on: repr() round-trips every binary64, and Spark's
 ``...D`` literal parse returns exactly that double.
 """
 

@@ -1,4 +1,4 @@
-"""LIVE JDBC round trips against embedded Apache Derby (VERDICT r1 item 4).
+"""LIVE JDBC round trips against embedded Apache Derby.
 
 The reference's modus operandi is JDBC in and out
 (/root/reference/PostgresDatabase.py:146-147,

@@ -134,7 +134,7 @@ class TestFrequentDirections:
         """Forced two-level fold (threshold below the partition count): the
         worst-case guarantees must hold through the executor-side group
         merge, and n / ||A||_F^2 — exact sums — must equal the flat fold's
-        (VERDICT r10 item 4: the driver folds ~sqrt(P) survivors, not P)."""
+        survivors, not P)."""
         import numpy as np
 
         from data_integration_and_processing_spark.operators.linalg import (
@@ -170,9 +170,9 @@ class TestFrequentDirections:
         np.testing.assert_array_equal(a, b)
 
     def test_streaming_fd_survives_input_smaller_than_staged_files(self, spark, tmp_path):
-        """ADVICE r10: _staged_stream's repartition(4) can stage empty
-        parquet files when the input has fewer rows than n_files, which
-        made run_streaming_frequent_directions raise inside foreachBatch
+        """_staged_stream's repartition(4) can stage empty parquet files
+        when the input has fewer rows than n_files, which would make
+        run_streaming_frequent_directions raise inside foreachBatch
         (frequent_directions rejects empty input). The land() guard must
         carry prior state forward instead; exact scalars still fold right."""
         import numpy as np

@@ -12,6 +12,7 @@ from data_integration_and_processing_spark.operators.multimodal import (
     perceptual_hash_signatures,
     phash_neardup_pairs,
 )
+from data_integration_and_processing_spark.queries.catalog import all_specs
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -84,3 +85,13 @@ def test_decode_payload_gate():
         )
         img = decode_payload(png, "image/png")
         assert img.size == (1, 1)
+
+
+def test_bytes_dedup_ledger_arithmetic(spark, sf_dir):
+    rows = all_specs()["multimodal_dedup_exact_bytes"].spark(spark, sf_dir).collect()
+    assert rows, "injected byte-identical copies must produce dup groups"
+    for r in rows:
+        assert r["n_copies"] >= 2
+        assert r["bytes_saved"] == (r["n_copies"] - 1) * r["n_bytes"]
+        # keeper is the original, not the +100000 re-ingest
+        assert r["keeper_doc_id"] < 100000

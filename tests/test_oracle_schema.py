@@ -1,8 +1,7 @@
 """Hard gate: no oracled query may output a list/struct/map column.
 
-The external driver's canonicalizer sorts results with pandas sort_values,
-which crashes on list-typed cells (VERDICT r5: pipeline_entity_resolution,
-sim_quantize_int8, latent agg_sorted_collect). Serialize array outputs to
+A pandas canonicalizer sorts results with sort_values, which crashes on
+list-typed cells. Serialize array outputs to
 strings (array_to_string / F.array_join) in BOTH projections instead. This
 static DuckDB DESCRIBE sweep catches the whole class at authoring time with
 no Spark session.
@@ -43,7 +42,7 @@ def test_is_complex_type_markers():
     assert is_complex_type("TINYINT[3]")
     assert is_complex_type("STRUCT(a INTEGER)")
     assert is_complex_type("MAP(VARCHAR, BIGINT)")
-    # dtype-divergence classes (r3/r4): uncast DuckDB aggregates
+    # dtype-divergence classes: uncast DuckDB aggregates
     assert is_complex_type("HUGEINT")
     assert is_complex_type("DECIMAL(12,2)")
     assert not is_complex_type("VARCHAR")
@@ -54,7 +53,7 @@ def test_is_complex_type_markers():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
 def test_no_negative_zero_in_any_oracle_output():
-    """Fourth canon-divergence class (VERDICT r6): DuckDB round() keeps the
+    """Fourth canon-divergence class: DuckDB round() keeps the
     IEEE sign bit, Spark F.round strips it, and the driver's repr canon
     renders -0.0 vs 0.0 differently. Execute every oracle at sf0.001 and
     reject any signed-zero cell — normalize with `round(...) + 0`."""
@@ -70,7 +69,7 @@ def test_no_negative_zero_in_any_oracle_output():
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
 def test_negative_zero_sweep_flags_a_probe():
     # the DOUBLE path is the one that keeps the sign bit (DECIMAL round
-    # normalizes it) — exactly the r6 temporal_event_deltas shape
+    # normalizes it) — the temporal_event_deltas shape
     bad = negative_zero_oracle_outputs(
         {
             "probe": "SELECT round(CAST(-0.0000001 AS DOUBLE), 3) AS z",
@@ -90,12 +89,11 @@ def test_negative_zero_frame_columns_detects_sign_bit():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
 def test_no_decimal_percentile_orderings_in_any_oracle():
-    """Fifth canon-divergence class (VERDICT r10: analytics_rfm_segmentation):
+    """Fifth canon-divergence class:
     DuckDB percentile_cont over a DECIMAL ORDER BY returns the interpolated
     boundary rounded to the decimal's scale (rounding mode build-dependent)
     while Spark interpolates in DOUBLE — strict comparisons at the grain flip
-    between engines. r11 widened the scope (VERDICT r11 item 2): INTEGER/
-    BIGINT orderings round identically under an input-typed build, so every
+    between engines. INTEGER/BIGINT orderings round identically under an input-typed build, so every
     percentile site's ORDER BY expression must now probe to DOUBLE/FLOAT
     (allowlist, not blocklist); fix = CAST(... AS DOUBLE) on BOTH sides.
     ``__unparsed__`` entries mean the probe could not resolve a site's CTE
@@ -111,7 +109,7 @@ def test_no_decimal_percentile_orderings_in_any_oracle():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
 def test_decimal_percentile_probe_flags_the_rfm_shape():
-    """Seeded negative: the exact r10 red shape (DECIMAL monetary inside a
+    """Seeded negative: the rfm shape (DECIMAL monetary inside a
     CTE, percentile in a second CTE) must be flagged, and the DOUBLE-cast
     fix must clear it — proving the probe resolves CTE context correctly."""
     bad_sql = """
@@ -123,7 +121,7 @@ def test_decimal_percentile_probe_flags_the_rfm_shape():
     FROM cust
     """
     fixed_sql = bad_sql.replace("ORDER BY monetary", "ORDER BY CAST(monetary AS DOUBLE)")
-    # the r11 recurrence shape: BIGINT orderings (date_diff / count(*))
+    # BIGINT orderings (date_diff / count(*))
     # must ALSO be flagged — the widened allowlist admits only DOUBLE/FLOAT
     bigint_sql = """
     WITH cust AS (SELECT o_custkey, count(*) AS frequency FROM orders GROUP BY o_custkey)
@@ -139,9 +137,9 @@ def test_decimal_percentile_probe_flags_the_rfm_shape():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
 def test_no_new_date_output_columns_in_any_oracle():
-    """Sixth class (r10 memory note): bare DATE output columns materialize as
+    """Sixth class: bare DATE output columns materialize as
     datetime.date vs datetime64 between engines under some canons. Existing
-    DATE emitters are driver-green and allowlisted; NEW oracles must cast
+    DATE emitters hash-match and are allowlisted; NEW oracles must cast
     DATE outputs to VARCHAR on both sides."""
     catalog._load()
     oracles = {s.name: s.oracle for s in catalog._REGISTRY.values() if s.oracle is not None}
@@ -173,36 +171,12 @@ def test_sweep_flags_an_array_output():
     assert "probe" in bad and any("names" in c for c in bad["probe"])
 
 
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
-def test_window_preflight_excludes_complex_output(monkeypatch):
-    """driver_window() must drop a hypothetical array-output query from the
-    candidate pool (fail-safe twin of the hard gate above)."""
-    from data_integration_and_processing_spark.queries import oracle_lint
-
-    catalog._load()
-    monkeypatch.setattr(catalog, "_WINDOW_CACHE", None)
-    monkeypatch.setattr(oracle_lint, "_SWEEP_CACHE", None)
-
-    def fake_sweep(oracles):
-        # pretend the first non-pinned candidate has an array output
-        pinned = set(catalog._ALWAYS + catalog._PINNED)
-        victim = next(n for n in sorted(oracles) if n not in pinned)
-        fake_sweep.victim = victim
-        return {victim: ["x BIGINT[]"]}
-
-    monkeypatch.setattr(oracle_lint, "cached_sweep", fake_sweep)
-    win = catalog.driver_window()
-    assert fake_sweep.victim not in win
-    # restore the real cache for later tests
-    monkeypatch.setattr(catalog, "_WINDOW_CACHE", None)
-
-
 ROUND_SF_DIR = os.environ.get("SPARK_GRAFT_ROUND_LINT_SF_DIR", "/root/testdata/sf0.01")
 
 
 @pytest.mark.skipif(not os.path.isdir(ROUND_SF_DIR), reason="testdata not present")
 def test_no_round_tie_risk_in_any_oracle():
-    """Fifth canon-divergence class (VERDICT r12, the 3-round rfm red):
+    """Fifth canon-divergence class:
     round(<double expr>, k) on a hashed column diverges between engines when
     the exact value lands on a round-half tie at decimal k+1 (Spark HALF_UP
     on the decimal expansion vs DuckDB binary rounding). Flag criterion is
@@ -233,7 +207,7 @@ def test_round_tie_sweep_flags_a_probe():
         {
             # the rfm shape: >=1e4-magnitude money quotient rounded at 6
             "probe": "SELECT round(68570553.99 / 32, 6) AS avg_monetary",
-            # r14 strengthening (temporal_stl_lite live tie): a rational
+            # the temporal_stl_lite shape: a rational
             # quotient is flagged at ANY magnitude — no bar
             "small": "SELECT round(1.0 / 3, 6) AS tiny",
             # ... but a site whose value passes through an irrationalizing

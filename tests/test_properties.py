@@ -101,7 +101,7 @@ def test_hash_bucket_sql_twin_matches_spark(spark, ddb):
 
 
 def test_integral_div_twin_matches_duckdb(spark, ddb):
-    """The r13 tie-sweep's load-bearing cross-engine assumption: Spark's
+    """The round-tie lint's load-bearing cross-engine assumption: Spark's
     `a div b` and DuckDB's BIGINT `a // b` are BOTH truncation toward zero
     for every sign combination (NOT floor division — they agree on -7//2 =
     -3). Every integer-micro/nano quotient contract in the catalog rests on
@@ -139,7 +139,7 @@ def test_integral_div_twin_matches_duckdb(spark, ddb):
 
 
 def test_micro_quotient_idioms_match_duckdb(spark, ddb):
-    """The r14 no-bar sweep's conversion idioms, pinned as cross-engine
+    """The exact integer-micro conversion idioms, pinned as cross-engine
     properties over arbitrary data (not just the fixtures the replica
     samples):
 

@@ -15,6 +15,7 @@ from data_integration_and_processing_spark.operators.sampling import (
     stratified_sample,
     train_test_split,
 )
+from data_integration_and_processing_spark.queries.catalog import all_specs
 from data_integration_and_processing_spark.sources.tables import load_table
 
 
@@ -168,3 +169,116 @@ def test_hash_bucket_column_seed_matches_int_seed(spark):
         a = df.select(hash_bucket(["k"], 64, seed=seed).alias("b")).collect()
         b = df.select(hash_bucket(["k"], 64, seed=F.lit(seed)).alias("b")).collect()
         assert [r["b"] for r in a] == [r["b"] for r in b], seed
+
+
+def test_kcenter_shape_and_determinism(spark, sf_dir):
+    from data_integration_and_processing_spark.queries.sampling_queries import (
+        _KC_K,
+        sample_coreset_kcenter,
+    )
+
+    a = sample_coreset_kcenter(spark, sf_dir).collect()
+    b = sample_coreset_kcenter(spark, sf_dir).collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    assert len(a) == _KC_K
+    assert [r["rank"] for r in a] == list(range(1, _KC_K + 1))
+    assert len({r["vec_id"] for r in a}) == _KC_K
+    # greedy max-min distances are non-increasing by construction
+    dists = [r["dist2"] for r in a[1:]]
+    assert all(x is not None and x >= 0 for x in dists)
+    assert all(dists[i] >= dists[i + 1] for i in range(len(dists) - 1))
+
+
+def test_kcenter_covers_better_than_prefix_of_ids(spark, sf_dir):
+    """The k-center set's covering radius (max over points of distance to
+    nearest center) must beat the naive first-k-ids baseline — the point of
+    diverse selection."""
+    from data_integration_and_processing_spark.queries.sampling_queries import (
+        _KC_K,
+        sample_coreset_kcenter,
+    )
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+
+    def radius(center_ids: list[int]) -> float:
+        centers = e.filter(F.col("vec_id").isin(center_ids)).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
+        )
+        d2 = F.aggregate(
+            F.zip_with(
+                F.col("embedding").cast("array<double>"),
+                F.col("cemb").cast("array<double>"),
+                lambda x, y: (x - y) * (x - y),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        return (
+            e.crossJoin(F.broadcast(centers))
+            .select("vec_id", d2.alias("d2"))
+            .groupBy("vec_id")
+            .agg(F.min("d2").alias("md"))
+            .agg(F.max("md"))
+            .collect()[0][0]
+        )
+
+    picked = [r["vec_id"] for r in sample_coreset_kcenter(spark, sf_dir).collect()]
+    first_ids = [r["vec_id"] for r in e.orderBy("vec_id").limit(_KC_K).collect()]
+    assert radius(picked) < radius(first_ids)
+
+
+def test_kfold_is_leak_proof_and_total(spark, sf_dir):
+    """Every customer's orders land in exactly one fold; folds partition all
+    orders and are roughly balanced."""
+    from pyspark.sql import functions as F
+
+    from data_integration_and_processing_spark.operators.sampling import hash_bucket
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    assigned = o.select("o_custkey", hash_bucket(["o_custkey"], 5, seed=7).alias("fold"))
+    per_cust = assigned.groupBy("o_custkey").agg(F.count_distinct("fold").alias("nf"))
+    assert per_cust.filter(F.col("nf") > 1).count() == 0
+    census = all_specs()["sample_stratified_kfold"].spark(spark, sf_dir).collect()
+    assert sum(r["n_orders"] for r in census) == o.count()
+    by_fold = {}
+    for r in census:
+        by_fold[r["fold"]] = by_fold.get(r["fold"], 0) + r["n_orders"]
+    assert set(by_fold) == set(range(5))
+    mean = sum(by_fold.values()) / 5
+    assert all(abs(v - mean) / mean < 0.25 for v in by_fold.values()), by_fold
+
+
+def test_dedup_aware_split_never_straddles_groups(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    out = all_specs()["sample_split_dedup_aware"].spark(spark, sf_dir)
+    straddle = out.groupBy("grp").agg(F.count_distinct("split").alias("ns"))
+    assert straddle.filter(F.col("ns") > 1).count() == 0
+    # every injected variant copy (id + 10000) shares its original's split
+    pairs = out.alias("a").join(
+        out.alias("b"), F.col("a.id") + 10000 == F.col("b.id")
+    )
+    assert pairs.filter(F.col("a.split") != F.col("b.split")).count() == 0
+    # rough 80/20 at the GROUP grain
+    grp = out.select("grp", "split").distinct()
+    frac = grp.filter(F.col("split") == "train").count() / grp.count()
+    assert 0.7 < frac < 0.9, frac
+
+
+def test_target_encoding_shrinks_toward_prior_for_rare_categories(spark, sf_dir):
+    """|smoothed - prior| <= |raw_mean - prior| for every category, with
+    equality only when n >> m: empirical-Bayes shrinkage direction."""
+    from data_integration_and_processing_spark.queries.sampling_queries import (
+        prep_target_encoding,
+    )
+
+    rows = prep_target_encoding(spark, sf_dir).collect()
+    assert len(rows) == 5
+    prior = rows[0]["global_prior_micro"]
+    for r in rows:
+        raw_dev = abs(r["raw_mean_micro"] - prior)
+        smooth_dev = abs(r["smoothed_enc_micro"] - prior)
+        # integer-micro outputs: 2 micro slack covers the truncating div
+        assert smooth_dev <= raw_dev + 2, r
+        # with m=100 and n in the thousands the shrink is small but real
+        assert smooth_dev < raw_dev or raw_dev <= 2, r

@@ -1,4 +1,4 @@
-"""Versioned foreachBatch state: crash-replay idempotence (ADVICE r4).
+"""Versioned foreachBatch state: crash-replay idempotence.
 
 The old single-directory read-merge-overwrite idiom double-merged
 non-idempotent counters when Structured Streaming replayed a crashed

@@ -1,4 +1,4 @@
-"""Behavioral invariants for the round-5 statistics/pipeline staples.
+"""Behavioral invariants for the statistics/pipeline staples.
 
 The oracle gate already pins value-parity with DuckDB; these tests pin the
 STATISTICS — the properties that make the numbers meaningful (A/A null
@@ -6,6 +6,8 @@ behavior, CI coverage, conservation identities, independent recomputation).
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 import pytest
@@ -95,3 +97,87 @@ def test_connected_components_labels_are_fixpoint(spark, sf_dir, specs):
     for comp, members in by_comp.items():
         assert comp == min(members)
         assert len(members) == len(set(members))
+
+
+def test_cuped_removes_perfectly_correlated_covariate(spark):
+    """When the pre-period metric IS the experiment metric, theta = 1 and
+    the CUPED-adjusted values collapse to a constant (variance -> 0) —
+    the limiting case that catches sign/centering bugs in the moment
+    arithmetic."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    rows = [(i, float(10 + (i * 37) % 13)) for i in range(200)]
+    df = spark.createDataFrame(rows, "user_id long, y double")
+    per_user = df.select("user_id", F.col("y").alias("y_pre"), "y")
+    mom = per_user.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum("y_pre").alias("sp"), F.sum("y").alias("sy"),
+        F.sum(F.col("y_pre") * F.col("y_pre")).alias("spp"),
+        F.sum(F.col("y_pre") * F.col("y")).alias("spy"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    ).first()
+    n, sp, sy, spp, spy = mom["n"], mom["sp"], mom["sy"], mom["spp"], mom["spy"]
+    theta = (spy / n - (sp / n) * (sy / n)) / (spp / n - (sp / n) * (sp / n))
+    assert math.isclose(theta, 1.0, rel_tol=1e-9)
+    mp = sp / n
+    resid = per_user.select(
+        (F.col("y") - F.lit(theta) * (F.col("y_pre") - F.lit(mp))).alias("c")
+    )
+    stats = resid.agg(F.var_pop("c").alias("v")).first()
+    assert stats["v"] < 1e-18
+
+
+def test_js_divergence_bounds_and_identity(spark):
+    """JS is 0 for identical distributions and <= ln 2 always; the registered
+    query's even/odd split of a symmetric fixture must sit near 0."""
+    from data_integration_and_processing_spark.queries.quality_queries import (
+        quality_js_divergence_drift,
+    )
+
+    rows = [(i, "a" if i % 4 < 2 else "b", 1.0) for i in range(4000)]
+    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
+
+    import data_integration_and_processing_spark.queries.quality_queries as qq
+
+    orig = qq.load_table
+    try:
+        qq.load_table = lambda s, d, t: df
+        out = quality_js_divergence_drift(spark, "ignored").collect()
+    finally:
+        qq.load_table = orig
+    js = out[0]["js_divergence"]
+    assert 0.0 <= js <= math.log(2.0) + 1e-9
+    # even/odd split of the i%4 layout gives IDENTICAL halves => JS == 0
+    assert js == 0.0
+    assert not out[0]["drift_flagged"]
+
+
+def test_correlation_matrix_detects_a_planted_linear_pair(spark):
+    """Swap the fixture for a frame where one pair is exactly linear and
+    another independent-ish: r must be 1.0 and near 0 respectively."""
+    from data_integration_and_processing_spark.queries.quality_queries import (
+        profile_numeric_correlations,
+    )
+
+    n = 5000
+    rows = [
+        (float(i % 97), 2.0 * (i % 97) + 5.0, float((i * 7919) % 101), float(i % 13))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows, "l_quantity double, l_extendedprice double, l_discount double, l_tax double"
+    )
+
+    import data_integration_and_processing_spark.queries.quality_queries as qq
+
+    orig = qq.load_table
+    try:
+        qq.load_table = lambda s, d, t: df
+        out = {(r["col_a"], r["col_b"]): r["pearson_r"]
+               for r in profile_numeric_correlations(spark, "ignored").collect()}
+    finally:
+        qq.load_table = orig
+    assert out[("l_quantity", "l_extendedprice")] == pytest.approx(1.0, abs=1e-9)
+    assert abs(out[("l_quantity", "l_discount")]) < 0.1

@@ -1,4 +1,4 @@
-"""Watermark late-data semantics, asserted by experiment (VERDICT r1 item 9).
+"""Watermark late-data semantics, asserted by experiment.
 
 Empirical note (Spark 4.1, pinned by this test): a late row that arrives in
 the SAME micro-batch in which its window is evicted still merges before the
