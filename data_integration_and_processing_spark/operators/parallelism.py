@@ -39,6 +39,12 @@ def fan_out_scan(df: DataFrame, min_factor: int = 1) -> DataFrame:
     session-cached ``load_table`` frames, so repeat queries skip the probe
     entirely. WeakKeyDictionary keys die with their frame, so a recycled
     ``id()`` can never alias a stale entry.
+
+    The memo assumes the frame's PLAN is immutable: a source that gains
+    partitions under the same frame object (files appended to a scanned
+    directory mid-session) keeps its first narrow/wide decision. A caller
+    over a mutable source must re-read it into a fresh frame after it
+    changes.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * min_factor
     need = _FAN_OUT_MEMO.get(df) if min_factor == 1 else None
@@ -50,19 +56,27 @@ def fan_out_scan(df: DataFrame, min_factor: int = 1) -> DataFrame:
 
 
 def tiny_local_df(spark, rows: list, schema) -> DataFrame:
-    """One-PARTITION local frame for O(10)-row metadata/result planes:
-    ``createDataFrame(python rows)`` parallelizes the data
-    over ``defaultParallelism`` partitions, and EVERY evaluation of the
-    frame pays one Python-worker round trip per partition — a
-    ``coalesce(1)`` on top then folds all of them into ONE task that makes
-    those round trips SEQUENTIALLY (measured 4.3-5.0s per 8-row index
-    metadata write at local[32], vs 0.15s for a single-slice write).
-    Parallelizing with ``numSlices=1`` keeps the whole frame in one
-    partition: one Python pass, no coalesce needed, identical
-    rows/schema/single-file layout."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema
+    """One-PARTITION local frame for O(10)-row metadata/result planes.
+
+    ``rows`` are positional tuples (or Rows) in ``schema`` order; ``schema``
+    is a DDL string or a ``StructType``. The rows become one Arrow table, so
+    the frame is a JVM ``LocalTableScan``: evaluating it starts no Python
+    worker, whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    ``coalesce(1)`` keeps the whole frame, empty or not, in one partition,
+    so a write lands one file. Row order, values and schema equal
+    ``createDataFrame(parallelize(rows, numSlices=1), schema)``."""
+    import pyarrow as pa  # noqa: PLC0415 — keep pyarrow off the import hot path
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema, strict=True)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, struct).coalesce(1)
 
 
 def background_materialize(build) -> "Future[DataFrame]":

@@ -1,7 +1,8 @@
 """Vector similarity search over embedding columns (north-star surface).
 
-Embeddings are plain ``array<float>`` columns; all math happens JVM-side in
-``zip_with``/``aggregate`` expressions (no Python in the row path).
+Embeddings are plain ``array<float>`` columns. Scoring (cosine, ADC
+lookups) happens JVM-side in ``zip_with``/``aggregate`` expressions; index
+encoding (PQ and IVFPQ codes) runs as Arrow-batched numpy maps.
 
 Two paths:
 - **brute-force cosine top-k** — exact baseline. Per-row map + global top-k
@@ -14,6 +15,9 @@ Two paths:
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -330,7 +334,6 @@ def ivf_topk(
     index, the build step is skipped entirely — the production call pattern
     is one build, many probes; this wrapper exists for single-shot use and
     the catalog query."""
-    import os  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     if index_path is None:
@@ -543,6 +546,138 @@ def _neardup_candidates_lsh(
 # ---------------------------------------------------------------------------
 
 
+def _arrow_matrix(vecs, dim: int | None = None) -> np.ndarray:
+    """``(rows, dim)`` float64 matrix of an Arrow list column of vectors
+    (float32 -> float64 widening is exact). Raises ``ValueError`` on a null
+    vector, a null element, ragged lengths, or a width other than ``dim``
+    when given: ``ListArray.flatten()`` drops null lists and keeps null
+    elements, so a reshape of anything but a null-free rectangle would
+    misalign every later row."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    if len(vecs) == 0:
+        return np.empty((0, dim or 0))
+    flat = vecs.flatten()
+    lengths = pc.min_max(vecs.value_lengths())
+    lo, hi = lengths["min"].as_py(), lengths["max"].as_py()
+    if vecs.null_count or flat.null_count or lo != hi or not lo or dim not in (None, lo):
+        raise ValueError(
+            f"ragged or null vectors: lengths {lo}..{hi}"
+            + ("" if dim is None else f" (index dim {dim})")
+            + f", {vecs.null_count} null vectors, {flat.null_count} null elements"
+        )
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(vecs), lo)
+
+
+def _vector_sample(
+    df: DataFrame, vec_col: str, id_col: str, cap: int, seed: int
+) -> "pa.Table":
+    """The training sample every quantizer trains on: at most ``cap``
+    vectors fetched as ONE Arrow table, ordered by
+    ``(pmod(xxhash64(id, seed), 1024), id)``. The order is total on
+    (unique) ids, so the sample and its row order are independent of input
+    partitioning. No fan_out_scan here: the per-row work is one hash and a
+    sort key, and the TakeOrdered already runs per input partition.
+    Columns: ``_sid`` (id), ``_h`` (``xxhash64(id)``) and ``_svec``."""
+    return (
+        df.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_svec"))
+        .withColumn("_b", F.pmod(F.xxhash64("_sid", F.lit(seed)), F.lit(1024)))
+        .orderBy("_b", "_sid")
+        .limit(cap)
+        .select("_sid", F.xxhash64("_sid").alias("_h"), "_svec")
+        .toArrow()
+    )
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Row-wise unit normalization; zero vectors pass through."""
+    norms = np.linalg.norm(x, axis=1)
+    return x / np.where(norms == 0.0, 1.0, norms)[:, None]
+
+
+def _unit_training_sample(
+    df: DataFrame, vec_col: str, id_col: str, cap: int, seed: int, m: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The unit-normalized :func:`_vector_sample` a PQ-family build trains
+    on, checked for what the build needs (at least one row, a width that
+    ``m`` subspaces divide), plus the permutation that re-sorts it by
+    ``(xxhash64(id), id)``: the codebook trainer's seeded kmeans++ init
+    consumes rows in that order, so a corpus within both caps trains the
+    same codebooks as a separate ``orderBy(xxhash64(id), id)`` sample."""
+    tbl = _vector_sample(df, vec_col, id_col, cap, seed)
+    sample = _unit_rows(_arrow_matrix(tbl.column("_svec")))
+    if not len(sample):
+        raise ValueError("cannot index an empty corpus")
+    if sample.shape[1] % m:
+        raise ValueError(f"dim {sample.shape[1]} not divisible by m={m}")
+    return sample, np.lexsort((tbl.column("_sid").to_numpy(), tbl.column("_h").to_numpy()))
+
+
+def _sq_dists(x: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """``(rows, centers)`` squared L2 distances, one center at a time:
+    summing the contiguous (rows, dim) difference is the same pairwise
+    reduction over the same values as summing the last axis of one
+    (rows, centers, dim) temp, at half the memory traffic."""
+    d2 = np.empty((len(x), len(centers)))
+    for c in range(len(centers)):
+        d2[:, c] = ((x - centers[c]) ** 2).sum(axis=1)
+    return d2
+
+
+def _nearest_cells(u: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """Each row's nearest coarse center; ties go to the lowest cell."""
+    return np.argmin(_sq_dists(u, centers), axis=1)
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """``(rows, m)`` int32 PQ codes of ``x`` against ``(m, codes, dsub)``
+    codebooks; ties go to the lowest code."""
+    m, dsub = len(books), x.shape[1] // len(books)
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = np.argmin(_sq_dists(x[:, j * dsub : (j + 1) * dsub], books[j]), axis=1)
+    return codes
+
+
+def _encode_vectors(
+    df: DataFrame, vec_col: str, id_col: str, centers: np.ndarray, books: np.ndarray
+) -> DataFrame:
+    """The per-row encoder every PQ-family write goes through: one
+    Arrow-batched map turns ``df``'s (id, vector) rows into
+    ``(id, codes, v, _cell)`` — unit-normalize, nearest of the FROZEN
+    ``centers``, PQ codes of the residual against the FROZEN ``books``.
+    The IVFPQ build and :func:`ivfpq_upsert` share it, so the same vector
+    gets the same cell and codes either way; a ragged, null or wrong-width
+    vector fails the task with ``ValueError`` (:func:`_arrow_matrix`)."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    dim, m = centers.shape[1], len(books)
+
+    def encode(batches):
+        for batch in batches:
+            u = _unit_rows(_arrow_matrix(batch.column("v"), dim))
+            cells = _nearest_cells(u, centers)
+            codes = _pq_codes(u - centers[cells], books)
+            offsets = pa.array(np.arange(0, codes.size + 1, m, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("id"),
+                    pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())),
+                    batch.column("v"),
+                    pa.array(cells.astype(np.int32)),
+                ],
+                names=["id", "codes", "v", "_cell"],
+            )
+
+    return df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<float>").alias("v"),
+    ).mapInArrow(encode, "id long, codes array<int>, v array<float>, _cell int")
+
+
 def _train_pq_codebooks(
     sample: np.ndarray, m: int, nbits: int, seed: int, n_iter: int = 25
 ) -> np.ndarray:
@@ -607,63 +742,20 @@ def build_pq_index(
         {path}/codebooks/part-*.parquet  (subspace, code, center array<double>)
         {path}/meta/part-*.parquet       (m, nbits, dim, seed)
 
-    Originals ride along in ``data`` for the probe's exact re-rank stage
-    (FAISS's refine pattern). At 100 TB the codes table is ~1/32 the corpus
-    — the ADC scan touches only it; originals are fetched for the tiny
-    refined candidate set.
+    Flat PQ is the IVFPQ encoder with one all-zero coarse cell, whose
+    residual is the unit vector itself. Originals ride along in ``data``
+    for the probe's exact re-rank stage (FAISS's refine pattern). At 100 TB
+    the codes table is ~1/32 the corpus — the ADC scan touches only it;
+    originals are fetched for the tiny refined candidate set.
     """
-    import pandas as pd  # noqa: PLC0415 — keep pandas off the import hot path
-
-    first = df.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("cannot index an empty corpus")
-    dim = int(first["d"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-
-    ids_vecs = fan_out_scan(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    sample_rows = (
-        ids_vecs.orderBy(F.xxhash64("id").asc(), F.col("id").asc())
-        .limit(train_cap)
-        .collect()
-    )
-    mat = np.array([np.asarray(r["v"], dtype=np.float64) for r in sample_rows])
-    norms = np.linalg.norm(mat, axis=1)
-    unit = mat / np.where(norms == 0.0, 1.0, norms)[:, None]
-    books = _train_pq_codebooks(unit, m, nbits, seed)
-    b_books = df.sparkSession.sparkContext.broadcast(books)
-    dsub = dim // m
-
-    def _encode(batches):
-        cb = b_books.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-            bn = np.linalg.norm(block, axis=1)
-            ublock = block / np.where(bn == 0.0, 1.0, bn)[:, None]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                xj = ublock[:, j * dsub : (j + 1) * dsub]
-                d2 = ((xj[:, None, :] - cb[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "codes": list(codes), "v": pdf["v"]}
-            )
-
-    encoded = ids_vecs.mapInPandas(_encode, schema="id long, codes array<int>, v array<float>")
-    encoded.write.mode("overwrite").parquet(f"{path}/data")
-    book_rows = [
-        (j, c, [float(x) for x in books[j, c]])
-        for j in range(m)
-        for c in range(books.shape[1])
-    ]
-    tiny_local_df(
-        df.sparkSession, book_rows, "subspace int, code int, center array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    tiny_local_df(
-        df.sparkSession, [(m, nbits, dim, seed)], "m int, nbits int, dim int, seed int"
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    sample, pq_order = _unit_training_sample(df, vec_col, id_col, train_cap, seed, m)
+    books = _train_pq_codebooks(sample[pq_order], m, nbits, seed)
+    dim = sample.shape[1]
+    shutil.rmtree(f"{path}/meta", ignore_errors=True)
+    _encode_vectors(fan_out_scan(df), vec_col, id_col, np.zeros((1, dim)), books).drop(
+        "_cell"
+    ).write.mode("overwrite").parquet(f"{path}/data")
+    _write_model(path, books, {"m": m, "nbits": nbits, "dim": dim, "seed": seed})
     return path
 
 
@@ -741,27 +833,13 @@ def _train_centroids(
             )
             d2 = np.minimum(d2, ((sample - centers[-1]) ** 2).sum(axis=1))
         cb = np.array(centers, dtype=np.float64)
-
-        # distances per center instead of one (n, k, dim) broadcast temp:
-        # summing axis=1 of the contiguous
-        # (n, dim) slice is the same pairwise reduction over the same
-        # values as axis=2 of the 3-d temp, so assignments (and therefore
-        # centers) are bit-identical — at ~half the memory traffic
-        def _d2_matrix(cb_: np.ndarray) -> np.ndarray:
-            d2m = np.empty((n, len(cb_)))
-            for c in range(len(cb_)):
-                d2m[:, c] = ((sample - cb_[c]) ** 2).sum(axis=1)
-            return d2m
-
         for _ in range(n_iter):
-            assign = np.argmin(_d2_matrix(cb), axis=1)
+            assign = _nearest_cells(sample, cb)
             for c in range(len(cb)):
                 members = sample[assign == c]
                 if len(members):
                     cb[c] = members.mean(axis=0)
-        inertia = float(
-            ((sample - cb[np.argmin(_d2_matrix(cb), axis=1)]) ** 2).sum()
-        )
+        inertia = float(((sample - cb[_nearest_cells(sample, cb)]) ** 2).sum())
         if len(cb) < k:
             cb = np.vstack([cb, np.repeat(cb[-1:], k - len(cb), axis=0)])
         return inertia, cb
@@ -782,51 +860,8 @@ def train_ivf_centers(
     multi-probe sweep (e.g. the recall audit's nprobe curve) trains ONCE
     and shares the centers across calls — the build-once, probe-many
     production pattern."""
-    # fetch the sample as ONE
-    # Arrow table instead of pickled Rows — the row path measured 0.18-0.7s
-    # of pure driver deserialization for the same bytes; Arrow float32 ->
-    # numpy float64 widening is exact, and the plan (and therefore the row
-    # order the trainer sees) is unchanged.
-    # No fan_out_scan here: the per-row work is one xxhash64 + a
-    # sort key — featherweight — and the orderBy(_b, _sid) total order makes
-    # the sample independent of input partitioning, so the guard's only
-    # bench-scale effect was an extra exchange stage ahead of the
-    # TakeOrdered; at production scale the scan is already wide.
-    sample_tbl = (
-        corpus
-        .select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_svec"))
-        .withColumn("_b", F.pmod(F.xxhash64("_sid", F.lit(seed)), F.lit(1024)))
-        .orderBy("_b", "_sid")
-        .limit(65536)
-        .select("_svec")
-        .toArrow()
-    )
-    vec_chunks = sample_tbl.column("_svec").combine_chunks()
-    flat = vec_chunks.flatten().to_numpy(zero_copy_only=False)
-    n_rows = len(vec_chunks)
-    # Explicit rectangularity guard: a divisibility check
-    # (len(flat) % n_rows == 0) misses ragged lengths whose total happens to
-    # divide n_rows, and ListArray.flatten() silently DROPS null entries —
-    # which can keep the total divisible while misaligning every subsequent
-    # row. Reshape only when there are no null rows and every list has one
-    # identical length; anything else takes the row-loop fallback.
-    lengths = (
-        vec_chunks.value_lengths().unique().to_pylist()
-        if n_rows
-        else []
-    )
-    if n_rows and vec_chunks.null_count == 0 and len(lengths) == 1 and lengths[0]:
-        sample = np.asarray(flat, dtype=np.float64).reshape(n_rows, -1)
-    else:  # ragged/null rows: fall back to the row loop (never the fixture)
-        sample = np.array(
-            [list(v) for v in vec_chunks.to_pylist()], dtype=np.float64
-        )
-    if len(sample) < n_cells:
-        sample = np.array(
-            [r[vec_col] for r in corpus.select(vec_col).limit(max(n_cells, 64)).collect()],
-            dtype=np.float64,
-        )
-    return _train_centroids(sample, n_cells, seed)
+    tbl = _vector_sample(corpus, vec_col, id_col, 65536, seed)
+    return _train_centroids(_arrow_matrix(tbl.column("_svec")), n_cells, seed)
 
 
 def ann_join_ivf(
@@ -1071,74 +1106,6 @@ def mips_topk(
 # ---------------------------------------------------------------------------
 
 
-def _unit_expr(col):
-    """JVM unit-normalization of an array column (zero vectors pass through)."""
-    v = col.cast("array<double>")
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    safe = F.when(nrm > 0.0, nrm).otherwise(F.lit(1.0))
-    return F.transform(v, lambda x: x / safe)
-
-
-def _nearest_cell_expr(centers: "np.ndarray") -> Column:
-    """JVM argmin over the coarse centers for a unit-vector column ``u`` —
-    the assignment expression shared by the index build and the incremental
-    upsert (both must route a vector to the SAME cell the probe will rank)."""
-    d2_cols = [
-        F.aggregate(
-            F.zip_with(
-                F.col("u"),
-                double_array_col(c),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centers
-    ]
-    return (F.array_position(F.array(*d2_cols), F.array_min(F.array(*d2_cols))) - 1).cast(
-        "int"
-    )
-
-
-def _encode_cells(
-    assigned: DataFrame, books: "np.ndarray", centers: "np.ndarray", m: int, dsub: int
-) -> DataFrame:
-    """Distributed residual PQ encoding of an ``(id, v, u, _cell)`` frame
-    against FROZEN codebooks — one Arrow-batched map, shared by the build
-    and the incremental upsert (same codes for the same vector either way)."""
-    import pandas as pd  # noqa: PLC0415 — keep pandas off the import hot path
-
-    sc = assigned.sparkSession.sparkContext
-    b_books = sc.broadcast(books)
-    b_centers = sc.broadcast(centers)
-
-    def _encode(batches):
-        cb = b_books.value
-        cc = b_centers.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            u = np.array([np.asarray(x, dtype=np.float64) for x in pdf["u"]])
-            r = u - cc[pdf["_cell"].to_numpy()]
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                xj = r[:, j * dsub : (j + 1) * dsub]
-                d2 = ((xj[:, None, :] - cb[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "codes": list(codes),
-                    "v": pdf["v"],
-                    "_cell": pdf["_cell"],
-                }
-            )
-
-    return assigned.mapInPandas(
-        _encode, schema="id long, codes array<int>, v array<float>, _cell int"
-    )
-
-
 def build_ivfpq_index(
     df: DataFrame,
     path: str,
@@ -1154,84 +1121,51 @@ def build_ivfpq_index(
     standalone :func:`build_ivf_index` (cells only) and
     :func:`build_pq_index` (codes only) each provide half of:
 
-    1. unit-normalize (cosine ranking = L2 ranking on the unit sphere);
-    2. train the coarse quantizer on a hash-deterministic sample
-       (:func:`train_ivf_centers`), assign every vector to its nearest
-       cell with a pure JVM argmin;
-    3. PQ-encode each vector's RESIDUAL u - center[cell] (residual
-       encoding is what makes IVFPQ beat flat PQ: residual norms are a
-       fraction of vector norms, so the same 2**nbits codes per subspace
-       quantize a much smaller ball);
-    4. write the corpus hive-partitioned by ``_cell`` so probes
+    1. fetch ONE bounded, id-hash-ordered Arrow sample (:func:`_vector_sample`,
+       at most ``train_cap`` rows) and unit-normalize it (cosine ranking =
+       L2 ranking on the unit sphere); ``dim`` is the sample's width;
+    2. on the driver, train the coarse quantizer on it, assign its rows to
+       cells, and train PQ codebooks on their RESIDUALS u - center[cell]
+       (residual encoding is what makes IVFPQ beat flat PQ: residual norms
+       are a fraction of vector norms, so the same 2**nbits codes per
+       subspace quantize a much smaller ball);
+    3. encode the whole corpus in ONE Arrow-batched map
+       (:func:`_encode_vectors`: normalize, nearest cell, residual codes)
+       and write it hive-partitioned by ``_cell``, so probes
        partition-prune to nprobe/n_cells of the data AND rank candidates
-       by m table lookups instead of dim multiplies.
+       by m table lookups instead of dim multiplies;
+    4. write the model plane driver-side (:func:`_write_model`), ``meta``
+       last: ``meta`` exists only once the index is complete.
 
-    Layout::
+    Two Spark jobs carry the whole build: the sample fetch and the encode
+    write (plus the fan-out exchange when the input is narrower than the
+    cluster). The sample is a total order on id, so the model, and with it
+    every row's cell and codes, does not depend on how ``df`` is
+    partitioned. Layout::
 
         {path}/data/_cell=K/part-*.parquet   (id, codes array<int>, v)
         {path}/centroids/part-*.parquet      (cell, center array<double>)
         {path}/codebooks/part-*.parquet      (subspace, code, center)
-        {path}/meta/part-*.parquet           (n_cells, m, nbits, dim, seed)
+        {path}/meta/part-*.parquet           (n_cells, m, nbits, dim, seed, train_cap)
 
     At 100 TB: training state is O(n_cells*dim + m*2**nbits*dim/m) driver
-    bytes; assignment + encoding are one distributed map each; the probe
-    reads ~nprobe/n_cells of a table that is itself ~1/32 original bytes
-    for the ADC stage (originals ride along for the exact refine, fetched
-    only for the k*refine survivors).
+    bytes plus a ``train_cap``-row sample; the encode is one distributed
+    map; the probe reads ~nprobe/n_cells of a table that is itself ~1/32
+    original bytes for the ADC stage (originals ride along for the exact
+    refine, fetched only for the k*refine survivors).
     """
-    first = df.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("cannot index an empty corpus")
-    dim = int(first["d"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    unit = fan_out_scan(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _unit_expr(F.col(vec_col)).alias("u"),
+    sample, pq_order = _unit_training_sample(df, vec_col, id_col, train_cap, seed, m)
+    centers = _train_centroids(sample, n_cells, seed)
+    pq_sample = sample[pq_order]
+    books = _train_pq_codebooks(
+        pq_sample - centers[_nearest_cells(pq_sample, centers)], m, nbits, seed
     )
-    centers = train_ivf_centers(unit, n_cells, vec_col="u", id_col="id", seed=seed)
-    assigned = unit.select("id", "v", "u", _nearest_cell_expr(centers).alias("_cell"))
-
-    # residual training sample: hash-deterministic, bounded (the PQ shape)
-    sample_rows = (
-        assigned.orderBy(F.xxhash64("id").asc(), F.col("id").asc())
-        .limit(train_cap)
-        .select("u", "_cell")
-        .collect()
-    )
-    res = np.array(
-        [
-            np.asarray(r["u"], dtype=np.float64) - centers[int(r["_cell"])]
-            for r in sample_rows
-        ]
-    )
-    books = _train_pq_codebooks(res, m, nbits, seed)
-    _encode_cells(assigned, books, centers, m, dsub).write.mode("overwrite").partitionBy(
-        "_cell"
-    ).parquet(f"{path}/data")
-    spark = df.sparkSession
-    tiny_local_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cell int, center array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    tiny_local_df(
-        spark,
-        [
-            (j, c, [float(x) for x in books[j, c]])
-            for j in range(m)
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, center array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    tiny_local_df(
-        spark,
-        [(n_cells, m, nbits, dim, seed, train_cap)],
-        "n_cells int, m int, nbits int, dim int, seed int, train_cap int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    shutil.rmtree(f"{path}/meta", ignore_errors=True)
+    _encode_vectors(fan_out_scan(df), vec_col, id_col, centers, books).write.mode(
+        "overwrite"
+    ).partitionBy("_cell").parquet(f"{path}/data")
+    meta = {"n_cells": n_cells, "m": m, "nbits": nbits, "dim": sample.shape[1]}
+    _write_model(path, books, {**meta, "seed": seed, "train_cap": train_cap}, centers)
     return path
 
 
@@ -1277,6 +1211,57 @@ def _driver_read_parquet_rows(path: str) -> list[dict]:
     if not files:
         raise FileNotFoundError(f"no parquet part files under {path}")
     return _pq.read_table(files).to_pylist()
+
+
+def _driver_write_parquet(path: str, table) -> None:
+    """Driver-side pyarrow write of a tiny model-plane table as one part
+    file — the twin of :func:`_driver_read_parquet_rows`, on the same
+    local-FS-only store contract, and no Spark job. The file lands in a
+    sibling ``_<name>.tmp`` directory that is renamed into place, so
+    ``path`` is either absent or complete."""
+    import pyarrow.parquet as _pq  # noqa: PLC0415
+
+    tmp = os.path.join(os.path.dirname(path), f"_{os.path.basename(path)}.tmp")
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    _pq.write_table(table, f"{tmp}/part-00000.parquet")
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
+
+
+def _write_model(
+    path: str, books: np.ndarray, meta: dict[str, int], centers: np.ndarray | None = None
+) -> None:
+    """Write a PQ-family index's model plane: ``centroids`` (IVFPQ only),
+    ``codebooks``, then ``meta`` LAST — a build removes ``meta`` before it
+    writes anything, so ``meta`` present means the index is complete."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    vec_t = pa.list_(pa.float64())
+    if centers is not None:
+        _driver_write_parquet(
+            f"{path}/centroids",
+            pa.table(
+                {
+                    "cell": pa.array(range(len(centers)), pa.int32()),
+                    "center": pa.array(centers.tolist(), vec_t),
+                }
+            ),
+        )
+    m, n_codes, dsub = books.shape
+    _driver_write_parquet(
+        f"{path}/codebooks",
+        pa.table(
+            {
+                "subspace": pa.array(np.repeat(np.arange(m), n_codes), pa.int32()),
+                "code": pa.array(np.tile(np.arange(n_codes), m), pa.int32()),
+                "center": pa.array(books.reshape(m * n_codes, dsub).tolist(), vec_t),
+            }
+        ),
+    )
+    _driver_write_parquet(
+        f"{path}/meta", pa.table({k: pa.array([v], pa.int32()) for k, v in meta.items()})
+    )
 
 
 def load_ivfpq_model(spark, path: str) -> dict:
@@ -1611,10 +1596,12 @@ def ivfpq_upsert(
     id_col: str = "vec_id",
 ) -> str:
     """Incrementally ingest a new vector batch into an EXISTING IVFPQ index
-    — no retrain, no rebuild: read the frozen model state, assign each new
-    vector to its nearest coarse cell (the same JVM argmin the build used),
-    residual-encode against the FROZEN codebooks (same distributed Arrow
-    map), and APPEND the encoded rows to the per-cell hive partitions.
+    — no retrain, no rebuild: read the frozen model state, encode the batch
+    through the build's own per-row encoder (:func:`_encode_vectors`:
+    nearest coarse cell, residual codes against the FROZEN codebooks), and
+    APPEND the encoded rows to the per-cell hive partitions. A vector
+    upserted with the same values as an indexed one gets the identical
+    ``_cell`` and ``codes``.
     Existing data files are never touched; cost is O(batch) work + one
     append-mode write.
 
@@ -1629,24 +1616,15 @@ def ivfpq_upsert(
     Caller contract: ids in ``df`` must be new (dedupe upstream — the index
     has no uniqueness constraint, exactly like FAISS add).
     """
-    spark = df.sparkSession
-    model = load_ivfpq_model(spark, path)
+    model = load_ivfpq_model(df.sparkSession, path)
     first = df.select(F.size(vec_col).alias("d")).first()
     if first is None:
         raise ValueError("cannot upsert an empty batch")
     if int(first["d"]) != model["dim"]:
         raise ValueError("batch dim does not match index dim")
-    unit = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _unit_expr(F.col(vec_col)).alias("u"),
-    )
-    assigned = unit.select(
-        "id", "v", "u", _nearest_cell_expr(model["centers"]).alias("_cell")
-    )
-    _encode_cells(
-        assigned, model["books"], model["centers"], model["m"], model["dsub"]
-    ).write.mode("append").partitionBy("_cell").parquet(f"{path}/data")
+    _encode_vectors(df, vec_col, id_col, model["centers"], model["books"]).write.mode(
+        "append"
+    ).partitionBy("_cell").parquet(f"{path}/data")
     return path
 
 
@@ -1685,8 +1663,6 @@ def load_ivfpq_tombstones(spark, path: str) -> DataFrame | None:
     """The index's tombstone set as a 1-column (``id``) frame, or None when
     no delete has ever landed. Bounded metadata plane (like the model
     state): broadcast by the probe paths."""
-    import os  # noqa: PLC0415
-
     t = f"{path}/tombstones"
     if not os.path.exists(t):
         return None
@@ -1749,14 +1725,10 @@ def ivfpq_compact(
     without the caller re-supplying the knob.
 
     At 100 TB: one distributed survivor scan + encode + partitioned write,
-    bounded driver state (the same 64k-row training collects as the
-    build). Upserts/deletes landing DURING a compact are lost to the new
+    bounded driver state (the build's one ``train_cap``-row Arrow sample). Upserts/deletes landing DURING a compact are lost to the new
     index — quiesce maintenance for the swap window, the standard
     rebuild-cadence contract documented on :func:`ivfpq_delete`.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
     old = f"{path}.__compact_old"
     # crash recovery: a previous in-place compact that died between its two
     # renames left the intact old index at .__compact_old and nothing at

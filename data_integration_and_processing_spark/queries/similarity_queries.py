@@ -2176,12 +2176,10 @@ def _eval_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _fixture_index_path("ivfpq_eval", sf_dir)
-    # gate on the COMMIT marker, not directory existence: Spark creates the
-    # meta dir at write start, so a crash mid-write leaves a directory that
-    # would pass an existence check with no committed parquet — and the
-    # unchanged fixture fingerprint would never reap the wedged cache
-    # (same marker-written-last discipline as the upsert path)
-    if not os.path.exists(f"{path}/meta/_SUCCESS"):
+    # meta is the commit marker: the build removes it first and renames the
+    # finished meta into place last, so it exists only for a complete index
+    # (a crashed build leaves no meta, and this call rebuilds from scratch)
+    if not os.path.exists(f"{path}/meta"):
         import shutil  # noqa: PLC0415
 
         shutil.rmtree(path, ignore_errors=True)
@@ -3452,7 +3450,7 @@ def _rag_index_path(spark: SparkSession, sf_dir: str, corpus_emb: DataFrame) -> 
     )
 
     path = _fixture_index_path("ragivfpq", sf_dir, src_file="documents.parquet")
-    if not os.path.exists(f"{path}/meta/_SUCCESS"):
+    if not os.path.exists(f"{path}/meta"):
         import shutil  # noqa: PLC0415
 
         shutil.rmtree(path, ignore_errors=True)
@@ -3602,7 +3600,7 @@ def stream_ivfpq_ingest_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_pred = (F.col("vec_id") % 8 < 5) & ~held_out
 
     base_cache = _fixture_index_path("ivfpq_ingest_base", sf_dir)
-    if not os.path.exists(f"{base_cache}/meta/_SUCCESS"):
+    if not os.path.exists(f"{base_cache}/meta"):
         shutil.rmtree(base_cache, ignore_errors=True)
         build_ivfpq_index(e.filter(base_pred), base_cache, n_cells=8, m=8, nbits=4)
 

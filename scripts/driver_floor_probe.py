@@ -38,7 +38,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     specs = catalog.all_specs()
 
-    # warmups (same as quick_bench)
+    # warmups: one JVM query and one pandas UDF, so the timed run pays no first-use cost
     specs["q1_pricing_summary"].spark(spark, args.sf_dir).collect()
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415

@@ -20,6 +20,7 @@ from data_integration_and_processing_spark.operators.similarity import (
     ivfpq_probe,
     ivfpq_probe_batch,
     ivfpq_upsert,
+    tiny_local_df,
 )
 from data_integration_and_processing_spark.queries import catalog
 from data_integration_and_processing_spark.queries.similarity_queries import (
@@ -843,6 +844,105 @@ def _tiny_corpus(spark, n=64, dim=8):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_upsert_encodes_like_the_build(spark, tmp_path):
+    """Build and upsert share one per-row encoder: a vector upserted under a
+    new id with the same values as an indexed vector lands in the identical
+    ``_cell`` with identical ``codes``."""
+    corpus = _tiny_corpus(spark)
+    path = str(tmp_path / "idx")
+    build_ivfpq_index(corpus, path, n_cells=4, m=4, nbits=2)
+    ivfpq_upsert(corpus.select((F.col("vec_id") + 1000).alias("vec_id"), "embedding"), path)
+    data = spark.read.parquet(f"{path}/data").select("id", "_cell", "codes")
+    built = {r["id"]: (r["_cell"], r["codes"]) for r in data.filter("id < 1000").collect()}
+    upserted = {r["id"] - 1000: (r["_cell"], r["codes"]) for r in data.filter("id >= 1000").collect()}
+    assert len(built) == 64
+    assert upserted == built
+
+
+@pytest.mark.parametrize(
+    "rows,m,match",
+    [
+        ([], 4, "empty corpus"),
+        ([(0, [1.0] * 8), (1, [1.0] * 7)], 4, "ragged or null"),
+        ([(0, [1.0] * 8), (1, None)], 4, "ragged or null"),
+        ([(0, [1.0] * 8), (1, [1.0] * 7 + [None])], 4, "ragged or null"),
+        ([(0, [1.0] * 8), (1, [2.0] * 8)], 3, "not divisible"),
+    ],
+    ids=["empty", "ragged", "null_vector", "null_element", "dim_not_divisible"],
+)
+def test_build_rejects_bad_corpus(spark, tmp_path, rows, m, match):
+    """Bad input fails the build on the driver with ValueError before any
+    write, not deep inside numpy or a half-written index."""
+    from data_integration_and_processing_spark.operators.similarity import build_pq_index
+
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    for build in (build_ivfpq_index, build_pq_index):
+        path = tmp_path / build.__name__
+        with pytest.raises(ValueError, match=match):
+            build(corpus, str(path), m=m)
+        assert not path.exists()
+
+
+def test_encode_map_rejects_ragged_vectors(spark, tmp_path):
+    """A bad vector that escapes the driver-side checks (the upsert probes
+    only the first row's width) fails inside the encode map instead of
+    being written misaligned."""
+    path = str(tmp_path / "idx")
+    build_ivfpq_index(_tiny_corpus(spark), path, n_cells=2, m=4, nbits=2)
+    batch = tiny_local_df(
+        spark, [(100, [1.0] * 8), (101, [1.0] * 6)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="ragged or null"):
+        ivfpq_upsert(batch, path)
+
+
+def test_pq_codebooks_train_on_the_id_hash_ordered_sample(spark, tmp_path):
+    """The one shared sample is re-sorted by (xxhash64(id), id) before
+    codebook training, so the codebooks equal those trained on a separate
+    sample in that order — the kmeans++ init consumes rows in order."""
+    from data_integration_and_processing_spark.operators.similarity import (
+        _train_pq_codebooks,
+        build_pq_index,
+    )
+
+    corpus = _tiny_corpus(spark)
+    path = str(tmp_path / "pq")
+    build_pq_index(corpus, path, m=4, nbits=2)
+    ref = np.array(
+        [
+            r["embedding"]
+            for r in corpus.orderBy(F.xxhash64("vec_id"), "vec_id").collect()
+        ],
+        dtype=np.float64,
+    )
+    ref /= np.linalg.norm(ref, axis=1)[:, None]
+    books = {
+        (r["subspace"], r["code"]): r["center"]
+        for r in spark.read.parquet(f"{path}/codebooks").collect()
+    }
+    expect = _train_pq_codebooks(ref, 4, 2, 42)
+    assert len(books) == expect.shape[0] * expect.shape[1]
+    for (j, c), center in books.items():
+        assert center == list(expect[j, c])
+
+
+def test_ivfpq_build_runs_at_most_three_jobs(spark, sf_dir, tmp_path):
+    """The build is one Arrow sample fetch plus one encode-and-write pass
+    (the write may add the fan-out exchange's job): the model plane is
+    written driver-side and ``dim`` comes from the sample."""
+    sc = spark.sparkContext
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    group = f"ivfpq_build_jobs_{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        build_ivfpq_index(e, str(tmp_path / "idx"), n_cells=16, m=8, nbits=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
 
 
 def test_compact_in_place_retires_tombstones(spark, tmp_path):

@@ -7,6 +7,8 @@ properties that decide whether a query survives a 100x scale-up.
 
 from __future__ import annotations
 
+import pytest
+
 from data_integration_and_processing_spark.queries.catalog import all_specs
 
 
@@ -202,3 +204,38 @@ def test_incremental_mv_never_rescans_base(spark, sf_dir):
     aggregates), not a re-union of raw rows into one giant aggregate."""
     plan = _plan(all_specs()["etl_incremental_agg_maintenance"].spark(spark, sf_dir))
     assert plan.count("partial_count") >= 3  # snapshot + insert-delta + delete-delta
+
+
+_TINY_CASES = [
+    ([], "a long, b string"),
+    ([(3, "x"), (1, None), (2, "y")], "a long, b string"),
+    ([([[1.0, 2.5], None, []],), (None,), ([[-0.0]],)], "_cmat: array<array<double>>"),
+    (
+        [(1, "t", [0.5, None]), (2, None, None)],
+        "i int not null, kind string, vals array<double>",
+    ),
+]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+@pytest.mark.parametrize("rows,ddl", _TINY_CASES)
+def test_tiny_local_df_matches_single_slice_rdd_frame(spark, rows, ddl, arrow):
+    """tiny_local_df is a drop-in for the one-slice Python-RDD frame it
+    replaced: same schema (DDL or StructType — the streaming sink passes a
+    batch's ``schema``), same rows in the same order including None and
+    nested arrays, one partition even when empty — with Arrow on (the
+    repo session) and off (a stock session)."""
+    from data_integration_and_processing_spark.operators.parallelism import tiny_local_df
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        ref = spark.createDataFrame(spark.sparkContext.parallelize(rows, numSlices=1), ddl)
+        for schema in (ddl, ref.schema):
+            got = tiny_local_df(spark, rows, schema)
+            assert got.schema == ref.schema
+            assert got.collect() == ref.collect()
+            assert got.rdd.getNumPartitions() == ref.rdd.getNumPartitions() == 1
+    finally:
+        spark.conf.set(key, prev)
