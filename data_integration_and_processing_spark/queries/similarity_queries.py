@@ -3593,6 +3593,9 @@ def stream_ivfpq_ingest_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_probe_batch,
         ivfpq_upsert,
     )
+    from data_integration_and_processing_spark.streaming.pipelines import (  # noqa: PLC0415
+        drain_available_now,
+    )
     from pyspark.sql.window import Window  # noqa: PLC0415
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -3668,15 +3671,12 @@ def stream_ivfpq_ingest_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).count()
         ledger.append((seq, n_in, total, n_hits / (10.0 * nq)))
 
-    (
+    drain_available_now(
         spark.readStream.schema("vec_id long, embedding array<float>")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
+        .writeStream.foreachBatch(_ingest),
+        scratch,
     )
     shutil.rmtree(scratch, ignore_errors=True)
     return tiny_local_df(

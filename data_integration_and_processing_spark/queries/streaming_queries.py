@@ -836,6 +836,7 @@ def stream_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_integration_and_processing_spark.streaming.pipelines import (  # noqa: PLC0415
         _staged_stream,
+        drain_available_now,
     )
 
     e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
@@ -854,14 +855,8 @@ def stream_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n"), F.sum("event_id").alias("s")
     )
-    (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("handoff_tail")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
+    drain_available_now(
+        agg.writeStream.outputMode("complete").format("memory").queryName("handoff_tail"), scratch
     )
     tail_part = spark.table("handoff_tail")
 

@@ -10,7 +10,9 @@ implements:
   speculative duplicate can only add invisible attempt files);
 - ``commit(messages, batchId)`` — driver-side, once per micro-batch —
   renames exactly the successful attempts into ``batch={batchId}/`` and
-  publishes a ``_commits/{batchId}.json`` marker via atomic rename;
+  publishes a ``_commits/{batchId}.json`` marker with a put-if-absent
+  (``versioned.put_if_absent``): a marker is absent or complete, and a
+  second commit of the same batch raises instead of replacing it;
 - a REDELIVERED batch (checkpoint replay after a crash between sink commit
   and offset commit) finds its marker already present and discards the new
   attempts instead of doubling the batch — idempotent commit;
@@ -25,12 +27,13 @@ from __future__ import annotations
 
 import csv
 import glob
-import json
 import os
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamWriter, WriterCommitMessage
+
+from data_integration_and_processing_spark.sources.versioned import put_if_absent
 
 
 @dataclass
@@ -73,11 +76,7 @@ class CommitLogStreamWriter(DataSourceStreamWriter):
         for i, m in enumerate(sorted((m for m in messages if m is not None), key=lambda x: x.path)):
             os.replace(m.path, f"{bdir}/part-{i:05d}.csv")
             total += m.n_rows
-        os.makedirs(f"{self._dir}/_commits", exist_ok=True)
-        tmp = f"{self._dir}/_commits/.{batchId}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batchId, "n_rows": total}, f)
-        os.rename(tmp, marker)
+        put_if_absent(marker, {"batch_id": batchId, "n_rows": total})
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:

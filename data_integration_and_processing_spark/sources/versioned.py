@@ -7,8 +7,9 @@ metadata tree do), reduced to its load-bearing core on plain parquet:
   subdirectory of ``{path}/data/``; nothing is ever rewritten or deleted
   by a write;
 - a version is a MANIFEST (``{path}/_versions/v{N}.json``) listing exactly
-  the data files visible at that version, published atomically via
-  write-temp + ``os.rename``;
+  the data files visible at that version, published by
+  :func:`put_if_absent` — a put-if-absent, so ``v{N}.json`` is either
+  absent or complete, and it never changes once published;
 - readers resolve a manifest and read only its files — never a directory
   listing, so a reader positioned at v3 is untouched by a concurrent
   writer publishing v4 (snapshot isolation for free), and there is no
@@ -16,11 +17,11 @@ metadata tree do), reduced to its load-bearing core on plain parquet:
 
 At 100 TB the manifest is O(files) JSON — the data plane never moves for a
 metadata operation: rollback writes a manifest pointing at old files
-(O(1) data bytes), append writes only the appended files. Single-writer
-is assumed (the reference's deployment shape); a real multi-writer log
-adds a compare-and-swap on the version counter, which os.rename gives
-per-version here (the second writer of the same version number fails the
-rename on POSIX via the exclusive temp-name protocol below).
+(O(1) data bytes), append writes only the appended files. Two writers
+that compute the same next version race on one ``v{N}.json`` name: exactly
+one publishes, the other raises FileExistsError and its data files stay
+unreferenced (vacuum-able). Retrying means re-reading the head and
+recomputing; no writer retries on its own.
 """
 
 from __future__ import annotations
@@ -57,17 +58,50 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
-def _publish(path: str, version: int, files: list[str], parent: int | None, op: str) -> int:
-    vdir = _versions_dir(path)
-    os.makedirs(vdir, exist_ok=True)
-    manifest = {"version": version, "parent": parent, "op": op, "files": sorted(files)}
-    tmp = os.path.join(vdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-    final = os.path.join(vdir, f"v{version}.json")
-    if os.path.exists(final):
-        raise FileExistsError(f"version {version} already committed at {path}")
+def _latest_manifest(path: str) -> dict:
+    versions = list_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no committed versions at {path}")
+    return _read_manifest(path, versions[-1])
+
+
+def put_if_absent(final: str, payload: dict) -> None:
+    """Publish ``payload`` as JSON at ``final`` unless a file is already there.
+
+    The JSON is written to a temp file in the same directory and then
+    hard-linked to ``final``. ``os.link`` refuses an existing target with
+    FileExistsError, atomically: of two writers racing for one name exactly
+    one wins, the loser raises, and the winner's file is never replaced.
+    Readers see either no ``final`` or the complete one."""
+    d = os.path.dirname(final)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{os.path.basename(final)}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
+        json.dump(payload, f)
+    try:
+        os.link(tmp, final)
+    finally:
+        os.remove(tmp)
+
+
+def _publish(
+    path: str,
+    version: int,
+    files: list[str],
+    parent: int | None,
+    op: str,
+    stats: dict | None = None,
+) -> int:
+    """Commit manifest ``v{version}``; FileExistsError if that version is
+    already committed. ``stats`` (per-file column [min, max]) is stored
+    when given."""
+    manifest = {"version": version, "parent": parent, "op": op, "files": sorted(files)}
+    if stats is not None:
+        manifest["stats"] = stats
+    try:
+        put_if_absent(os.path.join(_versions_dir(path), f"v{version}.json"), manifest)
+    except FileExistsError as exc:
+        raise FileExistsError(f"version {version} already committed at {path}") from exc
     return version
 
 
@@ -89,14 +123,25 @@ def write_version(df: DataFrame, path: str, mode: str = "append") -> int:
     the committed version number (1-based). Old versions stay readable —
     no data file is ever touched.
     """
+    return _write(df, path, mode, stat_cols=None)
+
+
+def _write(df: DataFrame, path: str, mode: str, stat_cols: list[str] | None) -> int:
+    """Land ``df`` as new files and commit the next version. With
+    ``stat_cols`` the manifest carries per-file stats; an append keeps the
+    parent's."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
     existing = list_versions(path)
     parent = existing[-1] if existing else None
-    new_files = _write_data_files(df, path)
+    files = _write_data_files(df, path)
+    stats = None if stat_cols is None else _file_stats(files, stat_cols)
     if mode == "append" and parent is not None:
-        new_files = _read_manifest(path, parent)["files"] + new_files
-    return _publish(path, (parent or 0) + 1, new_files, parent, mode)
+        pm = _read_manifest(path, parent)
+        files = pm["files"] + files
+        if stats is not None:
+            stats = {**pm.get("stats", {}), **stats}
+    return _publish(path, (parent or 0) + 1, files, parent, mode, stats)
 
 
 def read_version(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
@@ -221,36 +266,30 @@ def write_version_with_stats(
     (files never open at all). Combine with a range-partitioned or
     Z-ordered write so files have tight ranges worth skipping.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
-    existing = list_versions(path)
-    parent = existing[-1] if existing else None
-    new_files = _write_data_files(df, path)
-    stats = _file_stats(new_files, stat_cols or [f.name for f in df.schema.fields])
-    files = new_files
-    parent_stats: dict = {}
-    if mode == "append" and parent is not None:
-        pm = _read_manifest(path, parent)
-        files = pm["files"] + new_files
-        parent_stats = pm.get("stats", {})
-    version = (parent or 0) + 1
-    vdir = _versions_dir(path)
-    os.makedirs(vdir, exist_ok=True)
-    manifest = {
-        "version": version,
-        "parent": parent,
-        "op": mode,
-        "files": sorted(files),
-        "stats": {**parent_stats, **stats},
-    }
-    tmp = os.path.join(vdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-    final = os.path.join(vdir, f"v{version}.json")
-    if os.path.exists(final):
-        raise FileExistsError(f"version {version} already committed at {path}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
-    return version
+    return _write(df, path, mode, stat_cols or [f.name for f in df.schema.fields])
+
+
+def _may_match(file_stats: dict, predicates: list[tuple[str, str, object]]) -> bool:
+    """False only when a file's [min, max] ranges PROVE no row satisfies
+    all ``predicates``; a column without stats never rules a file out."""
+    for col, op, val in predicates:
+        rng = file_stats.get(col)
+        if rng is None:
+            continue
+        lo, hi = rng
+        if op in (">=", ">") and (hi < val if op == ">=" else hi <= val):
+            return False
+        if op in ("<=", "<") and (lo > val if op == "<=" else lo >= val):
+            return False
+        if op == "=" and (val < lo or val > hi):
+            return False
+    return True
+
+
+def _candidates(m: dict, predicates: list[tuple[str, str, object]]) -> list[str]:
+    """The manifest's files that may hold a row matching ``predicates``."""
+    stats = m.get("stats", {})
+    return [f for f in m["files"] if _may_match(stats.get(f, {}), predicates)]
 
 
 def read_version_pruned(
@@ -269,35 +308,30 @@ def read_version_pruned(
     the difference between planning a scan over every file and opening
     1/100th of them — decided from O(files) JSON on the driver.
     """
-    versions = list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    if version is None:
-        version = versions[-1]
-    m = _read_manifest(path, version)
-    stats = m.get("stats", {})
-
-    def may_match(f: str) -> bool:
-        fs = stats.get(f, {})
-        for col, op, val in predicates:
-            rng = fs.get(col)
-            if rng is None:
-                continue  # no stats for this column: keep the file
-            lo, hi = rng
-            if op in (">=", ">") and (hi < val if op == ">=" else hi <= val):
-                return False
-            if op in ("<=", "<") and (lo > val if op == "<=" else lo >= val):
-                return False
-            if op == "=" and (val < lo or val > hi):
-                return False
-        return True
-
-    kept = [f for f in m["files"] if may_match(f)]
-    audit = {"version": version, "total_files": len(m["files"]), "files_read": len(kept)}
+    m = _latest_manifest(path) if version is None else _read_manifest(path, version)
+    kept = _candidates(m, predicates)
+    audit = {"version": m["version"], "total_files": len(m["files"]), "files_read": len(kept)}
     if not kept:
         # all files pruned: an empty frame with the table's schema
         return spark.read.parquet(*m["files"]).limit(0), audit
     return spark.read.parquet(*kept), audit
+
+
+def _rewrite_commit(
+    path: str, m: dict, untouched: list[str], rewritten: DataFrame, op: str
+) -> tuple[list[str], int]:
+    """Copy-on-write commit on top of manifest ``m``: land ``rewritten`` as
+    new files, carry ``untouched`` files and their stats by path, and
+    publish the next version. Returns (new files, version). New files get
+    stats on the column set the table already tracks (every column for a
+    stats-less table)."""
+    stats = m.get("stats", {})
+    new_files = _write_data_files(rewritten, path)
+    stat_cols = list(next(iter(stats.values()), {})) or [f.name for f in rewritten.schema.fields]
+    new_stats = {f: stats[f] for f in untouched if f in stats}
+    new_stats.update(_file_stats(new_files, stat_cols))
+    version = _publish(path, m["version"] + 1, untouched + new_files, m["version"], op, new_stats)
+    return new_files, version
 
 
 def delete_where(
@@ -321,35 +355,9 @@ def delete_where(
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    versions = list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    m = _read_manifest(path, versions[-1])
-    stats = m.get("stats", {})
-
-    if prune:
-        pruned_df, _ = read_version_pruned(spark, path, prune, version=versions[-1])
-        # recompute the kept set with the same rule to split the file list
-        def may_match(f: str) -> bool:
-            fs = stats.get(f, {})
-            for col, op, val in prune:
-                rng = fs.get(col)
-                if rng is None:
-                    continue
-                lo, hi = rng
-                if op in (">=", ">") and (hi < val if op == ">=" else hi <= val):
-                    return False
-                if op in ("<=", "<") and (lo > val if op == "<=" else lo >= val):
-                    return False
-                if op == "=" and (val < lo or val > hi):
-                    return False
-            return True
-
-        candidates = [f for f in m["files"] if may_match(f)]
-    else:
-        candidates = list(m["files"])
+    m = _latest_manifest(path)
+    candidates = _candidates(m, prune or [])
     untouched = [f for f in m["files"] if f not in set(candidates)]
-
     audit = {
         "files_total": len(m["files"]),
         "files_rewritten": 0,
@@ -360,36 +368,12 @@ def delete_where(
         return audit
 
     src = spark.read.parquet(*candidates)
-    survivors = src.filter(~F.expr(condition))
     n_before = src.count()
-    new_files = _write_data_files(survivors, path)
-    n_after = spark.read.parquet(*new_files).count() if new_files else 0
-    audit.update(
-        files_rewritten=len(candidates),
-        rows_deleted=n_before - n_after,
+    new_files, version = _rewrite_commit(
+        path, m, untouched, src.filter(~F.expr(condition)), f"delete_where({condition})"
     )
-
-    # keep the same stat-column set the table already tracks (fall back to
-    # every column for a stats-less legacy table)
-    stat_cols = list(next(iter(stats.values()), {})) or [f.name for f in src.schema.fields]
-    new_stats = _file_stats(new_files, stat_cols)
-    version = versions[-1] + 1
-    vdir = _versions_dir(path)
-    manifest = {
-        "version": version,
-        "parent": versions[-1],
-        "op": f"delete_where({condition})",
-        "files": sorted(untouched + new_files),
-        "stats": {**{f: stats[f] for f in untouched if f in stats}, **new_stats},
-    }
-    tmp = os.path.join(vdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-    final = os.path.join(vdir, f"v{version}.json")
-    if os.path.exists(final):
-        raise FileExistsError(f"version {version} already committed at {path}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
-    audit["version"] = version
+    n_after = spark.read.parquet(*new_files).count() if new_files else 0
+    audit.update(files_rewritten=len(candidates), rows_deleted=n_before - n_after, version=version)
     return audit
 
 
@@ -408,28 +392,8 @@ def update_where(
     DataFrame level in plans/pipelines.py::upsert)."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    versions = list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    m = _read_manifest(path, versions[-1])
-    stats = m.get("stats", {})
-
-    def may_match(f: str) -> bool:
-        fs = stats.get(f, {})
-        for col, op, val in prune or []:
-            rng = fs.get(col)
-            if rng is None:
-                continue
-            lo, hi = rng
-            if op in (">=", ">") and (hi < val if op == ">=" else hi <= val):
-                return False
-            if op in ("<=", "<") and (lo > val if op == "<=" else lo >= val):
-                return False
-            if op == "=" and (val < lo or val > hi):
-                return False
-        return True
-
-    candidates = [f for f in m["files"] if may_match(f)] if prune else list(m["files"])
+    m = _latest_manifest(path)
+    candidates = _candidates(m, prune or [])
     untouched = [f for f in m["files"] if f not in set(candidates)]
     audit = {
         "files_total": len(m["files"]),
@@ -446,25 +410,7 @@ def update_where(
     out = src
     for col, expr in set_exprs.items():
         out = out.withColumn(col, F.when(cond, F.expr(expr)).otherwise(F.col(col)))
-    new_files = _write_data_files(out, path)
-    stat_cols = list(next(iter(stats.values()), {})) or [f.name for f in src.schema.fields]
-    new_stats = _file_stats(new_files, stat_cols)
-    version = versions[-1] + 1
-    vdir = _versions_dir(path)
-    manifest = {
-        "version": version,
-        "parent": versions[-1],
-        "op": f"update_where({condition})",
-        "files": sorted(untouched + new_files),
-        "stats": {**{f: stats[f] for f in untouched if f in stats}, **new_stats},
-    }
-    tmp = os.path.join(vdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-    final = os.path.join(vdir, f"v{version}.json")
-    if os.path.exists(final):
-        raise FileExistsError(f"version {version} already committed at {path}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
+    _, version = _rewrite_commit(path, m, untouched, out, f"update_where({condition})")
     audit.update(files_rewritten=len(candidates), rows_updated=n_updated, version=version)
     return audit
 
@@ -479,13 +425,10 @@ def optimize(
     fragmented version readable until vacuum retires it. The store-level
     twin of sources/maintenance.py::compact_parquet, with the log's
     snapshot isolation instead of a directory swap."""
-    versions = list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    m = _read_manifest(path, versions[-1])
+    m = _latest_manifest(path)
     before = len(m["files"])
     if before <= target_files:
-        return {"files_before": before, "files_after": before, "version": versions[-1], "skipped": True}
+        return {"files_before": before, "files_after": before, "version": m["version"], "skipped": True}
     df = spark.read.parquet(*m["files"])
     if sort_cols:
         # clustering-preserving compaction: range-partition + sort instead of
@@ -494,26 +437,7 @@ def optimize(
         df = df.repartitionByRange(target_files, *sort_cols).sortWithinPartitions(*sort_cols)
     else:
         df = df.coalesce(target_files)
-    new_files = _write_data_files(df, path)
-    stats = m.get("stats", {})
-    stat_cols = list(next(iter(stats.values()), {})) or [f.name for f in df.schema.fields]
-    new_stats = _file_stats(new_files, stat_cols)
-    version = versions[-1] + 1
-    vdir = _versions_dir(path)
-    manifest = {
-        "version": version,
-        "parent": versions[-1],
-        "op": f"optimize({target_files})",
-        "files": sorted(new_files),
-        "stats": new_stats,
-    }
-    tmp = os.path.join(vdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-    final = os.path.join(vdir, f"v{version}.json")
-    if os.path.exists(final):
-        raise FileExistsError(f"version {version} already committed at {path}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, final)
+    new_files, version = _rewrite_commit(path, m, [], df, f"optimize({target_files})")
     return {"files_before": before, "files_after": len(new_files), "version": version, "skipped": False}
 
 

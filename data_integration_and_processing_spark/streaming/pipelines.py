@@ -17,11 +17,12 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType, TimestampNTZType
 
@@ -53,9 +54,9 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _committed_versions(spark: SparkSession, base: str, upto: int | None = None) -> list:
-    """Sorted committed state versions (v{N} dirs with a _SUCCESS marker)
-    under `base`, optionally restricted to N < upto."""
+def _committed(spark: SparkSession, base: str, prefix: str, upto: int | None = None) -> list[int]:
+    """Sorted N of the committed base/{prefix}{N} directories (those with a
+    _SUCCESS marker), optionally restricted to N < upto."""
     fs, jbase = _hadoop_fs(spark, base)
     if not fs.exists(jbase):
         return []
@@ -63,8 +64,8 @@ def _committed_versions(spark: SparkSession, base: str, upto: int | None = None)
     out = []
     for st in fs.listStatus(jbase):
         name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            n = int(name[1:])
+        if name.startswith(prefix) and name[len(prefix):].isdigit():
+            n = int(name[len(prefix):])
             if (upto is None or n < upto) and fs.exists(
                 jvm.org.apache.hadoop.fs.Path(f"{base}/{name}/_SUCCESS")
             ):
@@ -78,23 +79,25 @@ def read_state_version(spark: SparkSession, base: str, upto: int | None = None) 
     foreachBatch state lives in per-batch version directories base/v{N}
     instead of one mutable directory. Crash-replaying micro-batch N rebuilds
     v{N} from v{N-1} plus the checkpoint-replayed (identical) batch data —
-    an idempotent overwrite, not a double-merge of non-idempotent counters
-   . Passing upto=batch_id also hides a half-written v{N} from
+    an idempotent overwrite, not a double-merge of non-idempotent counters.
+    Passing upto=batch_id also hides a half-written v{N} from
     the replay itself. Existence is probed through the Hadoop FileSystem
     API, so a transient read failure propagates and Structured Streaming
     retries the batch, rather than being mistaken for "first batch" and
     resetting accumulated state.
     """
-    versions = _committed_versions(spark, base, upto)
+    versions = _committed(spark, base, "v", upto)
     return spark.read.parquet(f"{base}/v{versions[-1]}") if versions else None
 
 
 def write_state_version(df: DataFrame, base: str, batch_id: int, keep: int = 2) -> None:
     """Commit state version base/v{batch_id}; prune versions <= batch_id-keep.
 
-    keep=2 retains the version a replayed batch would re-read. The write
-    never overwrites the directory it read from, so no stage+swap dance is
-    needed."""
+    Batch N writes only base/v{N}, never the v{N-1} it read, and v{N} is
+    visible only once its _SUCCESS marker lands. So a write that fails
+    part-way leaves v{N-1} as the latest committed state, and the replay
+    of batch N rebuilds v{N} from that same v{N-1}. keep=2 retains the
+    version a replayed batch re-reads."""
     spark = df.sparkSession
     df.write.mode("overwrite").parquet(f"{base}/v{batch_id}")
     fs, jbase = _hadoop_fs(spark, base)
@@ -115,20 +118,54 @@ def read_state_appends(spark: SparkSession, base: str, upto: int | None = None) 
     """Union of committed per-batch append dirs (b{N}, N < upto), or None.
 
     upto=batch_id excludes the replaying batch's own half-written b{N}."""
-    fs, jbase = _hadoop_fs(spark, base)
-    if not fs.exists(jbase):
-        return None
-    jvm = spark._jvm
-    dirs = []
-    for st in fs.listStatus(jbase):
-        name = st.getPath().getName()
-        if name.startswith("b") and name[1:].isdigit():
-            n = int(name[1:])
-            if (upto is None or n < upto) and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{base}/{name}/_SUCCESS")
-            ):
-                dirs.append(f"{base}/{name}")
-    return spark.read.parquet(*sorted(dirs)) if dirs else None
+    batches = _committed(spark, base, "b", upto)
+    return spark.read.parquet(*(f"{base}/b{n}" for n in batches)) if batches else None
+
+
+# Longest an availableNow replay may run before drain_available_now stops it.
+DRAIN_TIMEOUT_S = 600
+
+
+def drain_available_now(writer: DataStreamWriter, scratch: str) -> StreamingQuery:
+    """Run ``writer`` under ``trigger(availableNow=True)`` with its
+    checkpoint at ``{scratch}/ckpt`` and wait for it to finish.
+
+    Returns the terminated query (``recentProgress`` has one entry per
+    micro-batch). A failed batch raises StreamingQueryException. A query
+    still running after DRAIN_TIMEOUT_S is stopped and raises TimeoutError,
+    so a stalled stream never hands back a partial sink as its result."""
+    q = writer.option("checkpointLocation", f"{scratch}/ckpt").trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.id} still running after {DRAIN_TIMEOUT_S}s")
+    return q
+
+
+def _drain_appends(
+    spark: SparkSession, writer: DataStreamWriter, scratch: str, sink: str
+) -> DataFrame:
+    """Drain ``writer`` landing batch N in sink/b{N}; the union of every
+    committed batch."""
+    drain_available_now(writer.foreachBatch(lambda df, n: write_state_append(df, sink, n)), scratch)
+    return read_state_appends(spark, sink)
+
+
+def _drain_fold(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    scratch: str,
+    sink: str,
+    fold: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain ``writer`` committing sink/v{N} = fold(v{N-1} or None, batch N);
+    the last committed version."""
+
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        prev = read_state_version(batch_df.sparkSession, sink, upto=batch_id)
+        write_state_version(fold(prev, batch_df), sink, batch_id)
+
+    drain_available_now(writer.foreachBatch(land), scratch)
+    return read_state_version(spark, sink)
 
 
 def tumbling_window_counts(events: DataFrame, width: str = "10 minutes") -> DataFrame:
@@ -183,7 +220,7 @@ def run_streaming_window_pipeline(
     read back from the sink.
     """
     scratch = scratch_dir or f"/tmp/diaps_stream_{uuid.uuid4().hex[:8]}"
-    src, sink, ckpt = f"{scratch}/src", f"{scratch}/sink", f"{scratch}/ckpt"
+    src, sink = f"{scratch}/src", f"{scratch}/sink"
     shutil.rmtree(scratch, ignore_errors=True)
     _watermarkable(events).write.mode("overwrite").parquet(src)
 
@@ -194,18 +231,7 @@ def run_streaming_window_pipeline(
     )
     windowed = tumbling_window_counts(stream, width)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        windowed.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return spark.read.parquet(sink)
+    return _drain_appends(spark, windowed.writeStream.outputMode("append"), scratch, sink)
 
 
 def _staged_stream(
@@ -309,18 +335,7 @@ def run_stateful_user_stats(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    out = spark.read.parquet(sink)
+    out = _drain_appends(spark, updates.writeStream.outputMode("update"), scratch, sink)
     latest = out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.min("first_event_id").alias("first_event_id"),
@@ -338,8 +353,10 @@ def run_streaming_upsert_sink(
     update rows is upserted (same-key replace, new-key append) into a keyed
     parquet table via ``foreachBatch`` — the incremental version of the
     reference's full-table reload (`/root/reference/PostgresDatabase.py:72-73`
-    drops and recreates on every run). On Delta/Iceberg the body of
-    ``land`` becomes a single MERGE INTO; semantics are identical.
+    drops and recreates on every run). Batch N commits the merged table as
+    its own state version (``write_state_version``), so a failed batch
+    leaves batch N-1's table as the result. On Delta/Iceberg the merge
+    becomes a single MERGE INTO; semantics are identical.
 
     The per-batch update rows are cumulative per user, so the final table
     equals the batch aggregate regardless of micro-batching."""
@@ -356,31 +373,10 @@ def run_streaming_upsert_sink(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
-        # existence probe, not a blanket except: a transient read failure
-        # must fail the batch (and be retried), not masquerade as first-batch
-        # and overwrite accumulated state. Replay is key-idempotent (upsert).
-        fs, jsink = _hadoop_fs(b, sink)
-        if not fs.exists(jsink):
-            batch_df.write.mode("overwrite").parquet(sink)
-            return
-        target = b.read.parquet(sink)
-        merged = upsert(target, batch_df, key_cols=["user_id"])
-        # parquet has no transactional MERGE: stage the merged table, then
-        # swap. Delta/Iceberg replace this dance with one MERGE INTO.
-        merged.write.mode("overwrite").parquet(f"{sink}_stage")
-        b.read.parquet(f"{sink}_stage").write.mode("overwrite").parquet(sink)
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return batch_df if prev is None else upsert(prev, batch_df, key_cols=["user_id"])
 
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return spark.read.parquet(sink)
+    return _drain_fold(spark, updates.writeStream.outputMode("update"), scratch, sink, merge)
 
 
 def run_stream_static_join(
@@ -398,18 +394,7 @@ def run_stream_static_join(
     stream, sink = _staged_stream(spark, events, scratch)
     enriched = stream.join(F.broadcast(static_dim), on)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return spark.read.parquet(sink)
+    return _drain_appends(spark, enriched.writeStream.outputMode("append"), scratch, sink)
 
 
 def run_streaming_dedup(
@@ -430,18 +415,7 @@ def run_streaming_dedup(
     stream, sink = _staged_stream(spark, doubled, scratch)
     deduped = stream.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    survivors = spark.read.parquet(sink)
+    survivors = _drain_appends(spark, deduped.writeStream.outputMode("append"), scratch, sink)
     return survivors.groupBy("event_type").agg(F.count("*").alias("n_events"))
 
 
@@ -461,7 +435,6 @@ def run_stream_stream_join(
     append, same harness as the other true-streaming pipelines."""
     scratch = scratch_dir or f"/tmp/diaps_stream_{uuid.uuid4().hex[:8]}"
     stream, sink = _staged_stream(spark, events, scratch)
-    ckpt = f"{scratch}/ckpt"
 
     clicks = (
         stream.filter(F.col("event_type") == "click")
@@ -488,18 +461,7 @@ def run_stream_stream_join(
         ),
     ).select("c_user", "click_id", "purchase_id")
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return spark.read.parquet(sink)
+    return _drain_appends(spark, joined.writeStream.outputMode("append"), scratch, sink)
 
 
 def _make_user_value_stats_processor():
@@ -569,7 +531,6 @@ def run_transform_with_state(
         ) from exc
     scratch = scratch_dir or f"/tmp/diaps_state_{uuid.uuid4().hex[:8]}"
     stream, sink = _staged_stream(spark, events, scratch)
-    ckpt = f"{scratch}/ckpt"
 
     updates = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_make_user_value_stats_processor(),
@@ -578,18 +539,7 @@ def run_transform_with_state(
         timeMode="None",
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    out = spark.read.parquet(sink)
+    out = _drain_appends(spark, updates.writeStream.outputMode("update"), scratch, sink)
     # cumulative updates: keep the final (max n_events) row per user
     w_latest = out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -621,23 +571,38 @@ def run_streaming_cdc_apply(
     batches arrive — a late-delivered batch of older events can never
     resurrect a deleted key. Deletes are filtered only at read time.
 
-    Locally each batch rewrites the sink (stage + atomic swap, parquet has
-    no transactional merge); on Delta/Iceberg the ``land`` body becomes one
-    MERGE INTO keyed on ``key_cols`` with a seq guard. One shuffle per
-    batch, keyed on ``key_cols``, carrying one row per touched key.
+    Batch N commits the collapsed table as state version sink/v{N}
+    (``write_state_version``), built from v{N-1}: a batch that fails
+    leaves v{N-1} as the latest state, and its replay rebuilds v{N} from
+    that same v{N-1}. Every call wipes ``scratch_dir`` and stages its own
+    changelog; ``_drain_cdc`` is the resumable drain. On Delta/Iceberg the merge
+    becomes one MERGE INTO keyed on ``key_cols`` with a seq guard. One
+    shuffle per batch, keyed on ``key_cols``, carrying one row per touched
+    key.
     """
     scratch = scratch_dir or f"/tmp/diaps_cdcstream_{uuid.uuid4().hex[:8]}"
-    src, sink = f"{scratch}/src", f"{scratch}/sink"
     shutil.rmtree(scratch, ignore_errors=True)
     # several files so availableNow + maxFilesPerTrigger yields real
     # multi-batch replay (batch boundaries must not affect the result)
-    changelog.repartitionByRange(4, seq_col).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    payload = [c for c in changelog.columns if c not in key_cols]
+    changelog.repartitionByRange(4, seq_col).write.mode("overwrite").parquet(f"{scratch}/src")
+    return _drain_cdc(spark, scratch, key_cols, seq_col, op_col, delete_op)
+
+
+def _drain_cdc(
+    spark: SparkSession,
+    scratch: str,
+    key_cols: list[str],
+    seq_col: str,
+    op_col: str,
+    delete_op: str,
+) -> DataFrame:
+    """Drain the changelog staged at {scratch}/src into {scratch}/sink.
+    Restarting on a scratch whose checkpoint holds committed batches
+    replays only the batches it has not committed."""
+    src, sink = f"{scratch}/src", f"{scratch}/sink"
+    schema = spark.read.parquet(src).schema
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    payload = [c for c in schema.names if c not in key_cols]
 
     def collapse(df: DataFrame) -> DataFrame:
         return (
@@ -646,30 +611,12 @@ def run_streaming_cdc_apply(
             .select(*key_cols, "_latest.*")
         )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         latest = collapse(batch_df)
-        # existence probe (see upsert land above); replay is key-idempotent
-        # because max_by(seq) of the union re-picks the same winners
-        fs, jsink = _hadoop_fs(b, sink)
-        if fs.exists(jsink):
-            latest = collapse(b.read.parquet(sink).unionByName(latest))
-        latest.write.mode("overwrite").parquet(f"{sink}_stage")
-        b.read.parquet(f"{sink}_stage").write.mode("overwrite").parquet(sink)
+        return latest if prev is None else collapse(prev.unionByName(latest))
 
-    (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return (
-        spark.read.parquet(sink)
-        .filter(F.col(op_col) != delete_op)
-        .drop(op_col, seq_col)
-    )
+    state = _drain_fold(spark, stream.writeStream.outputMode("update"), scratch, sink, merge)
+    return state.filter(F.col(op_col) != delete_op).drop(op_col, seq_col)
 
 
 def run_streaming_hll_distinct(
@@ -694,33 +641,18 @@ def run_streaming_hll_distinct(
     scratch = scratch_dir or f"/tmp/diaps_hll_{uuid.uuid4().hex[:8]}"
     stream, sink = _staged_stream(spark, events, scratch, max_files_per_trigger=1)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_sk = batch_df.groupBy("event_type").agg(F.hll_sketch_agg("user_id").alias("sk"))
-        # versioned state for uniformity with the CMS/digest pipelines; HLL
-        # union is set-idempotent so replay was already safe, but the blanket
-        # except could reset state on a transient read error
-        state = read_state_version(b, sink, upto=batch_id)
-        if state is None:
-            merged = batch_sk
-        else:
-            merged = (
-                state.unionByName(batch_sk)
-                .groupBy("event_type")
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-        write_state_version(merged, sink, batch_id)
+        if prev is None:
+            return batch_sk
+        return (
+            prev.unionByName(batch_sk)
+            .groupBy("event_type")
+            .agg(F.hll_union_agg("sk").alias("sk"))
+        )
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
     return (
-        read_state_version(spark, sink)
+        _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
         .select(
             "event_type",
             F.hll_sketch_estimate("sk").alias("est_distinct_users"),
@@ -842,20 +774,9 @@ def run_streaming_ewma(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    out = spark.read.parquet(sink)
+    out = _drain_appends(spark, updates.writeStream.outputMode("update"), scratch, sink)
     # cumulative updates: the max-n row per user is the final fold state
     w = Window.partitionBy("user_id").orderBy(F.col("n_obs").desc())
     return (
@@ -1013,19 +934,12 @@ def run_streaming_ewma_watermarked(
     )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(sink)
+        write_state_append(batch_df.withColumn("batch_id", F.lit(batch_id)), sink, batch_id)
 
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
+    drain_available_now(updates.writeStream.outputMode("update").foreachBatch(land), scratch)
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    out = spark.read.parquet(sink)
+    out = read_state_appends(spark, sink)
     # the projection in a user's LAST update covers every seen event in
     # event-time order — the complete ordered fold
     w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc(), F.col("n_seen").desc())
@@ -1064,8 +978,9 @@ def run_streaming_ohlc(
     and the final table equals the batch aggregate bit-for-bit (same SQL
     oracle). Per batch: one shuffle keyed by (series, bucket) carrying one
     partial row per group; the sink merge re-aggregates sink ∪ partials
-    with the SAME min/max/sum functions (on Delta/Iceberg this is a single
-    MERGE INTO with greatest/least/+ update expressions).
+    with the SAME min/max/sum functions and commits the result as state
+    version v{N} (on Delta/Iceberg this is a single MERGE INTO with
+    greatest/least/+ update expressions).
     """
     scratch = scratch_dir or f"/tmp/diaps_ohlc_{uuid.uuid4().hex[:8]}"
     src, sink = f"{scratch}/src", f"{scratch}/sink"
@@ -1084,7 +999,6 @@ def run_streaming_ohlc(
         .parquet(src)
     )
     bucket_us = F.lit(1_000_000 * bucket_seconds)
-    key = F.struct(F.col("us"), F.col("event_id"))
 
     def _partial(df: DataFrame) -> DataFrame:
         return (
@@ -1103,41 +1017,25 @@ def run_streaming_ohlc(
             )
         )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        import os  # noqa: PLC0415
-
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partial = _partial(batch_df)
-        if os.path.exists(sink):
-            merged = (
-                spark.read.parquet(sink)
-                .unionByName(partial)
-                .groupBy("event_type", "bucket_id")
-                .agg(
-                    F.min("open_k").alias("open_k"),
-                    F.max("high").alias("high"),
-                    F.min("low").alias("low"),
-                    F.max("close_k").alias("close_k"),
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_dec").alias("sum_dec"),
-                )
+        if prev is None:
+            return partial
+        return (
+            prev.unionByName(partial)
+            .groupBy("event_type", "bucket_id")
+            .agg(
+                F.min("open_k").alias("open_k"),
+                F.max("high").alias("high"),
+                F.min("low").alias("low"),
+                F.max("close_k").alias("close_k"),
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_dec").alias("sum_dec"),
             )
-        else:
-            merged = partial
-        staging = f"{sink}.staging"
-        merged.write.mode("overwrite").parquet(staging)
-        final = spark.read.parquet(staging)
-        final.write.mode("overwrite").parquet(sink)
-        shutil.rmtree(staging, ignore_errors=True)
+        )
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    return spark.read.parquet(sink).select(
+    state = _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
+    return state.select(
         "event_type",
         "bucket_id",
         F.col("open_k.v").alias("open"),
@@ -1207,14 +1105,7 @@ def run_streaming_jdbc_upsert(
         # Spark's JDBC append creates the table on first use
         write_jdbc(batch_df, url, table, mode="append")
 
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
+    drain_available_now(updates.writeStream.outputMode("update").foreachBatch(land), scratch)
     from data_integration_and_processing_spark.sources.readers import read_jdbc  # noqa: PLC0415
 
     return read_jdbc(spark, url, table)
@@ -1288,14 +1179,7 @@ def run_streaming_countmin_heavy_hitters(
         write_state_version(merged, cms_state, batch_id)
         write_state_version(cand, cand_state, batch_id)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
+    drain_available_now(stream.writeStream.outputMode("append").foreachBatch(land), scratch)
     sketch = read_state_version(spark, cms_state)
     cand = read_state_version(spark, cand_state)
     est = countmin_estimate(sketch, cand, depth=depth, width=width)
@@ -1399,20 +1283,9 @@ def run_streaming_pattern_detect(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink)
-
-    (
-        updates.writeStream.outputMode("update")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    out = spark.read.parquet(sink)
+    out = _drain_appends(spark, updates.writeStream.outputMode("update"), scratch, sink)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -1491,25 +1364,13 @@ def run_streaming_quantile_digest(
         )
         return new_cuts
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        # digest merge is not idempotent: the versioned fold rebuilds v{N}
+        # from v{N-1} on replay instead of re-merging into shared state
         batch_sum = _summarize(batch_df)
-        # versioned state: digest merge is not idempotent, so a crash-replay
-        # rebuilds v{N} from v{N-1} instead of re-merging into shared state
-        state = read_state_version(b, state_path, upto=batch_id)
-        merged = batch_sum if state is None else _requantize(state.unionByName(batch_sum))
-        write_state_version(merged, state_path, batch_id)
+        return batch_sum if prev is None else _requantize(prev.unionByName(batch_sum))
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-
-    state = read_state_version(spark, state_path)
+    state = _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, state_path, merge)
     est = None
     for t in (0.5, 0.9, 0.99):
         idx = min(int(t * n_buckets), n_buckets - 1)
@@ -1565,7 +1426,6 @@ def run_python_source_replay(
     except Exception:  # noqa: BLE001 — already registered in this session
         pass
     scratch = scratch_dir or f"/tmp/diaps_pysrc_{uuid.uuid4().hex[:8]}"
-    ckpt = f"{scratch}/ckpt"
     tag = uuid.uuid4().hex[:6]
     # Cumulative totals strictly increase while the replay makes progress;
     # an exhausted round runs NO batch, so its fresh memory-sink table is
@@ -1575,7 +1435,7 @@ def run_python_source_replay(
     prev_total = -1
     for rnd in range(max_rounds):
         name = f"pysrc_{tag}_{rnd}"
-        q = (
+        agg = (
             spark.readStream.format("events_replay")
             .option("path", events_path)
             .option("batchrows", str(batch_rows))
@@ -1587,14 +1447,10 @@ def run_python_source_replay(
                 F.min("value").alias("min_value"),
                 F.max("value").alias("max_value"),
             )
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
+        drain_available_now(
+            agg.writeStream.outputMode("complete").format("memory").queryName(name), scratch
+        )
         result = spark.table(name)
         total = result.agg(F.sum("n_events")).collect()[0][0] or 0
         if total <= prev_total:
@@ -1706,14 +1562,7 @@ def run_streaming_neardup(
             batch_id,
         )
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(600)
-    )
+    drain_available_now(stream.writeStream.outputMode("append").foreachBatch(land), scratch)
     return read_state_appends(spark, out_state).select(id_col).orderBy(id_col)
 
 
@@ -1740,27 +1589,15 @@ def run_streaming_incremental_mv(
     stream, sink = _staged_stream(spark, events, scratch, max_files_per_trigger=2)
     keys, sums = ["event_type"], ["value"]
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = batch_df.sparkSession
-        snap = read_state_version(b, sink, upto=batch_id)
-        if snap is None:
-            snap = tiny_local_df(
-                b, [], "event_type string, n_rows long, sum_value double"
-            )
+        if prev is None:
+            prev = tiny_local_df(b, [], "event_type string, n_rows long, sum_value double")
         empty_delta = tiny_local_df(b, [], batch_df.schema)
-        merged = incremental_agg_merge(snap, batch_df, empty_delta, keys, sums)
-        write_state_version(merged, sink, batch_id)
+        return incremental_agg_merge(prev, batch_df, empty_delta, keys, sums)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
     return (
-        read_state_version(spark, sink)
+        _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
         .select(
             "event_type",
             "n_rows",
@@ -1795,31 +1632,21 @@ def run_streaming_kmv_distinct(
     stream, sink = _staged_stream(spark, events, scratch, max_files_per_trigger=1)
     w = Window.partitionBy("event_type").orderBy("fp")
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_sk = batch_df.select(
             "event_type",
             F.md5(F.col("user_id").cast("string").cast("binary")).alias("fp"),
         ).distinct()
-        state = read_state_version(b, sink, upto=batch_id)
-        merged = batch_sk if state is None else state.unionByName(batch_sk)
-        bottom_k = (
+        merged = batch_sk if prev is None else prev.unionByName(batch_sk)
+        return (
             merged.distinct()
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
             .select("event_type", "fp")
         )
-        write_state_version(bottom_k, sink, batch_id)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    state = read_state_version(spark, sink).groupBy("event_type").agg(
+    sketch = _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
+    state = sketch.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_sketch"), F.max("fp").alias("kth_hash")
     )
     # exact e4-scaled KMV estimate: (k-1)*2^32*1e4
@@ -1901,14 +1728,7 @@ def run_streaming_frequent_directions(
         )
         write_state_version(state_df, sink, batch_id)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
+    drain_available_now(stream.writeStream.outputMode("append").foreachBatch(land), scratch)
     rows = read_state_version(spark, sink).collect()
     meta = next(r for r in rows if r["kind"] == "meta")
     d = len(next(r for r in rows if r["kind"] == "row")["vals"])
@@ -1938,8 +1758,7 @@ def run_streaming_bitmap_distinct(
     scratch = scratch_dir or f"/tmp/diaps_sbitmap_{uuid.uuid4().hex[:8]}"
     stream, sink = _staged_stream(spark, events, scratch, max_files_per_trigger=1)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_bm = (
             batch_df.select(
                 "event_type",
@@ -1949,24 +1768,14 @@ def run_streaming_bitmap_distinct(
             .groupBy("event_type", "bucket")
             .agg(F.expr("bitmap_construct_agg(pos)").alias("bm"))
         )
-        state = read_state_version(b, sink, upto=batch_id)
-        merged = batch_bm if state is None else (
-            state.unionByName(batch_bm)
+        return batch_bm if prev is None else (
+            prev.unionByName(batch_bm)
             .groupBy("event_type", "bucket")
             .agg(F.expr("bitmap_or_agg(bm)").alias("bm"))
         )
-        write_state_version(merged, sink, batch_id)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
     return (
-        read_state_version(spark, sink)
+        _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
         .groupBy("event_type")
         .agg(
             F.sum(F.expr("bitmap_count(bm)")).cast("long").alias("n_distinct_users"),
@@ -1999,8 +1808,7 @@ def run_streaming_bigram_lm(
     scratch = scratch_dir or f"/tmp/diaps_sblm_{uuid.uuid4().hex[:8]}"
     stream, sink = _staged_stream(spark, docs, scratch, max_files_per_trigger=1)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         words = F.split("text", " ")
         n = F.size(words)
         pairs = (
@@ -2017,25 +1825,15 @@ def run_streaming_bigram_lm(
             .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
         )
         batch_counts = pairs.groupBy("w1", "w2").agg(F.count("*").alias("n"))
-        state = read_state_version(b, sink, upto=batch_id)
-        merged = (
+        return (
             batch_counts
-            if state is None
-            else state.unionByName(batch_counts)
+            if prev is None
+            else prev.unionByName(batch_counts)
             .groupBy("w1", "w2")
             .agg(F.sum("n").alias("n"))
         )
-        write_state_version(merged, sink, batch_id)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{scratch}/ckpt")
-        .foreachBatch(land)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(300)
-    )
-    counts = read_state_version(spark, sink)
+    counts = _drain_fold(spark, stream.writeStream.outputMode("append"), scratch, sink, merge)
     tot = Window.partitionBy("w1")
     return (
         counts.select(

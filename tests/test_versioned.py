@@ -70,6 +70,30 @@ def test_duplicate_version_commit_is_refused(spark, table, tmp_path):
         versioned._publish(table, 2, files, 1, "append")
 
 
+def test_publish_loses_to_a_competitor_landing_after_the_temp_write(tmp_path, monkeypatch):
+    # a competing writer publishes v1 between this writer's temp-file write
+    # and its publish: the publish must refuse, not replace the competitor
+    from types import SimpleNamespace
+
+    from data_integration_and_processing_spark.sources import versioned
+
+    table = str(tmp_path / "race")
+    final = os.path.join(table, "_versions", "v1.json")
+    competitor = b'{"version": 1, "parent": null, "op": "competitor", "files": []}'
+
+    def dump_then_compete(obj, f):
+        json.dump(obj, f)
+        with open(final, "wb") as g:
+            g.write(competitor)
+
+    monkeypatch.setattr(versioned, "json", SimpleNamespace(dump=dump_then_compete, load=json.load))
+    with pytest.raises(FileExistsError):
+        versioned._publish(table, 1, ["a.parquet"], None, "append")
+    with open(final, "rb") as f:
+        assert f.read() == competitor
+    assert os.listdir(os.path.dirname(final)) == ["v1.json"]  # no temp file left
+
+
 def test_read_unknown_version_or_empty_table_raises(spark, table, tmp_path):
     with pytest.raises(ValueError, match="version 9"):
         read_version(spark, table, 9)
