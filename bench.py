@@ -1074,7 +1074,7 @@ def main() -> int:
     raw_paths = _raw_headline_paths()
     cold_timings: dict[str, float] = {}
     for name in (
-        "sim_topk_ivf",            # kind: ivf
+        "sim_topk_ivf",            # kind: ivfpq (the 8-cell index sim_topk_ivfpq shares)
         "sim_retrieval_ndcg_mrr",  # kind: ivfpq_eval (also serves sim_rerank_eval_raw)
         "sim_ivfpq_upsert_raw",    # kind: ivfpq_upsert (base build + batch upsert)
         "pipeline_rag_ingest_raw", # kind: ragivfpq (embed + build + probe)

@@ -2,16 +2,22 @@
 
 Embeddings are plain ``array<float>`` columns. Scoring (cosine, ADC
 lookups) happens JVM-side in ``zip_with``/``aggregate`` expressions; index
-encoding (PQ and IVFPQ codes) runs as Arrow-batched numpy maps.
+encoding runs as one Arrow-batched numpy map.
 
-Two paths:
-- **brute-force cosine top-k** — exact baseline. Per-row map + global top-k
-  (``orderBy().limit(k)`` = TakeOrderedAndProject: per-partition heaps, no
-  full sort). At 100 TB this is a full scan but a tiny shuffle (k rows per
-  partition).
-- **LSH-bucketed top-k** — random-hyperplane signatures; only the query's
-  bucket (or multi-probe neighbors) is scanned. The hyperplanes are
-  generated from a fixed seed so results are deterministic.
+Three top-k paths:
+- **brute-force cosine top-k** — the exact reference every recall check
+  compares against. Per-row map + global top-k (``orderBy().limit(k)`` =
+  TakeOrderedAndProject: per-partition heaps, no full sort). At 100 TB
+  this is a full scan but a tiny shuffle (k rows per partition).
+- **in-plan LSH top-k** — random-hyperplane signatures computed per row;
+  only the query's bucket (or multi-probe neighbors) survives the filter.
+  No build and no trained state: the hyperplanes come from a fixed seed.
+- **IVFPQ index** — the one persisted ANN index: coarse cells written
+  hive-partitioned by ``_cell`` plus PQ codes of each vector's residual
+  (:func:`build_ivfpq_index` / :func:`ivfpq_probe`). IVF and flat PQ are
+  settings of it (Jégou et al., IVFADC): ``refine=None`` ranks every row
+  of the probed cells by exact cosine (IVF-flat), and ``n_cells=1`` is
+  flat PQ over residuals from the corpus mean.
 """
 
 from __future__ import annotations
@@ -143,207 +149,6 @@ def lsh_topk(
         .select(F.col(id_col), sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
-    )
-
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> str:
-    """Build an IVF (inverted-file) index on disk: train the KMeans coarse
-    quantizer ONCE, assign every vector to its nearest centroid, and write
-    the corpus hive-partitioned by ``_cell`` so probes become
-    partition-pruned reads of nprobe/n_cells of the data. Centroids land in
-    a sibling table for the (tiny) driver-side cell ranking at probe time.
-
-    This is the build half of the build/probe split: training is paid once
-    per corpus, never per query. Layout::
-
-        {path}/data/_cell=K/part-*.parquet   corpus, partitioned by cell
-        {path}/centroids/part-*.parquet      (cell, center: array<double>)
-    """
-    from pyspark.ml.clustering import KMeans  # noqa: PLC0415 — keep ml off the import hot path
-
-    from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
-
-    feat = fan_out_scan(df).withColumn(
-        "_features", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_features", predictionCol="_cell").fit(feat)
-    assigned = model.transform(feat).drop("_features")
-    assigned.write.mode("overwrite").partitionBy("_cell").parquet(f"{path}/data")
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    tiny_local_df(
-        df.sparkSession, centers, "cell int, center array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return path
-
-
-def ivf_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Probe a :func:`build_ivf_index` index: rank cells by centroid
-    distance (a driver-side read of the centroid table — O(n_cells) rows),
-    then scan only the ``nprobe`` nearest cells. ``_cell`` is a hive
-    partition column, so the ``isin`` filter prunes at planning time — the
-    scan's PartitionFilters carry it and untouched cells are never read.
-    The probed scan reuses the exact JVM cosine, so scores match the
-    brute-force path."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    centers = _driver_read_parquet_rows(f"{path}/centroids")
-    by_dist = sorted(
-        centers, key=lambda r: float(np.linalg.norm(np.asarray(r["center"]) - q))
-    )
-    probe_cells = [int(r["cell"]) for r in by_dist[:nprobe]]
-
-    qcol = float_array_col(query_vec)
-    sim = F.round(cosine(F.col(vec_col), qcol), round_digits)
-    return (
-        spark.read.parquet(f"{path}/data")
-        .filter(F.col("_cell").isin(probe_cells))
-        .select(F.col(id_col), F.col("_cell").cast("int").alias("cell"), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def build_lsh_index(
-    df: DataFrame,
-    path: str,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> str:
-    """Materialize the multi-table sign-LSH inverted file: one row per
-    (table, bucket, vector), hive-partitioned by (table, bucket) so a probe
-    is a partition-pruned read of exactly ``n_tables`` buckets — the layout
-    :func:`lsh_topk`'s docstring promises. Storage is ``n_tables`` copies of
-    the corpus (any inverted index trades space for probe locality); keep
-    ``n_tables * 2**n_planes`` within sane partition counts when sizing.
-
-    Signatures come from the same seeded hyperplanes as the query-time
-    path, computed as one numpy matmul per Arrow batch. Metadata
-    (planes config) lands beside the data for probe-time reconstruction::
-
-        {path}/data/table=T/bucket=B/part-*.parquet
-        {path}/meta/part-*.parquet   (n_planes, n_tables, seed, dim)
-    """
-    import pandas as pd  # noqa: PLC0415 — keep pandas off the import hot path
-
-    first = df.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("cannot index an empty corpus")
-    dim = int(first["d"])
-    planes = random_hyperplanes(dim, n_planes * n_tables, seed)
-    b_planes = df.sparkSession.sparkContext.broadcast(planes)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    ids_vecs = fan_out_scan(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
-    def _explode_tables(batches):
-        pl = b_planes.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-            bits = (block @ pl.T) > 0
-            sigs = np.einsum(
-                "btp,p->bt", bits.reshape(len(pdf), n_tables, n_planes), weights
-            )
-            out = pdf.loc[pdf.index.repeat(n_tables)].reset_index(drop=True)
-            out["table"] = np.tile(np.arange(n_tables, dtype=np.int32), len(pdf))
-            out["bucket"] = sigs.reshape(-1)
-            yield out[["table", "bucket", "id", "v"]]
-
-    exploded = ids_vecs.mapInPandas(
-        _explode_tables, schema="table int, bucket long, id long, v array<float>"
-    )
-    exploded.write.mode("overwrite").partitionBy("table", "bucket").parquet(f"{path}/data")
-    tiny_local_df(
-        df.sparkSession,
-        [(n_planes, n_tables, seed, dim)],
-        "n_planes int, n_tables int, seed int, dim int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    return path
-
-
-def lsh_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Probe a :func:`build_lsh_index` index: compute the query's signature
-    per table driver-side (n_tables dot products), read ONLY the matching
-    (table, bucket) partitions via partition pruning, dedupe candidates
-    across tables, and rank by the exact JVM cosine. Expected scanned
-    fraction ~ n_tables / 2**n_planes of the corpus, as partition-pruned
-    I/O rather than a post-scan filter."""
-    meta = _driver_read_parquet_rows(f"{path}/meta")[0]
-    planes = random_hyperplanes(int(meta["dim"]), meta["n_planes"] * meta["n_tables"], int(meta["seed"]))
-    q = np.asarray(query_vec, dtype=np.float64)
-    cond = None
-    for t in range(int(meta["n_tables"])):
-        tp = planes[t * meta["n_planes"] : (t + 1) * meta["n_planes"]]
-        q_sig = int(((tp @ q) > 0).astype(np.int64) @ (1 << np.arange(meta["n_planes"])))
-        hit = (F.col("table") == t) & (F.col("bucket") == q_sig)
-        cond = hit if cond is None else (cond | hit)
-    qcol = float_array_col(query_vec)
-    sim = F.round(cosine(F.col("v"), qcol), round_digits)
-    return (
-        spark.read.parquet(f"{path}/data")
-        .filter(cond)
-        .select("id", "v")
-        .dropDuplicates(["id"])
-        .select(F.col("id").alias(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    round_digits: int = 6,
-    index_path: str | None = None,
-) -> DataFrame:
-    """IVF approximate top-k = :func:`build_ivf_index` (once) +
-    :func:`ivf_probe`. When ``index_path`` is given and already contains an
-    index, the build step is skipped entirely — the production call pattern
-    is one build, many probes; this wrapper exists for single-shot use and
-    the catalog query."""
-    import tempfile  # noqa: PLC0415
-
-    if index_path is None:
-        index_path = os.path.join(tempfile.gettempdir(), f"ivf_index_seed{seed}_c{n_cells}")
-        # single-shot wrapper: always rebuild into the scratch location
-        build_ivf_index(df, index_path, n_cells, vec_col, id_col, seed)
-    elif not os.path.exists(os.path.join(index_path, "centroids")):
-        build_ivf_index(df, index_path, n_cells, vec_col, id_col, seed)
-    return ivf_probe(
-        df.sparkSession, index_path, query_vec, k, nprobe, vec_col, id_col, round_digits
     )
 
 
@@ -500,13 +305,14 @@ def _neardup_candidates_lsh(
     ids_vecs: DataFrame, n_planes: int, n_tables: int, seed: int
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs via distributed multi-table sign-LSH:
-    each vector gets ``n_tables`` signatures of ``n_planes`` sign bits
-    (vectorized numpy matmul against the seeded hyperplanes inside an
-    Arrow-batched ``mapInPandas`` — one (batch x dim) @ (dim x planes)
-    product per batch, bit-identical to :func:`lsh_signature` up to fp
-    summation order), then ids sharing any (table, signature) bucket pair up
-    in-task via :func:`pairs_within_buckets`. One shuffle keyed by (table,
-    signature); nothing ever lands on the driver."""
+    each vector gets ``n_tables`` signatures of ``n_planes`` sign bits from
+    one (batch x dim) @ (dim x planes) numpy matmul per ``mapInPandas``
+    batch against :func:`lsh_signature`'s seeded hyperplanes. A bit can
+    differ from that JVM expression only where a projection lies within
+    summation rounding of zero. Ids sharing a (table, signature) bucket
+    pair up in-task via :func:`pairs_within_buckets`, which drops buckets
+    larger than its ``max_bucket``. One shuffle keyed by (table,
+    signature); nothing lands on the driver."""
     from data_integration_and_processing_spark.operators.dedup import (  # noqa: PLC0415 — avoid import cycle
         pairs_within_buckets,
     )
@@ -601,12 +407,13 @@ def _unit_rows(x: np.ndarray) -> np.ndarray:
 def _unit_training_sample(
     df: DataFrame, vec_col: str, id_col: str, cap: int, seed: int, m: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The unit-normalized :func:`_vector_sample` a PQ-family build trains
-    on, checked for what the build needs (at least one row, a width that
-    ``m`` subspaces divide), plus the permutation that re-sorts it by
-    ``(xxhash64(id), id)``: the codebook trainer's seeded kmeans++ init
-    consumes rows in that order, so a corpus within both caps trains the
-    same codebooks as a separate ``orderBy(xxhash64(id), id)`` sample."""
+    """The unit-normalized :func:`_vector_sample` that
+    :func:`build_ivfpq_index` trains on, checked for what the build needs
+    (at least one row, a width that ``m`` subspaces divide), plus the
+    permutation that re-sorts it by ``(xxhash64(id), id)``: the codebook
+    trainer's seeded kmeans++ init consumes rows in that order, so a corpus
+    within the cap trains the same codebooks as a separate
+    ``orderBy(xxhash64(id), id)`` sample of it."""
     tbl = _vector_sample(df, vec_col, id_col, cap, seed)
     sample = _unit_rows(_arrow_matrix(tbl.column("_svec")))
     if not len(sample):
@@ -645,7 +452,7 @@ def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
 def _encode_vectors(
     df: DataFrame, vec_col: str, id_col: str, centers: np.ndarray, books: np.ndarray
 ) -> DataFrame:
-    """The per-row encoder every PQ-family write goes through: one
+    """The per-row encoder every index write goes through: one
     Arrow-batched map turns ``df``'s (id, vector) rows into
     ``(id, codes, v, _cell)`` — unit-normalize, nearest of the FROZEN
     ``centers``, PQ codes of the residual against the FROZEN ``books``.
@@ -722,99 +529,16 @@ def _train_pq_codebooks(
     return books
 
 
-def build_pq_index(
-    df: DataFrame,
-    path: str,
-    m: int = 8,
-    nbits: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    train_cap: int = 100_000,
-) -> str:
-    """Build a product-quantization index: train per-subspace codebooks on
-    a deterministic hash-ordered sample (driver-side, bounded by
-    ``train_cap``), then encode the WHOLE corpus distributed — each unit-
-    normalized vector becomes ``m`` codes of ``nbits`` bits, i.e. ~m bytes
-    instead of 4*dim. Layout::
-
-        {path}/data/part-*.parquet       (id, codes array<int>, v array<float>)
-        {path}/codebooks/part-*.parquet  (subspace, code, center array<double>)
-        {path}/meta/part-*.parquet       (m, nbits, dim, seed)
-
-    Flat PQ is the IVFPQ encoder with one all-zero coarse cell, whose
-    residual is the unit vector itself. Originals ride along in ``data``
-    for the probe's exact re-rank stage (FAISS's refine pattern). At 100 TB
-    the codes table is ~1/32 the corpus — the ADC scan touches only it;
-    originals are fetched for the tiny refined candidate set.
-    """
-    sample, pq_order = _unit_training_sample(df, vec_col, id_col, train_cap, seed, m)
-    books = _train_pq_codebooks(sample[pq_order], m, nbits, seed)
-    dim = sample.shape[1]
-    shutil.rmtree(f"{path}/meta", ignore_errors=True)
-    _encode_vectors(fan_out_scan(df), vec_col, id_col, np.zeros((1, dim)), books).drop(
-        "_cell"
-    ).write.mode("overwrite").parquet(f"{path}/data")
-    _write_model(path, books, {"m": m, "nbits": nbits, "dim": dim, "seed": seed})
-    return path
-
-
-def pq_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    refine: int = 8,
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Probe a :func:`build_pq_index` index with asymmetric distance
-    computation: the query is NOT quantized — a driver-side lookup table
-    LUT[j][c] = <q_j, center_{j,c}> (m * 2**nbits doubles) turns each row's
-    approximate cosine into ``sum_j LUT[j][codes[j]]``, evaluated as a pure
-    JVM expression over the codes column (table lookups + adds, no Python,
-    no shuffle). The top ``k * refine`` ADC candidates get the exact
-    zip_with/aggregate cosine on their stored originals; output is the
-    exact-scored top-k of that refined set."""
-    meta = _driver_read_parquet_rows(f"{path}/meta")[0]
-    m, nbits = int(meta["m"]), int(meta["nbits"])
-    dsub = int(meta["dim"]) // m
-    books = np.zeros((m, 2**nbits, dsub))
-    for r in _driver_read_parquet_rows(f"{path}/codebooks"):
-        books[int(r["subspace"]), int(r["code"])] = np.asarray(r["center"])
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    uq = q / (qn if qn else 1.0)
-    lut = np.einsum(
-        "jcd,jd->jc", books, uq.reshape(m, dsub)
-    )  # inner products per (subspace, code)
-
-    adc = None
-    for j in range(m):
-        lut_j = double_array_col(lut[j])
-        term = F.element_at(lut_j, F.element_at("codes", j + 1) + F.lit(1))
-        adc = term if adc is None else adc + term
-    qcol = float_array_col(query_vec)
-    sim = F.round(cosine(F.col("v"), qcol), round_digits)
-    return (
-        spark.read.parquet(f"{path}/data")
-        .select("id", "v", F.round(adc, round_digits).alias("_adc"))
-        .orderBy(F.desc("_adc"), F.asc("id"))
-        .limit(k * refine)
-        .select(F.col("id").alias(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def _train_centroids(
     sample: np.ndarray, k: int, seed: int, n_iter: int = 25, restarts: int = 3
 ) -> np.ndarray:
-    """Driver-side Lloyd k-means on a bounded sample — the full-vector twin
-    of _train_pq_codebooks' per-subspace trainer, with ``restarts`` seeded
-    kmeans++ attempts keeping the lowest-inertia result (a single greedy
-    init loses ~5 recall points vs pyspark.ml's kmeans|| on clustered
-    data). Deterministic; O(restarts * sample * k * dim) numpy."""
+    """Driver-side Lloyd k-means on a bounded sample: the coarse quantizer
+    of :func:`build_ivfpq_index` and :func:`ann_join_ivf`, and the
+    full-vector twin of _train_pq_codebooks' per-subspace trainer. It runs
+    ``restarts`` seeded kmeans++ attempts and keeps the lowest-inertia
+    result, because a single greedy init measured ~5 recall points below a
+    kmeans|| fit on clustered data. Deterministic; O(restarts * sample * k *
+    dim) numpy."""
     n = len(sample)
 
     def one(run_seed: int) -> tuple[float, np.ndarray]:
@@ -887,8 +611,9 @@ def ann_join_ivf(
     when queries are few. This is the other regime: a large query BATCH
     against a large corpus, where all-pairs is the scale killer. Plan:
 
-    1. train the KMeans coarse quantizer once on the corpus (driver model,
-       O(n_cells * dim) broadcast);
+    1. train the coarse quantizer once with driver-side numpy Lloyd on a
+       bounded corpus sample (:func:`train_ivf_centers`; an
+       O(n_cells * dim) model inlined into the plan);
     2. assign corpus rows to cells — one narrow map;
     3. route each query to its nprobe nearest cells via a broadcast join
        against the n_cells centroid rows (window rank, JVM-side distance);
@@ -905,10 +630,10 @@ def ann_join_ivf(
 
     # Coarse quantizer trained driver-side on a bounded sample (the PQ
     # trainer's shape — FAISS trains on samples too): for single-digit
-    # n_cells, numpy Lloyd on <=4096 vectors beats a pyspark.ml KMeans fit
-    # by seconds of JVM job overhead, and centroids are O(n_cells*dim)
-    # model state either way. Sample via the portable integer hash so the
-    # trainer sees a deterministic, shuffle-independent subset.
+    # n_cells, numpy Lloyd saves the JVM job overhead of a distributed fit,
+    # and centroids are O(n_cells*dim) model state either way. Sample via
+    # the portable integer hash so the trainer sees a deterministic,
+    # shuffle-independent subset.
     # training-set cap is the scale lever: 64k vectors bound the driver
     # collect at ~32 MB for dim=64 while far exceeding what single-digit
     # n_cells needs; a larger corpus contributes a hash-deterministic
@@ -1059,8 +784,9 @@ def mips_topk(
     corpus vector and 0 to the query, then ranks by COSINE of the augmented
     vectors — |x'| = M for every row, so cosine = dot / (M |q|) is a
     monotone transform of the inner product and the two rankings agree.
-    That equivalence is what lets the IVF/LSH cosine indexes in this module
-    serve recommendation-style MIPS queries unchanged; the registered audit
+    That equivalence is what lets this module's cosine ANN paths (in-plan
+    LSH, the IVFPQ index, :func:`ann_join_ivf`) serve recommendation-style
+    MIPS queries unchanged; the registered audit
     gates it as a measured boolean.
     """
     q = double_array_col(query_vec)
@@ -1117,9 +843,11 @@ def build_ivfpq_index(
     seed: int = 42,
     train_cap: int = 100_000,
 ) -> str:
-    """Build the combined IVF+PQ index — the FAISS IVFPQ architecture the
-    standalone :func:`build_ivf_index` (cells only) and
-    :func:`build_pq_index` (codes only) each provide half of:
+    """Build the module's one persisted ANN index, in the FAISS IVFPQ
+    architecture: coarse cells plus PQ codes of each vector's residual.
+    IVF and flat PQ are settings of it, not separate kinds: IVF-flat is
+    this index probed with ``refine=None`` (:func:`ivfpq_probe`), and flat
+    PQ is ``n_cells=1``, whose one center is the sample mean. Steps:
 
     1. fetch ONE bounded, id-hash-ordered Arrow sample (:func:`_vector_sample`,
        at most ``train_cap`` rows) and unit-normalize it (cosine ranking =
@@ -1137,6 +865,11 @@ def build_ivfpq_index(
     4. write the model plane driver-side (:func:`_write_model`), ``meta``
        last: ``meta`` exists only once the index is complete.
 
+    Before it writes anything, the build removes ``meta`` and any
+    ``tombstones`` a previous index at ``path`` left behind: the ids a
+    tombstone names were deleted from the OLD corpus, so they must not
+    hide rows of the new one.
+
     Two Spark jobs carry the whole build: the sample fetch and the encode
     write (plus the fan-out exchange when the input is narrower than the
     cluster). The sample is a total order on id, so the model, and with it
@@ -1147,6 +880,7 @@ def build_ivfpq_index(
         {path}/centroids/part-*.parquet      (cell, center array<double>)
         {path}/codebooks/part-*.parquet      (subspace, code, center)
         {path}/meta/part-*.parquet           (n_cells, m, nbits, dim, seed, train_cap)
+        {path}/tombstones/part-*.parquet     (id) — appended by ivfpq_delete
 
     At 100 TB: training state is O(n_cells*dim + m*2**nbits*dim/m) driver
     bytes plus a ``train_cap``-row sample; the encode is one distributed
@@ -1160,7 +894,8 @@ def build_ivfpq_index(
     books = _train_pq_codebooks(
         pq_sample - centers[_nearest_cells(pq_sample, centers)], m, nbits, seed
     )
-    shutil.rmtree(f"{path}/meta", ignore_errors=True)
+    for stale in ("meta", "tombstones"):
+        shutil.rmtree(f"{path}/{stale}", ignore_errors=True)
     _encode_vectors(fan_out_scan(df), vec_col, id_col, centers, books).write.mode(
         "overwrite"
     ).partitionBy("_cell").parquet(f"{path}/data")
@@ -1175,7 +910,7 @@ def ivfpq_probe(
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 2,
-    refine: int = 8,
+    refine: int | None = 8,
     id_col: str = "vec_id",
     round_digits: int = 6,
 ) -> DataFrame:
@@ -1187,10 +922,44 @@ def ivfpq_probe(
     one LUT per probed cell because the query residual q - center differs
     per cell — m * 2**nbits doubles each, pure JVM lookups + adds), then
     exact-cosine re-rank the top ``k * refine`` ADC survivors on their
-    stored originals."""
+    stored originals.
+
+    ``refine=None`` skips the ADC cut and ranks every row of the probed
+    cells by exact cosine: IVF-flat. At ``nprobe=n_cells`` that returns
+    exactly :func:`brute_force_topk`'s rows."""
     model = load_ivfpq_model(spark, path)
-    return _ivfpq_probe_plan(
-        spark, path, model, query_vec, k, nprobe, refine, id_col, round_digits
+    cell_luts = _query_luts(model, query_vec, nprobe)
+    scan = _tombstone_filter(
+        spark,
+        path,
+        spark.read.parquet(f"{path}/data").filter(
+            F.col("_cell").isin([c for c, _ in cell_luts])
+        ),
+    )
+    if refine is not None:
+        adc = None
+        for c, lut in cell_luts:
+            cell_adc = None
+            for j in range(model["m"]):
+                lut_j = double_array_col(lut[j])
+                term = F.element_at(lut_j, F.element_at("codes", j + 1) + F.lit(1))
+                cell_adc = term if cell_adc is None else cell_adc + term
+            adc = (
+                F.when(F.col("_cell") == c, cell_adc)
+                if adc is None
+                else adc.when(F.col("_cell") == c, cell_adc)
+            )
+        scan = (
+            scan.select("id", "v", "codes", F.col("_cell").cast("int").alias("_cell"))
+            .select("id", "v", adc.alias("_adc"))
+            .orderBy(F.asc("_adc"), F.asc("id"))
+            .limit(k * refine)
+        )
+    sim = F.round(cosine(F.col("v"), float_array_col(query_vec)), round_digits)
+    return (
+        scan.select(F.col("id").alias(id_col), sim.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .limit(k)
     )
 
 
@@ -1230,24 +999,23 @@ def _driver_write_parquet(path: str, table) -> None:
 
 
 def _write_model(
-    path: str, books: np.ndarray, meta: dict[str, int], centers: np.ndarray | None = None
+    path: str, books: np.ndarray, meta: dict[str, int], centers: np.ndarray
 ) -> None:
-    """Write a PQ-family index's model plane: ``centroids`` (IVFPQ only),
-    ``codebooks``, then ``meta`` LAST — a build removes ``meta`` before it
-    writes anything, so ``meta`` present means the index is complete."""
+    """Write an IVFPQ index's model plane: ``centroids``, ``codebooks``,
+    then ``meta`` LAST — a build removes ``meta`` before it writes
+    anything, so ``meta`` present means the index is complete."""
     import pyarrow as pa  # noqa: PLC0415
 
     vec_t = pa.list_(pa.float64())
-    if centers is not None:
-        _driver_write_parquet(
-            f"{path}/centroids",
-            pa.table(
-                {
-                    "cell": pa.array(range(len(centers)), pa.int32()),
-                    "center": pa.array(centers.tolist(), vec_t),
-                }
-            ),
-        )
+    _driver_write_parquet(
+        f"{path}/centroids",
+        pa.table(
+            {
+                "cell": pa.array(range(len(centers)), pa.int32()),
+                "center": pa.array(centers.tolist(), vec_t),
+            }
+        ),
+    )
     m, n_codes, dsub = books.shape
     _driver_write_parquet(
         f"{path}/codebooks",
@@ -1311,55 +1079,6 @@ def _query_luts(
         out.append((c, ((qr[:, None, :] - books) ** 2).sum(axis=2)))  # (m, 2**nbits)
     return out
 
-
-def _ivfpq_probe_plan(
-    spark,
-    path: str,
-    model: dict,
-    query_vec: list[float],
-    k: int,
-    nprobe: int,
-    refine: int,
-    id_col: str,
-    round_digits: int,
-) -> DataFrame:
-    """One query's probe plan against a pre-loaded model (see
-    :func:`ivfpq_probe` for the algorithm): cell ranking + per-cell ADC
-    lookup tables are built driver-side from the O(model) state; the scan
-    partition-prunes to the ``nprobe`` chosen ``_cell=`` directories."""
-    m = model["m"]
-    cell_luts = _query_luts(model, query_vec, nprobe)
-    probe_cells = [c for c, _ in cell_luts]
-
-    adc = None
-    for c, lut in cell_luts:
-        cell_adc = None
-        for j in range(m):
-            lut_j = double_array_col(lut[j])
-            term = F.element_at(lut_j, F.element_at("codes", j + 1) + F.lit(1))
-            cell_adc = term if cell_adc is None else cell_adc + term
-        adc = (
-            F.when(F.col("_cell") == c, cell_adc)
-            if adc is None
-            else adc.when(F.col("_cell") == c, cell_adc)
-        )
-
-    qcol = float_array_col(query_vec)
-    sim = F.round(cosine(F.col("v"), qcol), round_digits)
-    return (
-        _tombstone_filter(
-            spark,
-            path,
-            spark.read.parquet(f"{path}/data").filter(F.col("_cell").isin(probe_cells)),
-        )
-        .select("id", "v", "codes", F.col("_cell").cast("int").alias("_cell"))
-        .select("id", "v", adc.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.asc("id"))
-        .limit(k * refine)
-        .select(F.col("id").alias(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 def ivfpq_probe_batch(
     spark,

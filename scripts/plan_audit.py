@@ -126,9 +126,9 @@ DELIBERATE_NESTED_LOOP = {
     "sample_rolling_origin_cv",  # 4-row fold-bounds broadcast range join
     # (b) bounded broadcast sides inside operators
     "sim_topk_lsh",  # 1-row query vector (brute_force_topk ground truth)
-    "sim_topk_ivf",
-    "sim_topk_lsh_indexed",
-    "sim_topk_pq",
+    "sim_topk_ivf",  # IVFPQ index probed with refine=None (IVF-flat)
+    "sim_topk_lsh_indexed",  # same plan as sim_topk_lsh
+    "sim_topk_pq",  # 1-cell IVFPQ index (flat PQ)
     "sim_topk_ivfpq",  # O(k)-row recall-verdict constant-key cross
     "sim_retrieval_ndcg_mrr",  # broadcast %100 query batch (exact ground
     # truth all-pairs) + 1-row per-path nDCG/MRR verdict crosses

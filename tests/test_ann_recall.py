@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_integration_and_processing_spark.operators.similarity import (
+    brute_force_topk,
     build_ivfpq_index,
     ivfpq_probe,
     ivfpq_probe_batch,
@@ -132,29 +133,6 @@ def test_neardup_size_guard_routes_large_corpora_to_lsh(spark, sf_dir):
     assert sorted(map(tuple, guarded.collect())) == sorted(map(tuple, forced.collect()))
 
 
-def test_ivf_probe_is_partition_pruned(spark, sf_dir, tmp_path):
-    """The build/probe split must make probes partition-pruned reads: the
-    probe scan's PartitionFilters carry the _cell predicate and only nprobe of n_cells partitions survive planning."""
-    from data_integration_and_processing_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-    )
-    from data_integration_and_processing_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    path = str(tmp_path / "ivf")
-    build_ivf_index(e.filter(F.col("vec_id") != 0), path, n_cells=8)
-    probe = ivf_probe(spark, path, q, k=10, nprobe=2)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*_cell[^\]]*)\]", plan)
-    assert m, f"probe scan has no _cell PartitionFilters:\n{plan}"
-    assert probe.count() == 10
-
-
 def test_size_estimate_is_planning_time_and_sane(spark, sf_dir):
     """The routing guard must read Catalyst statistics, not run a job: the
     fixture's 500-vector corpus estimates in the KB-MB range (a broken
@@ -168,36 +146,6 @@ def test_size_estimate_is_planning_time_and_sane(spark, sf_dir):
     iv = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     est = _estimated_bytes(iv)
     assert 1_000 < est < 64 << 20, f"implausible size estimate: {est}"
-
-
-def test_lsh_index_probe_matches_inplan_lsh_and_prunes(spark, sf_dir, tmp_path):
-    """build_lsh_index/lsh_probe is the persisted counterpart of lsh_topk:
-    same seeded hyperplanes => identical top-k, but the probe reads only
-    the query's (table, bucket) partitions (PartitionFilters in the plan)."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from data_integration_and_processing_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_probe,
-        lsh_topk,
-    )
-    from data_integration_and_processing_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    corpus = e.filter(F.col("vec_id") != 0)
-
-    inplan = lsh_topk(corpus, q, k=10, n_planes=4, n_tables=8)
-    path = str(tmp_path / "lsh")
-    build_lsh_index(corpus, path, n_planes=4, n_tables=8)
-    probe = lsh_probe(spark, path, q, k=10)
-
-    assert sorted(map(tuple, probe.collect())) == sorted(map(tuple, inplan.collect()))
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*(?:table|bucket)[^\]]*)\]", plan)
-    assert m, f"probe scan has no table/bucket PartitionFilters:\n{plan}"
 
 
 def test_ann_join_ivf_recall_floor(spark, sf_dir):
@@ -369,6 +317,38 @@ def test_ivfpq_probe_is_partition_pruned_and_meets_floor(spark, sf_dir, tmp_path
         r["vec_id"] for r in ivfpq_probe(spark, path, q, k=10, nprobe=8, refine=16).collect()
     }
     assert len(exact & full) >= len(exact & approx)
+
+
+def test_ivf_flat_probe_is_exact_over_the_probed_cells(spark, sf_dir, tmp_path):
+    """``refine=None`` skips the ADC cut (IVF-flat): every row of the probed
+    cells is ranked by exact cosine. Probing every cell returns exactly the
+    brute-force rows; probing fewer returns the brute-force top-k of the
+    probed ``_cell`` partitions, the cells nearest the unit query."""
+    from data_integration_and_processing_spark.queries.similarity_queries import _query_vector
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(F.col("vec_id") != 0)
+    q = _query_vector(spark, sf_dir, 0)
+    path = str(tmp_path / "ivfflat")
+    build_ivfpq_index(e, path, n_cells=8, m=8, nbits=4)
+
+    def rows(df):
+        return [(r["vec_id"], r["cos_sim"]) for r in df.collect()]
+
+    full = rows(ivfpq_probe(spark, path, q, k=10, nprobe=8, refine=None))
+    assert full == rows(brute_force_topk(e, q, k=10))
+
+    centers = {
+        r["cell"]: np.asarray(r["center"])
+        for r in spark.read.parquet(f"{path}/centroids").collect()
+    }
+    uq = np.asarray(q) / np.linalg.norm(q)
+    by_dist = sorted(centers, key=lambda c: (float(np.linalg.norm(uq - centers[c])), c))
+    for nprobe in (2, 4):
+        cells = by_dist[:nprobe]
+        probed = spark.read.parquet(f"{path}/data").filter(F.col("_cell").isin(cells))
+        expect = brute_force_topk(probed, q, k=10, vec_col="v", id_col="id")
+        got = rows(ivfpq_probe(spark, path, q, k=10, nprobe=nprobe, refine=None))
+        assert got == [(r["id"], r["cos_sim"]) for r in expect.collect()], nprobe
 
 
 def test_hamming_topk_bounds_and_self_distance(spark, sf_dir):
@@ -875,14 +855,11 @@ def test_upsert_encodes_like_the_build(spark, tmp_path):
 def test_build_rejects_bad_corpus(spark, tmp_path, rows, m, match):
     """Bad input fails the build on the driver with ValueError before any
     write, not deep inside numpy or a half-written index."""
-    from data_integration_and_processing_spark.operators.similarity import build_pq_index
-
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for build in (build_ivfpq_index, build_pq_index):
-        path = tmp_path / build.__name__
-        with pytest.raises(ValueError, match=match):
-            build(corpus, str(path), m=m)
-        assert not path.exists()
+    path = tmp_path / "idx"
+    with pytest.raises(ValueError, match=match):
+        build_ivfpq_index(corpus, str(path), m=m)
+    assert not path.exists()
 
 
 def test_encode_map_rejects_ragged_vectors(spark, tmp_path):
@@ -901,15 +878,16 @@ def test_encode_map_rejects_ragged_vectors(spark, tmp_path):
 def test_pq_codebooks_train_on_the_id_hash_ordered_sample(spark, tmp_path):
     """The one shared sample is re-sorted by (xxhash64(id), id) before
     codebook training, so the codebooks equal those trained on a separate
-    sample in that order — the kmeans++ init consumes rows in order."""
+    sample in that order — the kmeans++ init consumes rows in order. A
+    1-cell index (flat PQ) trains them on that sample minus its one
+    center."""
     from data_integration_and_processing_spark.operators.similarity import (
         _train_pq_codebooks,
-        build_pq_index,
     )
 
     corpus = _tiny_corpus(spark)
     path = str(tmp_path / "pq")
-    build_pq_index(corpus, path, m=4, nbits=2)
+    build_ivfpq_index(corpus, path, n_cells=1, m=4, nbits=2)
     ref = np.array(
         [
             r["embedding"]
@@ -918,6 +896,8 @@ def test_pq_codebooks_train_on_the_id_hash_ordered_sample(spark, tmp_path):
         dtype=np.float64,
     )
     ref /= np.linalg.norm(ref, axis=1)[:, None]
+    (center,) = [r["center"] for r in spark.read.parquet(f"{path}/centroids").collect()]
+    ref -= np.asarray(center)
     books = {
         (r["subspace"], r["code"]): r["center"]
         for r in spark.read.parquet(f"{path}/codebooks").collect()
@@ -943,6 +923,25 @@ def test_ivfpq_build_runs_at_most_three_jobs(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 1 <= len(jobs) <= 3, jobs
+
+
+def test_rebuild_drops_the_previous_index_tombstones(spark, tmp_path):
+    """Tombstones name ids deleted from the OLD corpus: a rebuild at the
+    same path must not keep hiding them from the new one."""
+    from data_integration_and_processing_spark.operators.similarity import (
+        ivfpq_delete,
+        load_ivfpq_tombstones,
+    )
+
+    path = str(tmp_path / "idx")
+    corpus = _tiny_corpus(spark)
+    build_ivfpq_index(corpus, path, n_cells=2, m=4, nbits=2)
+    ivfpq_delete(spark, path, corpus.filter(F.col("vec_id") == 5).select("vec_id"))
+    build_ivfpq_index(corpus, path, n_cells=2, m=4, nbits=2)
+    assert load_ivfpq_tombstones(spark, path) is None
+    q = [float(x) for x in corpus.filter(F.col("vec_id") == 5).first()["embedding"]]
+    served = {r["vec_id"] for r in ivfpq_probe(spark, path, q, k=64, nprobe=2, refine=None).collect()}
+    assert served == set(range(64))
 
 
 def test_compact_in_place_retires_tombstones(spark, tmp_path):
